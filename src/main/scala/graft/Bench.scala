@@ -99,8 +99,7 @@ object Bench {
           "as (measure, score)"))
       graft.engine.ml.Metrics.binaryAucBy(melted, "measure", "y", "score")
         .count()
-      val wdir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_bench_warm_${ProcessHandle.current().pid()}"
+      val wdir = graft.engine.Artifacts.scratch("bench_warm")
       docs.coalesce(1).write.mode("overwrite").parquet(wdir)
       spark.read.parquet(wdir).count()
       graft.engine.sources.SnapshotStore.deleteRecursively(

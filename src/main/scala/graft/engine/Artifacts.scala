@@ -36,6 +36,19 @@ object Artifacts {
     s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
       s"${ProcessHandle.current().pid()}_${jvmStart}_${key8(contentKey)}"
 
+  /** A private scratch directory `tmpdir/graft_<name>_<pid>`,
+    * wiped and ready to write: everything under it is rebuilt on every
+    * run, unlike the publish-if-absent [[root]]. The name carries no JVM
+    * start or content key, so a later run of the same query in the same
+    * process reuses (after the wipe) the same directory. */
+  def scratch(name: String): String = {
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
+      ProcessHandle.current().pid()
+    graft.engine.sources.SnapshotStore.deleteRecursively(
+      java.nio.file.Paths.get(dir))
+    dir
+  }
+
   /** A catalog table name for artifact `name` derived from
     * `contentKey` — same scoping as [[root]]. */
   def table(name: String, contentKey: String): String =
@@ -57,9 +70,13 @@ object Artifacts {
     *
     * NAMING CONVENTION (enforced by [[ownerPid]], ADVICE r15): every
     * graft_* filesystem entry must carry its owner pid either as the
-    * LAST underscore segment (the query-scoped scratch shape,
+    * LAST underscore segment (the [[scratch]] shape,
     * `graft_q95_snap_<pid>`) or in the [[root]]/[[table]] shape
-    * `graft_<name>_<pid>_<13-digit-jvmStart>_<key8>`. Any other shape —
+    * `graft_<name>_<pid>_<13-digit-jvmStart>_<key8>`. [[root]],
+    * [[table]] and [[scratch]] are the only constructors of graft_*
+    * names (a source-guard spec keeps `java.io.tmpdir` out of every
+    * other file but `MlQueries.scoredDir`), so this module alone owns
+    * the format it parses back here. Any other shape —
     * including a future name with a leading numeric segment like
     * `graft_13_gram_tmp` — parses to NO owner and is kept forever,
     * never misattributed to an unrelated (possibly dead) pid. */

@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 
 /** The ONE SparkSession recipe every entrypoint shares — the driver
-  * surfaces (Verify, Bench, TimeQueries, ScaleRehearsal) via [[build]]
+  * surfaces (Verify, Bench, ProfileQuery, ScaleRehearsal) via [[build]]
   * and the CLI jobs via [[create]] — so row counts and timings are
   * comparable across all of them. Consolidated here in r20 (VERDICT r19:
   * two near-identical factories meant a future conf change could fork

@@ -1,6 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, Dataset}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 
 /** Fan-out for CPU-bound per-row kernels over LOW-PARALLELISM inputs —
   * the input-skew remedy of the optimization playbook (guide §2.5
@@ -26,6 +30,10 @@ import org.apache.spark.sql.{Column, Dataset}
   * reused by several passes. Do not use it in front of cheap
   * projections — the exchange would be the most expensive operator in
   * the plan.
+  *
+  * [[overlap]] is the other half: the engine's ONLY driver-side
+  * concurrency, for independent Spark actions a query would otherwise
+  * run one after the other.
   */
 object Par {
   /** Hash-repartition `df` across the session's full core count on
@@ -61,4 +69,112 @@ object Par {
       .min(BigInt(cores)).max(BigInt(1)).toInt
     if (width <= 1) df else df.repartition(width, key)
   }
+
+  /** Run independent Spark actions concurrently, as one structured
+    * scope. A query's actions are only sequential because the driver
+    * calls them sequentially; independent ones (two stores, two reads
+    * of a pinned frame, a census beside a micro-batch loop) can share
+    * the cores the per-job scheduling leaves idle, so the scope costs
+    * max(branch), not the sum.
+    *
+    * `body` runs on the caller's thread; each [[Scope.fork]] starts one
+    * more branch on a new daemon thread, which is created at the fork
+    * and so carries a COPY of the caller's Spark local properties as
+    * they were at that moment (job tags, job group, execution ids).
+    * Every branch, the caller's included, also gets its own job tag.
+    *
+    * Failure is structured: the first branch to throw (or the body
+    * itself) has `cancelJobsWithTag` called on every other branch, the
+    * scope waits until each forked branch has returned, and the
+    * ORIGINAL error is rethrown with the siblings' errors (typically
+    * their cancellations) attached as suppressed. No branch outlives the
+    * scope — a normal exit also waits for forks nobody joined — so a
+    * store publish or delete in one branch is never left running behind
+    * a failed query. Nesting is safe: a nested scope forks its own
+    * threads, and its jobs inherit the enclosing branch's tag, so
+    * cancelling that branch cancels them too.
+    *
+    * There is no timeout: a deadline that expired would have to abandon
+    * running branches (breaking the guarantee above) or cancel them,
+    * which is what a failure already does. */
+  def overlap[T](spark: SparkSession)(body: Scope => T): T =
+    new Scope(spark.sparkContext).run(body)
+
+  /** A forked branch; [[join]] waits for its value or rethrows its
+    * error. */
+  final class Branch[T] private[Par] (private[Par] val tag: String) {
+    private val done = new CountDownLatch(1)
+    @volatile private var outcome: Either[Throwable, T] = _
+    private[Par] def settle(o: Either[Throwable, T]): Unit = {
+      outcome = o; done.countDown()
+    }
+    private[Par] def await(ms: Long): Boolean =
+      done.await(ms, TimeUnit.MILLISECONDS)
+    private[Par] def failure: Option[Throwable] =
+      Option(outcome).flatMap(_.swap.toOption)
+    def join(): T = { done.await(); outcome.fold(e => throw e, identity) }
+  }
+
+  final class Scope private[Par] (sc: SparkContext) {
+    private val callerTag = nextTag()
+    private val forks = new ConcurrentLinkedQueue[Branch[_]]
+    private val first = new AtomicReference[Throwable]
+
+    /** Start `body` now on a new daemon thread. */
+    def fork[T](body: => T): Branch[T] = {
+      val b = new Branch[T](nextTag())
+      forks.add(b)
+      val t = new Thread(() => {
+        sc.addJobTag(b.tag)
+        // record the failure BEFORE settling: the scope reads `first`
+        // once every branch has settled
+        b.settle(try Right(body) catch { case e: Throwable => fail(e); Left(e) })
+      }, b.tag)
+      t.setDaemon(true)
+      t.start()
+      b
+    }
+
+    private def fail(e: Throwable): Unit =
+      if (first.compareAndSet(null, e))
+        (callerTag +: forks.asScala.map(_.tag).toSeq)
+          .foreach(sc.cancelJobsWithTag(_, CancelReason))
+
+    private[Par] def run[T](body: Scope => T): T = {
+      sc.addJobTag(callerTag)
+      val outcome =
+        try Right(body(this))
+        catch { case e: Throwable => fail(e); Left(e) }
+        finally sc.removeJobTag(callerTag)
+      var interrupted = false
+      forks.forEach { b =>
+        var settled = false
+        while (!settled) {
+          settled =
+            try b.await(SettlePollMs)
+            catch { case e: InterruptedException =>
+              fail(e); interrupted = true; false }
+          // a failed scope re-cancels each poll: a branch that was between
+          // two actions at the first cancel may have started another job
+          if (!settled && first.get != null)
+            sc.cancelJobsWithTag(b.tag, CancelReason)
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      val err = first.get
+      if (err == null) return outcome.fold(e => throw e, identity)
+      (outcome.swap.toSeq ++ forks.asScala.flatMap(_.failure)).foreach { e =>
+        if (!(e eq err) && !err.getSuppressed.exists(_ eq e))
+          err.addSuppressed(e)
+      }
+      throw err
+    }
+  }
+
+  private val tags = new AtomicLong()
+  private def nextTag(): String = s"graft-par-${tags.incrementAndGet()}"
+
+  /** Re-cancel period while a failed scope waits for its branches. */
+  private val SettlePollMs = 100L
+  private val CancelReason = "because a sibling overlapped branch failed"
 }

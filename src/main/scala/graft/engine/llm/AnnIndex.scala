@@ -59,17 +59,17 @@ object AnnIndex {
     * BY-NAME training args (r22): every caller passes
     * `ivfCentroids(...)` and `pqTrain/pqCodebooksExact(...)` inline —
     * two independent trainings over the same corpus that were evaluated
-    * sequentially at the call site. Evaluating them concurrently here
-    * (guide §2.6) makes the publish cost max(train), not the sum;
-    * values and the published table are identical. */
+    * sequentially at the call site. Overlapping them here makes the
+    * publish cost max(train), not the sum; values and the published
+    * table are identical. */
   def publishIndex(spark: SparkSession, root: String,
       centsTrain: => Array[(Int, Array[Double])],
       booksTrain: => Seq[Array[(Int, Array[Double])]]): Long = {
-    val centsF = scala.concurrent.Future(centsTrain)(
-      scala.concurrent.ExecutionContext.global)
-    val books = booksTrain
-    val cents = scala.concurrent.Await.result(centsF,
-      scala.concurrent.duration.Duration.Inf)
+    val (cents, books) = graft.engine.Par.overlap(spark) { s =>
+      val centsF = s.fork(centsTrain)
+      val books = booksTrain
+      (centsF.join(), books)
+    }
     require(cents.nonEmpty, "need at least one coarse centroid")
     require(books.nonEmpty && books.forall(_.nonEmpty),
       "every PQ subspace needs a non-empty codebook")

@@ -2,7 +2,7 @@ package graft.engine.llm
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.engine.{GraftQuery, Tables}
+import graft.engine.{Artifacts, GraftQuery, Par, Tables}
 import graft.engine.relational.Exact._
 
 /** Driver-verifiable queries for the LLM-pipeline extensions (X1–X4 + the
@@ -487,14 +487,10 @@ object LlmQueries {
           .agg(count(lit(1)).cast(LongType).as("n_sequences"),
             sum(col("n_tokens")).cast(LongType).as("packed_tokens"))
         // the four funnel counts are independent reads of pinned stages
-        // (three of them checkpointed) — overlap them (guide §2.6) so the
-        // observability tail costs max(count), not the sum
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val counts = Seq(corpus, deduped, trimmed, clean)
-          .map(df => Future(df.count()))
-          .map(f => Await.result(f, Duration.Inf))
+        // (three of them checkpointed)
+        val counts = Par.overlap(spark)(s =>
+          Seq(corpus, deduped, trimmed, clean).map(df => s.fork(df.count()))
+            .map(_.join()))
         sharded.groupBy(col("shard_id"))
           .agg(count(lit(1)).cast(LongType).as("n_docs"),
             sum(col("n_tokens")).cast(LongType).as("shard_tokens"))
@@ -693,9 +689,7 @@ object LlmQueries {
     "q135_ann_code_deletion",
     (spark, sfDir) => {
       import graft.engine.sources.SnapshotStore
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q135_anndel_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q135_anndel")
       val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
       AnnIndex.publishIndex(spark, s"$root/index",
         Similarity.ivfCentroids(emb, nlist = 4, iters = 1),
@@ -775,9 +769,7 @@ object LlmQueries {
     "q118_token_accounting",
     (spark, sfDir) => {
       import graft.engine.sources.{IncrementalAgg, SnapshotStore}
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q118_tokacct_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q118_tokacct")
       val docs = Tables.documents(spark, sfDir)
       Tokenizer.publishVocab(spark, s"$base/vocab",
         Tokenizer.trainWordVocab(docs, "text", 16))
@@ -1053,10 +1045,7 @@ object LlmQueries {
   val q121 = GraftQuery(
     "q121_published_bpe",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q121_merges_${ProcessHandle.current().pid()}/merges"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q121_merges") + "/merges"
       val docs = Tables.documents(spark, sfDir)
       val frozen = docs.filter(col("doc_id") < 250)
       Tokenizer.publishMerges(spark, root,
@@ -2171,29 +2160,26 @@ object LlmQueries {
         // All result sets are tiny (≤ 5·|queries| rows): collect once and
         // compare driver-side instead of re-running each plan for every
         // count — and the four collects are independent reads of the
-        // persisted corpus, so they run CONCURRENTLY (guide §2.6, r22).
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
+        // persisted corpus, so they overlap.
         def pairs(df: org.apache.spark.sql.DataFrame) =
           df.select(col("qid"), col("nid")).collect()
             .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exactF = Future(pairs(
-          Similarity.bruteForceTopKAgg(emb, queries, 5)))
-        val approxF = Future(pairs(
-          Similarity.lshTopK(emb, queries, 5, bits = 4)))
-        val mpF = Future(pairs(
-          Similarity.lshTopK(emb, queries, 5, bits = 4, multiProbe = true)))
-        // The published >=0.9-recall operating point from the AnnSweep
-        // curve in BASELINE.md: bits=6, Hamming-1 probes, 8 hash tables
-        // (0.94 recall at 0.875 expected candidate fraction on this
-        // corpus — isotropic synthetic embeddings are LSH's worst case;
-        // see the BASELINE.md ANN section for the full curve).
-        val op = pairs(Similarity.lshTopK(emb, queries, 5,
-          bits = 6, probeRadius = 1, tables = 8))
-        val exact = Await.result(exactF, Duration.Inf)
-        val approx = Await.result(approxF, Duration.Inf)
-        val mp = Await.result(mpF, Duration.Inf)
+        val (exact, approx, mp, op) = Par.overlap(spark) { s =>
+          val exactF = s.fork(pairs(
+            Similarity.bruteForceTopKAgg(emb, queries, 5)))
+          val approxF = s.fork(pairs(
+            Similarity.lshTopK(emb, queries, 5, bits = 4)))
+          val mpF = s.fork(pairs(
+            Similarity.lshTopK(emb, queries, 5, bits = 4, multiProbe = true)))
+          // The published >=0.9-recall operating point from the AnnSweep
+          // curve in BASELINE.md: bits=6, Hamming-1 probes, 8 hash tables
+          // (0.94 recall at 0.875 expected candidate fraction on this
+          // corpus — isotropic synthetic embeddings are LSH's worst case;
+          // see the BASELINE.md ANN section for the full curve).
+          val op = pairs(Similarity.lshTopK(emb, queries, 5,
+            bits = 6, probeRadius = 1, tables = 8))
+          (exactF.join(), approxF.join(), mpF.join(), op)
+        }
         val n = math.max(exact.size, 1)
         val recall = exact.intersect(approx).size.toDouble / n
         val recallMp = exact.intersect(mp).size.toDouble / n
@@ -2234,40 +2220,39 @@ object LlmQueries {
         val queries = emb.filter(col("vec_id") < 10)
         // the exact census is independent of the whole training+probe
         // chain, and the two probes are independent of each other once
-        // the centroids exist — overlap both (guide §2.6, r22)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val exactF = Future(
-          Similarity.bruteForceTopKAgg(emb, queries, 5)
+        // the centroids exist — overlap both
+        val (exact, approx, op) = Par.overlap(spark) { s =>
+          val exactF = s.fork(
+            Similarity.bruteForceTopKAgg(emb, queries, 5)
+              .select(col("qid"), col("nid")).collect()
+              .map(r => (r.getLong(0), r.getLong(1))).toSet)
+          // Both codebooks train off ONE TakeOrdered seed job (the 16-seed
+          // sample is the prefix of the 32-seed sample by construction),
+          // saving a corpus job per extra codebook vs r4's independent
+          // ivfCentroids calls — that plus the shared persisted scan
+          // brings x47 back under the 5 s target. Lloyd iters stay at 2
+          // so the codebooks (and the published recall_operating) match
+          // the BASELINE.md sweep exactly.
+          val seeds32 = Similarity.ivfSeeds(emb, 32)
+          val Seq(cents16, cents32) = Similarity.ivfRefineAll(emb,
+            Seq(seeds32.take(16), seeds32), iters = 2)
+          val approxF = s.fork(
+            Similarity.ivfTopK(emb, queries, 5, nlist = 16, nprobe = 4,
+                centroids = Some(cents16))
+              .select(col("qid"), col("nid")).collect()
+              .map(r => (r.getLong(0), r.getLong(1))).toSet)
+          // IVF operating point from the AnnSweep curve (BASELINE.md):
+          // nlist=32, nprobe=16 — the best observed recall at a
+          // half-corpus scan on this isotropic corpus (recall ≈ scanned
+          // fraction is the information-theoretic ceiling here; the LSH
+          // path owns the ≥0.9 dial, this row documents IVF's best
+          // half-scan point).
+          val op = Similarity.ivfTopK(emb, queries, 5, nlist = 32,
+              nprobe = 16, centroids = Some(cents32))
             .select(col("qid"), col("nid")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet)
-        // Both codebooks train off ONE TakeOrdered seed job (the 16-seed
-        // sample is the prefix of the 32-seed sample by construction),
-        // saving a corpus job per extra codebook vs r4's independent
-        // ivfCentroids calls — that plus the shared persisted scan brings
-        // x47 back under the 5 s target. Lloyd iters stay at 2 so the
-        // codebooks (and the published recall_operating) match the
-        // BASELINE.md sweep exactly.
-        val seeds32 = Similarity.ivfSeeds(emb, 32)
-        val Seq(cents16, cents32) = Similarity.ivfRefineAll(emb,
-          Seq(seeds32.take(16), seeds32), iters = 2)
-        val approxF = Future(
-          Similarity.ivfTopK(emb, queries, 5, nlist = 16, nprobe = 4,
-              centroids = Some(cents16))
-            .select(col("qid"), col("nid")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet)
-        // IVF operating point from the AnnSweep curve (BASELINE.md):
-        // nlist=32, nprobe=16 — the best observed recall at a half-corpus
-        // scan on this isotropic corpus (recall ≈ scanned fraction is the
-        // information-theoretic ceiling here; the LSH path owns the ≥0.9
-        // dial, this row documents IVF's best half-scan point).
-        val op = Similarity.ivfTopK(emb, queries, 5, nlist = 32, nprobe = 16,
-            centroids = Some(cents32))
-          .select(col("qid"), col("nid")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exact = Await.result(exactF, Duration.Inf)
-        val approx = Await.result(approxF, Duration.Inf)
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          (exactF.join(), approxF.join(), op)
+        }
         val n = math.max(exact.size, 1)
         val recall = exact.intersect(approx).size.toDouble / n
         val recallOp = exact.intersect(op).size.toDouble / n
@@ -2310,13 +2295,12 @@ object LlmQueries {
     (spark, sfDir) => {
       val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
       // two independent trainings over the same corpus — overlap them
-      // (guide §2.6; publishIndex does the same for the published family)
-      val centsF = scala.concurrent.Future(
-        Similarity.ivfCentroids(emb, nlist = 4, iters = 1))(
-        scala.concurrent.ExecutionContext.global)
-      val books = Similarity.pqCodebooksExact(emb, m = 4)
-      val cents = scala.concurrent.Await.result(centsF,
-        scala.concurrent.duration.Duration.Inf)
+      // (publishIndex does the same for the published family)
+      val (cents, books) = Par.overlap(spark) { s =>
+        val centsF = s.fork(Similarity.ivfCentroids(emb, nlist = 4, iters = 1))
+        val books = Similarity.pqCodebooksExact(emb, m = 4)
+        (centsF.join(), books)
+      }
       Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 10), 5,
           cents, books, nprobe = 4)
         .select(col("qid"), col("rnk"), col("nid"))
@@ -2339,10 +2323,7 @@ object LlmQueries {
   val q111 = GraftQuery(
     "q111_published_ann",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q111_ann_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q111_ann")
       val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
       // train once, publish, and use ONLY what the store gives back
       AnnIndex.publishIndex(spark, s"$root/index",
@@ -2416,31 +2397,31 @@ object LlmQueries {
       try {
         val queries = emb.filter(col("vec_id") < 10)
         // the exact census is independent of the training → encode →
-        // rerank chain — overlap it (guide §2.6, r22)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val exactF = Future(
-          Similarity.bruteForceTopKAgg(emb, queries, 5)
-            .select(col("qid"), col("nid")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet)
-        // Codebooks train on a 25% deterministic hash-sample (codebook
-        // quality saturates long before a full pass — the ivfCentroids
-        // scale note; at 100 TB nobody Lloyd-scans the corpus). The corpus
-        // is encoded once because only ONE pqTopK call runs below — its
-        // ADC ranking's rnk<=5 prefix is the raw-ADC point and its full
-        // 100 candidates feed the re-rank. A second pqTopK call would
-        // re-encode: pass pqTopK's `codes` parameter if extending this.
-        val books = Similarity.pqTrain(
-          Curation.hashSample(emb, col("vec_id"), 0.25), m = 16, k = 32,
-          iters = 2)
-        // ONE ADC ranking serves both points: its rnk<=5 prefix IS the
-        // raw-ADC answer, and its full 100 candidates feed the exact
-        // re-rank stage (pqExactRerank == pqTopK(rerank=100)'s second
-        // stage) — no second code scan
-        val adc100 = Similarity.pqTopK(emb, queries, 100, books)
-          .select(col("qid"), col("rnk"), col("nid")).localCheckpoint()
-        val exact = Await.result(exactF, Duration.Inf)
+        // rerank chain — overlap it
+        val (exact, adc100) = Par.overlap(spark) { s =>
+          val exactF = s.fork(
+            Similarity.bruteForceTopKAgg(emb, queries, 5)
+              .select(col("qid"), col("nid")).collect()
+              .map(r => (r.getLong(0), r.getLong(1))).toSet)
+          // Codebooks train on a 25% deterministic hash-sample (codebook
+          // quality saturates long before a full pass — the ivfCentroids
+          // scale note; at 100 TB nobody Lloyd-scans the corpus). The
+          // corpus is encoded once because only ONE pqTopK call runs
+          // below — its ADC ranking's rnk<=5 prefix is the raw-ADC point
+          // and its full 100 candidates feed the re-rank. A second pqTopK
+          // call would re-encode: pass pqTopK's `codes` parameter if
+          // extending this.
+          val books = Similarity.pqTrain(
+            Curation.hashSample(emb, col("vec_id"), 0.25), m = 16, k = 32,
+            iters = 2)
+          // ONE ADC ranking serves both points: its rnk<=5 prefix IS the
+          // raw-ADC answer, and its full 100 candidates feed the exact
+          // re-rank stage (pqExactRerank == pqTopK(rerank=100)'s second
+          // stage) — no second code scan
+          val adc100 = Similarity.pqTopK(emb, queries, 100, books)
+            .select(col("qid"), col("rnk"), col("nid")).localCheckpoint()
+          (exactF.join(), adc100)
+        }
         def recallOf(pairs: Set[(Long, Long)]): Double =
           exact.intersect(pairs).size.toDouble / math.max(exact.size, 1)
         val adcTop5 = adc100.filter(col("rnk") <= 5)
@@ -3006,10 +2987,7 @@ object LlmQueries {
       // pid-suffixed work root, wiped up front (q74's discipline: the
       // snapshot store never overwrites, so repeated runs in one process
       // would accumulate versions and break the read-back pin)
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q88_curate_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q88_curate")
       val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
       val plantedExact = docs.filter(col("doc_id") % 25 === 0)
         .select((col("doc_id") + 100000).as("doc_id"), col("text"),
@@ -3207,10 +3185,7 @@ object LlmQueries {
     (spark, sfDir) => {
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q91_sigs_${ProcessHandle.current().pid()}/sigs"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q91_sigs") + "/sigs"
       val existing = docs.filter(col("doc_id") < 250)
       SnapshotStore.publish(
         Dedup.minHashSignatures(existing, "text", "doc_id"), root)
@@ -3286,17 +3261,18 @@ object LlmQueries {
       try {
         val queries = emb.filter(col("vec_id") < 10)
         // exact census and IVF probe are independent reads of the
-        // persisted corpus — overlap them (guide §2.6)
-        val exactF = scala.concurrent.Future(
-          Similarity.bruteForceTopKAgg(emb, queries, 5)
+        // persisted corpus
+        val (exact, ivf) = Par.overlap(spark) { s =>
+          val exactF = s.fork(
+            Similarity.bruteForceTopKAgg(emb, queries, 5)
+              .select(col("qid"), col("nid")).collect()
+              .map(r => (r.getLong(0), r.getLong(1))).toSet)
+          val ivf = Similarity.ivfTopK(emb, queries, 5, nlist = 32,
+              nprobe = 4)
             .select(col("qid"), col("nid")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet)(
-          scala.concurrent.ExecutionContext.global)
-        val ivf = Similarity.ivfTopK(emb, queries, 5, nlist = 32, nprobe = 4)
-          .select(col("qid"), col("nid")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exact = scala.concurrent.Await.result(exactF,
-          scala.concurrent.duration.Duration.Inf)
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          (exactF.join(), ivf)
+        }
         val recall = exact.intersect(ivf).size.toDouble /
           math.max(exact.size, 1)
         import spark.implicits._
@@ -3331,23 +3307,21 @@ object LlmQueries {
       try {
         val queries = emb.filter(col("vec_id") < 10)
         // the exact census and the two trainings are three independent
-        // reads of the persisted corpus — overlap them (guide §2.6);
-        // only the probe depends on cents+books
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val exactF = Future(
-          Similarity.bruteForceTopKAgg(emb, queries, 5)
+        // reads of the persisted corpus; only the probe depends on
+        // cents+books
+        val (exact, ivfpq) = Par.overlap(spark) { s =>
+          val exactF = s.fork(
+            Similarity.bruteForceTopKAgg(emb, queries, 5)
+              .select(col("qid"), col("nid")).collect()
+              .map(r => (r.getLong(0), r.getLong(1))).toSet)
+          val centsF = s.fork(Similarity.ivfCentroids(emb, nlist = 32))
+          val books = Similarity.pqTrain(emb, m = 16, k = 32, iters = 2)
+          val ivfpq = Similarity.ivfPqTopK(emb, queries, 5, centsF.join(),
+              books, nprobe = 4, rerank = 100)
             .select(col("qid"), col("nid")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet)
-        val centsF = Future(Similarity.ivfCentroids(emb, nlist = 32))
-        val books = Similarity.pqTrain(emb, m = 16, k = 32, iters = 2)
-        val cents = Await.result(centsF, Duration.Inf)
-        val ivfpq = Similarity.ivfPqTopK(emb, queries, 5, cents, books,
-            nprobe = 4, rerank = 100)
-          .select(col("qid"), col("nid")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exact = Await.result(exactF, Duration.Inf)
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+          (exactF.join(), ivfpq)
+        }
         val recall = exact.intersect(ivfpq).size.toDouble /
           math.max(exact.size, 1)
         import spark.implicits._
@@ -3389,9 +3363,7 @@ object LlmQueries {
     "q138_resumable_export",
     (spark, sfDir) => {
       import graft.engine.sources.SnapshotStore
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q138_resume_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q138_resume")
       val corpusRoot = s"$base/corpus"
       val exportRoot = s"$base/export"
       val docs = Tables.documents(spark, sfDir)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.engine.{GraftQuery, Tables}
+import graft.engine.{Artifacts, GraftQuery, Par, Tables}
 import Exact._
 
 /** Relational core (SURVEY.md §2.5 X6): scans, filters, projections,
@@ -688,8 +688,7 @@ object RelationalQueries {
       // replace the copy instead of accumulating orphaned temp trees, and
       // two concurrent suite/bench processes on the same host cannot wipe
       // each other's scratch tree mid-read
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q59_part_${ProcessHandle.current().pid()}"
+      val dir = Artifacts.scratch("q59_part")
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"))
@@ -756,10 +755,7 @@ object RelationalQueries {
       // pid-suffixed root, wiped up front: repeated runs in one process
       // would otherwise accumulate version dirs forever (publish never
       // overwrites), and concurrent processes cannot race on one store
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q74_snap_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q74_snap") + "/tbl"
       val nat = Tables.nation(spark, sfDir)
       graft.engine.sources.SnapshotStore.publish(
         nat.filter(col("n_regionkey") === 0), root)
@@ -789,10 +785,7 @@ object RelationalQueries {
   val q89 = GraftQuery(
     "q89_snapshot_diff",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q89_snap_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q89_snap") + "/tbl"
       val nat = Tables.nation(spark, sfDir)
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       graft.engine.sources.SnapshotStore.publish(
@@ -827,10 +820,7 @@ object RelationalQueries {
   val q95 = GraftQuery(
     "q95_snapshot_merge",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q95_snap_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q95_snap") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -902,20 +892,18 @@ object RelationalQueries {
       val pid = ProcessHandle.current().pid()
       val lt = s"graft_q98_lineitem_$pid"
       val ot = s"graft_q98_orders_$pid"
-      // the two sides are INDEPENDENT tables — publish them concurrently
-      // (guide §2.6): the one-off co-bucketing write costs max, not sum
-      val liPub = scala.concurrent.Future {
-        Bucketed.publishTable(
+      // the two sides are INDEPENDENT tables — publish them concurrently:
+      // the one-off co-bucketing write costs max, not sum
+      Par.overlap(spark) { s =>
+        s.fork(Bucketed.publishTable(
           Tables.lineitem(spark, sfDir).select(col("l_orderkey").as("okey"),
             col("l_extendedprice"), col("l_discount")),
-          lt, nBuckets = 16, keyCols = Seq("okey"))
-      }(scala.concurrent.ExecutionContext.global)
-      Bucketed.publishTable(
-        Tables.orders(spark, sfDir).select(col("o_orderkey").as("okey"),
-          col("o_orderpriority")),
-        ot, nBuckets = 16, keyCols = Seq("okey"))
-      scala.concurrent.Await.result(liPub,
-        scala.concurrent.duration.Duration.Inf)
+          lt, nBuckets = 16, keyCols = Seq("okey")))
+        Bucketed.publishTable(
+          Tables.orders(spark, sfDir).select(col("o_orderkey").as("okey"),
+            col("o_orderpriority")),
+          ot, nBuckets = 16, keyCols = Seq("okey"))
+      }
       val joined = Bucketed.smbJoin(spark, lt, ot, Seq("okey"))
       val shuffleFree = Bucketed.shuffleCount(joined) == 0
       joined.groupBy(col("o_orderpriority"))
@@ -945,10 +933,7 @@ object RelationalQueries {
     "q99_incremental_agg",
     (spark, sfDir) => {
       import graft.engine.sources.{IncrementalAgg, SnapshotStore}
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q99_agg_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q99_agg") + "/tbl"
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       for (r <- 0 until 3)
@@ -992,10 +977,7 @@ object RelationalQueries {
   val q104 = GraftQuery(
     "q104_compact_vacuum",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q104_store_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q104_store") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -1061,10 +1043,7 @@ object RelationalQueries {
   val q103 = GraftQuery(
     "q103_zorder_skipping",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q103_zorder_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q103_zorder") + "/tbl"
       import graft.engine.sources.ZOrder
       val ev = Tables.events(spark, sfDir)
         .filter(col("ts").isNotNull && col("value").isNotNull)
@@ -1121,10 +1100,7 @@ object RelationalQueries {
   val q108 = GraftQuery(
     "q108_zorder_3d",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q108_zorder3_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q108_zorder3") + "/tbl"
       import graft.engine.sources.ZOrder
       val ev = Tables.events(spark, sfDir)
         .filter(col("ts").isNotNull && col("value").isNotNull &&
@@ -1186,8 +1162,7 @@ object RelationalQueries {
       // fixed pid-suffixed dir, overwritten each run (same discipline as
       // q74): repeated Verify/Bench invocations must not accumulate a
       // fresh JSONL copy of the corpus in /tmp per run
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q86_jsonl_${ProcessHandle.current().pid()}"
+      val dir = Artifacts.scratch("q86_jsonl")
       val (clean, bad) = graft.engine.sources.Jsonl.readJsonlClean(
         spark, {
           graft.engine.sources.Jsonl.writeJsonl(docs, s"$dir/docs")
@@ -1224,10 +1199,7 @@ object RelationalQueries {
   val q136 = GraftQuery(
     "q136_schema_evolution",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q136_evo_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q136_evo") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -1280,10 +1252,7 @@ object RelationalQueries {
   val q137 = GraftQuery(
     "q137_cdc_upsert",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q137_cdc_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q137_cdc") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -1351,10 +1320,7 @@ object RelationalQueries {
   val q139 = GraftQuery(
     "q139_rollback_republish",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q139_rb_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q139_rb") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -1416,10 +1382,7 @@ object RelationalQueries {
   val q140 = GraftQuery(
     "q140_takedown_propagation",
     (spark, sfDir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q140_rtbf_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q140_rtbf")
       import graft.engine.sources.SnapshotStore
       import graft.engine.llm.Curation
       val corpusRoot = s"$base/corpus"
@@ -1430,17 +1393,13 @@ object RelationalQueries {
       // buckets untouched (the reuse pin stays non-vacuous) without
       // paying 64 dirs x 2 stores of tiny-file machinery at harness SF
       // corpus and export are INDEPENDENT stores, both pure functions of
-      // `docs` — bootstrap them concurrently (guide §2.6, x71's pattern)
-      locally {
-        val corpusPub = scala.concurrent.Future {
-          SnapshotStore.publishBucketed(docs, corpusRoot, "doc_id", 32)
-        }(scala.concurrent.ExecutionContext.global)
+      // `docs` — bootstrap them concurrently (x71's pattern)
+      Par.overlap(spark) { s =>
+        s.fork(SnapshotStore.publishBucketed(docs, corpusRoot, "doc_id", 32))
         SnapshotStore.publishBucketed(
           Curation.shuffleShards(docs, "doc_id", nShards = 8)
             .drop("shuffle_key"),
           exportRoot, "doc_id", 32)
-        scala.concurrent.Await.result(corpusPub,
-          scala.concurrent.duration.Duration.Inf)
       }
       // the takedown set: 6 fixed keys present at every SF
       val takedown = docs
@@ -1448,14 +1407,12 @@ object RelationalQueries {
         .select(col("doc_id"))
       // the two deletes hit independent stores with the same key frame —
       // overlap them too (x71's per-tick discipline, here one request)
-      val exportDel = scala.concurrent.Future {
-        SnapshotStore.deleteKeys(takedown, exportRoot,
+      val v2c = Par.overlap(spark) { s =>
+        s.fork(SnapshotStore.deleteKeys(takedown, exportRoot,
+          tag = Some("takedown-1")))
+        SnapshotStore.deleteKeys(takedown, corpusRoot,
           tag = Some("takedown-1"))
-      }(scala.concurrent.ExecutionContext.global)
-      val v2c = SnapshotStore.deleteKeys(takedown, corpusRoot,
-        tag = Some("takedown-1"))
-      scala.concurrent.Await.result(exportDel,
-        scala.concurrent.duration.Duration.Inf)
+      }
       val replayNoop = SnapshotStore.deleteKeys(takedown, corpusRoot,
         tag = Some("takedown-1")) == v2c &&
         SnapshotStore.currentVersion(corpusRoot) == v2c
@@ -1473,19 +1430,15 @@ object RelationalQueries {
       val hasUntouched = v1Inodes.nonEmpty
       def hasKeys(df: DataFrame): Boolean =
         !df.join(takedown, Seq("doc_id"), "left_semi").isEmpty
-      // three independent read-probes over pinned versions — overlap
-      // them (guide §2.6): the audit tail costs max(probe), not the sum
-      val probes = Seq(
-        () => !hasKeys(SnapshotStore.read(spark, corpusRoot)),
-        () => !hasKeys(SnapshotStore.read(spark, exportRoot)),
+      // three independent read-probes over pinned versions: the audit
+      // tail costs max(probe), not the sum
+      val (corpusClean, exportClean, forensic) = Par.overlap(spark) { s =>
+        val corpusF = s.fork(!hasKeys(SnapshotStore.read(spark, corpusRoot)))
+        val exportF = s.fork(!hasKeys(SnapshotStore.read(spark, exportRoot)))
         // deletion completes at vacuum: v1 still serves the rows until…
-        () => hasKeys(SnapshotStore.read(spark, corpusRoot, 1L)))
-        .map(f => scala.concurrent.Future(f())(
-          scala.concurrent.ExecutionContext.global))
-        .map(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      val (corpusClean, exportClean, forensic) =
-        (probes(0), probes(1), probes(2))
+        val v1 = hasKeys(SnapshotStore.read(spark, corpusRoot, 1L))
+        (corpusF.join(), exportF.join(), v1)
+      }
       SnapshotStore.vacuum(corpusRoot, keep = 0)
       SnapshotStore.vacuum(exportRoot, keep = 0)
       val complete = !java.nio.file.Files.exists(
@@ -1547,10 +1500,7 @@ object RelationalQueries {
   val q141 = GraftQuery(
     "q141_export_resync_rewrite",
     (spark, sfDir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q141_resync_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q141_resync")
       import graft.engine.sources.SnapshotStore
       import graft.engine.llm.Curation
       val corpusRoot = s"$base/corpus"
@@ -1632,17 +1582,15 @@ object RelationalQueries {
       val full = sharded(
         SnapshotStore.read(spark, corpusRoot).drop("_bucket"))
       // the two invariant checks are independent reads of the pinned
-      // export — overlap them (guide §2.6) so the audit path costs
-      // max(check), not the sum
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val matchesFullF = Future { // one-pass multiset equality (r22, §2.4)
-        graft.engine.relational.Exact.sameMultiset(cur, full)
+      // export, so the audit path costs max(check), not the sum
+      val (matchesFull, oneRowPerKey) = Par.overlap(spark) { s =>
+        // one-pass multiset equality (r22, §2.4)
+        val matchesFullF = s.fork(
+          graft.engine.relational.Exact.sameMultiset(cur, full))
+        val oneRowPerKey = cur.groupBy(col("doc_id")).count()
+          .filter(col("count") > 1).isEmpty
+        (matchesFullF.join(), oneRowPerKey)
       }
-      val oneRowPerKey = cur.groupBy(col("doc_id")).count()
-        .filter(col("count") > 1).isEmpty
-      val matchesFull = Await.result(matchesFullF,
-        scala.concurrent.duration.Duration.Inf)
       cur.groupBy(col("shard_id"))
         .agg(lcount().as("n_docs"),
           sum(col("n_chars")).cast(LongType).as("shard_chars"))
@@ -1703,10 +1651,7 @@ object RelationalQueries {
   val q142 = GraftQuery(
     "q142_type_widening",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q142_widen_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q142_widen") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -1778,10 +1723,7 @@ object RelationalQueries {
   val q143 = GraftQuery(
     "q143_composite_key_lifecycle",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q143_composite_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q143_composite") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -1861,10 +1803,7 @@ object RelationalQueries {
   val q144 = GraftQuery(
     "q144_rebucket_lifecycle",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q144_rebucket_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q144_rebucket") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -1951,10 +1890,7 @@ object RelationalQueries {
   val q145 = GraftQuery(
     "q145_keyed_lookup",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q145_lookup_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q145_lookup") + "/tbl"
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -2016,10 +1952,7 @@ object RelationalQueries {
   val q146 = GraftQuery(
     "q146_secondary_takedown",
     (spark, sfDir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q146_sidx_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q146_sidx")
       val (corpusRoot, idxRoot) = (s"$base/corpus", s"$base/idx")
       import graft.engine.sources.SnapshotStore
       val docs = Tables.documents(spark, sfDir)
@@ -2056,30 +1989,26 @@ object RelationalQueries {
       val docKeys = hits.select(col("doc_id")).distinct()
         .localCheckpoint() // pin: the index delete below empties `hits`
       // the two legs hit INDEPENDENT stores with pinned key frames —
-      // overlap them (guide §2.6, x71's per-tick discipline)
-      val corpusDel = scala.concurrent.Future {
-        SnapshotStore.deleteKeys(docKeys, corpusRoot,
+      // overlap them (x71's per-tick discipline)
+      val (vCorpus, vIdx) = Par.overlap(spark) { s =>
+        val corpusDel = s.fork(SnapshotStore.deleteKeys(docKeys, corpusRoot,
+          tag = Some("takedown-req1")))
+        // the index self-cleans with the same primitive, keyed by source
+        val vIdx = SnapshotStore.deleteKeys(sources, idxRoot,
           tag = Some("takedown-req1"))
-      }(scala.concurrent.ExecutionContext.global)
-      // the index self-cleans with the same primitive, keyed by source
-      val vIdx = SnapshotStore.deleteKeys(sources, idxRoot,
-        tag = Some("takedown-req1"))
-      val vCorpus = scala.concurrent.Await.result(corpusDel,
-        scala.concurrent.duration.Duration.Inf)
+        (corpusDel.join(), vIdx)
+      }
       val indexClean = SnapshotStore.readKeys(sources, idxRoot).isEmpty
       // crash-replay of the request: both legs return their already-
       // applied versions, nothing is re-deleted or re-minted (the two
       // no-op replays are independent across stores — overlap them too)
-      val corpusReplay = scala.concurrent.Future {
-        SnapshotStore.deleteKeys(docKeys, corpusRoot,
-          tag = Some("takedown-req1")) == vCorpus
-      }(scala.concurrent.ExecutionContext.global)
-      val idxReplayNoop = SnapshotStore.deleteKeys(sources, idxRoot,
-        tag = Some("takedown-req1")) == vIdx
-      // await unconditionally (no && short-circuit): the Future must be
-      // settled before the final store reads below
-      val corpusReplayNoop = scala.concurrent.Await.result(corpusReplay,
-        scala.concurrent.duration.Duration.Inf)
+      val (corpusReplayNoop, idxReplayNoop) = Par.overlap(spark) { s =>
+        val corpusReplay = s.fork(SnapshotStore.deleteKeys(docKeys,
+          corpusRoot, tag = Some("takedown-req1")) == vCorpus)
+        val idxReplayNoop = SnapshotStore.deleteKeys(sources, idxRoot,
+          tag = Some("takedown-req1")) == vIdx
+        (corpusReplay.join(), idxReplayNoop)
+      }
       val replayNoop = idxReplayNoop && corpusReplayNoop &&
         SnapshotStore.currentVersion(corpusRoot) == vCorpus &&
         SnapshotStore.currentVersion(idxRoot) == vIdx
@@ -2129,9 +2058,7 @@ object RelationalQueries {
     "q148_clustered_store_box",
     (spark, sfDir) => {
       import graft.engine.sources.{ClusteredStore, SnapshotStore}
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q148_zstore_${ProcessHandle.current().pid()}/tbl"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q148_zstore") + "/tbl"
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), unix_micros(col("ts")).as("t_us"),
           expr("CAST(FLOOR(value * 100) AS BIGINT)").as("v100"),
@@ -2203,9 +2130,7 @@ object RelationalQueries {
     "q149_clustered_append",
     (spark, sfDir) => {
       import graft.engine.sources.{ClusteredStore, SnapshotStore}
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q149_zappend_${ProcessHandle.current().pid()}/tbl"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q149_zappend") + "/tbl"
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), unix_micros(col("ts")).as("t_us"),
           expr("CAST(FLOOR(value * 100) AS BIGINT)").as("v100"),
@@ -2283,9 +2208,7 @@ object RelationalQueries {
     "q150_clustered_compact",
     (spark, sfDir) => {
       import graft.engine.sources.{ClusteredStore, SnapshotStore}
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q150_zcompact_${ProcessHandle.current().pid()}/tbl"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q150_zcompact") + "/tbl"
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), unix_micros(col("ts")).as("t_us"),
           expr("CAST(FLOOR(value * 100) AS BIGINT)").as("v100"),
@@ -2376,9 +2299,7 @@ object RelationalQueries {
     "q152_clustered_retention",
     (spark, sfDir) => {
       import graft.engine.sources.{ClusteredStore, SnapshotStore}
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q152_ztrim_${ProcessHandle.current().pid()}/tbl"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q152_ztrim") + "/tbl"
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), unix_micros(col("ts")).as("t_us"),
           expr("CAST(FLOOR(value * 100) AS BIGINT)").as("v100"),
@@ -2440,9 +2361,7 @@ object RelationalQueries {
   private def clusteredEventsFixture(spark: SparkSession, sfDir: String,
       name: String): (String, DataFrame, DataFrame) = {
     import graft.engine.sources.{ClusteredStore, SnapshotStore}
-    val root = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_${name}_${ProcessHandle.current().pid()}/tbl"
-    SnapshotStore.deleteRecursively(java.nio.file.Paths.get(root))
+    val root = Artifacts.scratch(name) + "/tbl"
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), unix_micros(col("ts")).as("t_us"))
     val evens = ev.filter(col("event_id") % 2 === 0)

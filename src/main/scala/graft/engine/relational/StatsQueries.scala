@@ -2,7 +2,7 @@ package graft.engine.relational
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.engine.{GraftQuery, Tables}
+import graft.engine.{Artifacts, GraftQuery, Par, Tables}
 import Exact._
 
 /** Statistical aggregates and pivot (rounding out X6).
@@ -472,10 +472,7 @@ object StatsQueries {
   val q101 = GraftQuery(
     "q101_incremental_stats",
     (spark, sfDir) => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q101_prof_${ProcessHandle.current().pid()}/tbl"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(root))
+      val root = Artifacts.scratch("q101_prof") + "/tbl"
       val cols = Seq("doc_id", "lang", "source", "n_chars")
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id") +: cols.drop(1).map(col): _*)
@@ -734,29 +731,20 @@ object StatsQueries {
   val q147 = GraftQuery(
     "q147_stats_driven_join",
     (spark, sfDir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q147_plan_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q147_plan")
       val ev = Tables.events(spark, sfDir)
         .select(col("user_id").as("c_custkey"), col("value"),
           col("event_type"))
       val cust = Tables.customer(spark, sfDir)
         .select(col("c_custkey"), col("c_nationkey"))
       // two INDEPENDENT profile stores — publish them concurrently
-      // (guide §2.6, the q151/q153 overlap applied here too)
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val evProf = Future {
-          TableStats.refreshProfile(
-            ev.select(col("c_custkey"), col("event_type")),
-            s"$base/ev", Seq("c_custkey", "event_type"))
-        }
+      // (the q151/q153 overlap applied here too)
+      Par.overlap(spark) { s =>
+        s.fork(TableStats.refreshProfile(
+          ev.select(col("c_custkey"), col("event_type")),
+          s"$base/ev", Seq("c_custkey", "event_type")))
         TableStats.refreshProfile(cust.select(col("c_custkey")),
           s"$base/cust", Seq("c_custkey"))
-        Await.result(evProf, scala.concurrent.duration.Duration.Inf)
-        ()
       }
       val evKey = Planner.keyProfile(spark, s"$base/ev", "c_custkey")
       val evType = Planner.keyProfile(spark, s"$base/ev", "event_type")
@@ -777,16 +765,12 @@ object StatsQueries {
           .orderBy(col("c_nationkey"))
       val (a, b, c, d) = (run(cA), run(cB), run(cC), run(cD))
       // the four variants are independent executions of the same rollup
-      // — run them concurrently (guide §2.6), then rebuild the result
+      // — run them concurrently, then rebuild the result
       // from variant A's collected rows so the caller's action doesn't
       // re-run its join (the x74/q151 execute-once fix; the tree walks
       // below still read each variant's executed FINAL plan)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val Seq(rowsA, rowsB, rowsC, rowsD) =
-        Seq(a, b, c, d).map(df => Future(df.collect().toSeq))
-          .map(f => Await.result(f, Duration.Inf))
+      val Seq(rowsA, rowsB, rowsC, rowsD) = Par.overlap(spark)(s =>
+        Seq(a, b, c, d).map(df => s.fork(df.collect().toSeq)).map(_.join()))
       val variantsAgree =
         rowsA == rowsB && rowsA == rowsC && rowsA == rowsD
       import graft.tools.PlanAudit
@@ -844,10 +828,7 @@ object StatsQueries {
   val q151 = GraftQuery(
     "q151_stats_star_join",
     (spark, sfDir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q151_star_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q151_star")
       val fact = Tables.lineitem(spark, sfDir)
         .select(col("l_partkey"), col("l_orderkey"), col("l_suppkey"),
           col("l_extendedprice"))
@@ -858,24 +839,18 @@ object StatsQueries {
         .select(col("o_orderkey").as("l_orderkey"))
       val supp = Tables.supplier(spark, sfDir)
         .select(col("s_suppkey").as("l_suppkey"), col("s_nationkey"))
-      // four INDEPENDENT profile stores: publish them concurrently
-      // (guide §2.6 — actions are only sequential because the driver
-      // calls them sequentially); same stores, same contents
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        Await.result(Future.sequence(Seq(
-          Future(TableStats.refreshProfile(
-            fact.select(col("l_partkey"), col("l_orderkey"),
-              col("l_suppkey")),
-            s"$base/fact", Seq("l_partkey", "l_orderkey", "l_suppkey"))),
-          Future(TableStats.refreshProfile(part, s"$base/part",
-            Seq("l_partkey"))),
-          Future(TableStats.refreshProfile(ords, s"$base/ords",
-            Seq("l_orderkey"))),
-          Future(TableStats.refreshProfile(supp.select(col("l_suppkey")),
-            s"$base/supp", Seq("l_suppkey"))))), Duration.Inf)
+      // four INDEPENDENT profile stores: publish them concurrently;
+      // same stores, same contents
+      Par.overlap(spark) { s =>
+        s.fork(TableStats.refreshProfile(
+          fact.select(col("l_partkey"), col("l_orderkey"), col("l_suppkey")),
+          s"$base/fact", Seq("l_partkey", "l_orderkey", "l_suppkey")))
+        s.fork(TableStats.refreshProfile(part, s"$base/part",
+          Seq("l_partkey")))
+        s.fork(TableStats.refreshProfile(ords, s"$base/ords",
+          Seq("l_orderkey")))
+        TableStats.refreshProfile(supp.select(col("l_suppkey")),
+          s"$base/supp", Seq("l_suppkey"))
       }
       def fp(k: String) = Planner.keyProfile(spark, s"$base/fact", k)
       val dims = Seq(
@@ -945,10 +920,7 @@ object StatsQueries {
   val q153 = GraftQuery(
     "q153_histogram_selectivity",
     (spark, sfDir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q153_hist_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q153_hist")
       val dayUs = 86400000000L
       val ord = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -965,26 +937,21 @@ object StatsQueries {
       // three INDEPENDENT store chains (the hist refreshes stay
       // sequential WITHIN their chain — each merges into the previous
       // version — but the two profile publishes are independent of the
-      // histogram and of each other): overlap them, guide §2.6
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        Await.result(Future.sequence(Seq(
-          // histogram maintained incrementally: three delta refreshes
-          Future((0L to 2L).foreach { i =>
-            Histogram.refresh(
-              ord.filter(pmod(col("o_orderkey"), lit(3L)) === i),
-              s"$base/hist", "o_day", binWidth = w,
-              tag = Some(s"batch-$i"))
-          }),
-          // published profiles: fact key + the dim's broadcast payload
-          Future(TableStats.refreshProfile(li.select(col("o_orderkey")),
-            s"$base/li", Seq("o_orderkey"))),
-          Future(TableStats.refreshProfile(
-            ord.select(col("o_orderkey"), col("o_orderpriority")),
-            s"$base/ord", Seq("o_orderkey", "o_orderpriority"))))),
-          Duration.Inf)
+      // histogram and of each other): overlap them
+      Par.overlap(spark) { s =>
+        // histogram maintained incrementally: three delta refreshes
+        s.fork((0L to 2L).foreach { i =>
+          Histogram.refresh(
+            ord.filter(pmod(col("o_orderkey"), lit(3L)) === i),
+            s"$base/hist", "o_day", binWidth = w,
+            tag = Some(s"batch-$i"))
+        })
+        // published profiles: fact key + the dim's broadcast payload
+        s.fork(TableStats.refreshProfile(li.select(col("o_orderkey")),
+          s"$base/li", Seq("o_orderkey")))
+        TableStats.refreshProfile(
+          ord.select(col("o_orderkey"), col("o_orderpriority")),
+          s"$base/ord", Seq("o_orderkey", "o_orderpriority"))
       }
       val liKey = Planner.keyProfile(spark, s"$base/li", "o_orderkey")
       val ordKey = Planner.keyProfile(spark, s"$base/ord", "o_orderkey")
@@ -1073,10 +1040,7 @@ object StatsQueries {
   val q157 = GraftQuery(
     "q157_star_histogram_compose",
     (spark, sfDir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_q157_starhist_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("q157_starhist")
       val dayUs = 86400000000L
       val fact = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice"))
@@ -1088,20 +1052,15 @@ object StatsQueries {
       // published facts: the fact's two keys, the RAW orders payload
       // (key + the priority column the dim carries), the filtered part
       // three INDEPENDENT profile stores: publish concurrently (q151's
-      // argument, guide §2.6)
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        Await.result(Future.sequence(Seq(
-          Future(TableStats.refreshProfile(
-            fact.select(col("l_orderkey"), col("l_partkey")),
-            s"$base/fact", Seq("l_orderkey", "l_partkey"))),
-          Future(TableStats.refreshProfile(
-            ord.select(col("l_orderkey"), col("o_orderpriority")),
-            s"$base/ord", Seq("l_orderkey", "o_orderpriority"))),
-          Future(TableStats.refreshProfile(partF, s"$base/part",
-            Seq("l_partkey"))))), Duration.Inf)
+      // argument)
+      Par.overlap(spark) { s =>
+        s.fork(TableStats.refreshProfile(
+          fact.select(col("l_orderkey"), col("l_partkey")),
+          s"$base/fact", Seq("l_orderkey", "l_partkey")))
+        s.fork(TableStats.refreshProfile(
+          ord.select(col("l_orderkey"), col("o_orderpriority")),
+          s"$base/ord", Seq("l_orderkey", "o_orderpriority")))
+        TableStats.refreshProfile(partF, s"$base/part", Seq("l_partkey"))
       }
       val factOrd = Planner.keyProfile(spark, s"$base/fact", "l_orderkey")
       val factPart = Planner.keyProfile(spark, s"$base/fact", "l_partkey")

@@ -253,7 +253,8 @@ object SnapshotStore {
     * atomic and cannot give this), and the pointer can never regress onto
     * an older version (the lost-update the naive scan→write→flip allows).
     * A publisher that dies mid-write leaves only an ignored `.staging-*`
-    * dir — CURRENT still resolves to the last good version. */
+    * dir — CURRENT still resolves to the last good version; one whose
+    * write FAILS (a cancelled job included) removes its staging dir. */
   def publish(df: DataFrame, root: String): Long = {
     // a plain publish on a BUCKETED store would flip CURRENT to a version
     // without _bucket and wedge every later merge/append/compact with a
@@ -264,8 +265,14 @@ object SnapshotStore {
         "_bucket layout and wedge incremental writers")
     val staging = Paths.get(root,
       s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-    writeVersionManifest(staging, kind = "base", schema = df.schema)
+    try {
+      df.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
+      writeVersionManifest(staging, kind = "base", schema = df.schema)
+    } catch { case e: Throwable =>
+      try deleteRecursively(staging)
+      catch { case c: Exception => e.addSuppressed(c) }
+      throw e
+    }
     withFlipLock(root) {
       val next = maxVersion(root) + 1
       Files.move(staging, Paths.get(root, s"v$next"),

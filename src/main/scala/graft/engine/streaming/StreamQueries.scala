@@ -2,7 +2,7 @@ package graft.engine.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.engine.{GraftQuery, Tables}
+import graft.engine.{Artifacts, GraftQuery, Par, Tables}
 
 /** Driver queries that run the streaming plans end-to-end inside a query
   * call: events enter either through a MemoryStream replay (x52–x54) or a
@@ -367,8 +367,7 @@ object StreamQueries {
     "x58_stream_jsonl",
     (spark, sfDir) => {
       val docs = Tables.documents(spark, sfDir)
-      val dir = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x58_jsonl_${ProcessHandle.current().pid()}"
+      val dir = Artifacts.scratch("x58_jsonl")
       graft.engine.sources.Jsonl.writeJsonl(docs.coalesce(8), s"$dir/docs")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/docs/planted_bad_lines.txt"),
@@ -427,10 +426,7 @@ object StreamQueries {
     (spark, sfDir) => {
       import graft.engine.llm.Dedup
       import graft.engine.sources.SnapshotStore
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x59_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x59")
       val docs = Tables.documents(spark, sfDir)
       val history = docs.filter(col("doc_id") < 250)
         .select(col("doc_id"), col("text"))
@@ -655,10 +651,7 @@ object StreamQueries {
     "x60_stream_incremental_agg",
     (spark, sfDir) => {
       import graft.engine.sources.{IncrementalAgg, Jsonl, SnapshotStore}
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x60_magg_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x60_magg")
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), col("event_type"), col("value"))
       // exactly three part-files -> exactly three one-file ticks
@@ -757,10 +750,7 @@ object StreamQueries {
     (spark, sfDir) => {
       import graft.engine.llm.{AnnIndex, Similarity}
       import graft.engine.sources.SnapshotStore
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x62_ann_${ProcessHandle.current().pid()}"
-      graft.engine.sources.SnapshotStore.deleteRecursively(
-        java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x62_ann")
       val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
       AnnIndex.publishIndex(spark, s"$base/index",
         Similarity.ivfCentroids(emb, nlist = 4, iters = 1),
@@ -823,9 +813,7 @@ object StreamQueries {
       import graft.engine.llm.Multimodal
       import graft.engine.sources.SnapshotStore
       import spark.implicits._
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x63_media_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x63_media")
       val ids = Tables.documents(spark, sfDir).select(col("doc_id"))
       def media(lo: Long, hi: Long) = Multimodal.syntheticImages(
         ids.filter(col("doc_id") >= lo && col("doc_id") < hi))
@@ -915,9 +903,7 @@ object StreamQueries {
     (spark, sfDir) => {
       import graft.engine.llm.Curation
       import graft.engine.sources.SnapshotStore
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x64_decon_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x64_decon")
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"))
       // session-shared with q129/q133 (Artifacts scaladoc)
@@ -1009,9 +995,7 @@ object StreamQueries {
     (spark, sfDir) => {
       import graft.engine.llm.Dedup
       import graft.engine.sources.SnapshotStore
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x65_trim_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x65_trim")
       val bp = " === subscribe to our newsletter for daily updates " +
         "and exclusive offers === "
       val docs = Tables.documents(spark, sfDir)
@@ -1027,7 +1011,7 @@ object StreamQueries {
       Dedup.ensureBoilerplateModel(spark,
         docs.filter(col("doc_id") < 250), "text", "doc_id", table,
         minLen = 40)
-      locally {
+      Par.overlap(spark) { s =>
         val model = spark.table(table)
         val stream = docs.filter(col("doc_id") >= 250)
         stream.repartition(3).write.mode("overwrite").parquet(s"$base/in")
@@ -1038,14 +1022,13 @@ object StreamQueries {
         val outCols = Seq("doc_id", "trimmed_text", "n_trimmed_chars")
         // the ONE-SHOT batch trim is a pure function of (stream, model) —
         // independent of every tick, so it runs CONCURRENTLY with the
-        // micro-batch engine (guide §2.6: the engine's per-tick planning
-        // leaves most cores idle) and is awaited only at the equality
-        val oneShotF = scala.concurrent.Future {
+        // micro-batch engine (the engine's per-tick planning leaves most
+        // cores idle) and is joined only at the equality
+        val oneShotF = s.fork(
           Dedup.trimAgainstPublished(stream, model,
               "text", "doc_id", minLen = 40)
             .select(outCols.map(col): _*)
-            .localCheckpoint()
-        }(scala.concurrent.ExecutionContext.global)
+            .localCheckpoint())
         val q = spark.readStream.schema(stream.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
           .writeStream.outputMode("append")
@@ -1068,8 +1051,7 @@ object StreamQueries {
         try q.processAllAvailable() finally q.stop()
         val ticks = SnapshotStore.read(spark, root)
           .select(outCols.map(col): _*)
-        val oneShot = scala.concurrent.Await.result(oneShotF,
-          scala.concurrent.duration.Duration.Inf)
+        val oneShot = oneShotF.join()
         // ONE fused equality pass (VERDICT r17 item 2; was two exceptAll
         // join-probes over two localCheckpoint materializations — four
         // jobs). The signed row-digest aggregate now lives in
@@ -1158,9 +1140,7 @@ object StreamQueries {
     (spark, sfDir) => {
       import graft.engine.llm.{AnnIndex, Similarity}
       import graft.engine.sources.SnapshotStore
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x66_anndel_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x66_anndel")
       val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
         .select(col("vec_id"), col("embedding").cast("array<double>")
           .as("embedding"))
@@ -1376,9 +1356,7 @@ object StreamQueries {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.engine.sources.SnapshotStore
-    val base = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_${who}_quar_${ProcessHandle.current().pid()}"
-    SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+    val base = Artifacts.scratch(s"${who}_quar")
     val events = eventSubset(spark, sfDir)
     val (early, onTime) = events.splitAt(events.length / 2)
     val (late1, late2) = early.splitAt(early.length / 2)
@@ -1631,9 +1609,7 @@ object StreamQueries {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       import graft.engine.sources.SnapshotStore
       import graft.engine.llm.Curation
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x70_resume_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x70_resume")
       val corpusRoot = s"$base/corpus"
       val exportRoot = s"$base/export"
       // bounded fixture (x56 precedent): the contract under test is the
@@ -1833,27 +1809,21 @@ object StreamQueries {
       import graft.engine.sources.SnapshotStore
       import graft.engine.llm.Curation
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x71_takedown_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(Paths.get(base))
+      val base = Artifacts.scratch("x71_takedown")
       val corpusRoot = s"$base/corpus"
       val exportRoot = s"$base/export"
       val ledgerDir = Paths.get(s"$base/ledger")
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("n_chars"))
       // corpus and export bootstraps are INDEPENDENT stores, both pure
-      // functions of `docs` — overlap them (guide §2.6, the same
-      // discipline this query's per-tick deletes already follow)
-      locally {
-        val corpusPub = scala.concurrent.Future {
-          SnapshotStore.publishBucketed(docs, corpusRoot, "doc_id", 16)
-        }(scala.concurrent.ExecutionContext.global)
+      // functions of `docs` — overlap them (the same discipline this
+      // query's per-tick deletes already follow)
+      Par.overlap(spark) { s =>
+        s.fork(SnapshotStore.publishBucketed(docs, corpusRoot, "doc_id", 16))
         SnapshotStore.publishBucketed(
           Curation.shuffleShards(docs, "doc_id", nShards = 8)
             .drop("shuffle_key"),
           exportRoot, "doc_id", 16)
-        scala.concurrent.Await.result(corpusPub,
-          scala.concurrent.duration.Duration.Inf)
       }
       // the request stream fixture: three ticks of fixed, SF-stable ids
       val ids = docs.filter(
@@ -1873,17 +1843,14 @@ object StreamQueries {
             val n = keys.count()
             if (n > 0) {
               // the two deletes hit INDEPENDENT stores with the same
-              // pinned key frame — overlap them (guide §2.6); each
-              // store's own version chain is untouched
-              val corpusDel = scala.concurrent.Future {
-                SnapshotStore.deleteKeys(keys, corpusRoot,
+              // pinned key frame — overlap them; each store's own
+              // version chain is untouched
+              Par.overlap(spark) { s =>
+                s.fork(SnapshotStore.deleteKeys(keys, corpusRoot,
+                  tag = Some(s"takedown-$batchId")))
+                SnapshotStore.deleteKeys(keys, exportRoot,
                   tag = Some(s"takedown-$batchId"))
-              }(scala.concurrent.ExecutionContext.global)
-              SnapshotStore.deleteKeys(keys, exportRoot,
-                tag = Some(s"takedown-$batchId"))
-              scala.concurrent.Await.result(corpusDel,
-                scala.concurrent.duration.Duration.Inf)
-              ()
+              }
             }
             // compliance ledger: one atomic entry per tick. Written
             // AFTER both deletes — a torn crash replays the tick, the
@@ -1908,12 +1875,12 @@ object StreamQueries {
       def clean(root: String): Boolean =
         SnapshotStore.read(spark, root)
           .join(allKeys, Seq("doc_id"), "left_semi").isEmpty
-      // independent audits of two stores — overlap (guide §2.6)
-      val corpusCleanF = scala.concurrent.Future(clean(corpusRoot))(
-        scala.concurrent.ExecutionContext.global)
-      val exportClean = clean(exportRoot)
-      val corpusClean = scala.concurrent.Await.result(corpusCleanF,
-        scala.concurrent.duration.Duration.Inf)
+      // independent audits of two stores
+      val (corpusClean, exportClean) = Par.overlap(spark) { s =>
+        val corpusCleanF = s.fork(clean(corpusRoot))
+        val exportClean = clean(exportRoot)
+        (corpusCleanF.join(), exportClean)
+      }
       // the compliance trail equals the request stream
       val entries = readLedgerTicks(ledgerDir)
       // deletion COMPLETES at vacuum: the pre-takedown versions go away
@@ -1996,9 +1963,7 @@ object StreamQueries {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       import graft.engine.sources.SnapshotStore
       import java.nio.file.Paths
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x72_domain_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(Paths.get(base))
+      val base = Artifacts.scratch("x72_domain")
       val corpusRoot = s"$base/corpus"
       val idxRoot = s"$base/idx"
       val ledgerDir = Paths.get(s"$base/ledger")
@@ -2068,15 +2033,13 @@ object StreamQueries {
               val docKeys = hits.select(col("doc_id")).distinct()
                 .localCheckpoint() // pin: the index delete empties hits
               // independent stores, both key frames pinned — overlap
-              // the two delete legs (guide §2.6, x71's tick shape)
-              val corpusDel = scala.concurrent.Future {
-                SnapshotStore.deleteKeys(docKeys, corpusRoot,
+              // the two delete legs (x71's tick shape)
+              Par.overlap(spark) { s =>
+                s.fork(SnapshotStore.deleteKeys(docKeys, corpusRoot,
+                  tag = Some(s"dt-$batchId")))
+                SnapshotStore.deleteKeys(reqs, idxRoot,
                   tag = Some(s"dt-$batchId"))
-              }(scala.concurrent.ExecutionContext.global)
-              SnapshotStore.deleteKeys(reqs, idxRoot,
-                tag = Some(s"dt-$batchId"))
-              scala.concurrent.Await.result(corpusDel,
-                scala.concurrent.duration.Duration.Inf)
+              }
               // ledger AFTER both deletes: a torn crash replays the
               // tick, the tags no-op, the entry lands exactly once
               writeLedgerTick(ledgerDir, batchId, n)
@@ -2179,9 +2142,7 @@ object StreamQueries {
     "x73_stream_clustered_ingest",
     (spark, sfDir) => {
       import graft.engine.sources.{ClusteredStore, SnapshotStore}
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x73_zstream_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x73_zstream")
       val root = s"$base/tbl"
       val ev = Tables.events(spark, sfDir)
         .select(col("event_id"), unix_micros(col("ts")).as("t_us"),
@@ -2207,20 +2168,19 @@ object StreamQueries {
         .start()
       // the raw-events census (count + t_us min/max) is a pure function
       // of the INPUT table — independent of the store the ticks build —
-      // so it runs CONCURRENTLY with the micro-batch engine (guide §2.6,
-      // x74's posture), awaited only at the completeness/box checks
-      val evCensusF = scala.concurrent.Future {
-        (ev.count(),
-          ev.agg(min(col("t_us")), max(col("t_us"))).collect()(0))
-      }(scala.concurrent.ExecutionContext.global)
-      try q.processAllAvailable() finally q.stop()
+      // so it runs CONCURRENTLY with the micro-batch engine (x74's
+      // posture)
+      val (evCount, mm) = Par.overlap(spark) { s =>
+        val evCensusF = s.fork((ev.count(),
+          ev.agg(min(col("t_us")), max(col("t_us"))).collect()(0)))
+        try q.processAllAvailable() finally q.stop()
+        evCensusF.join()
+      }
       val cur = SnapshotStore.currentVersion(root)
       val rewrites = (1L to cur).count(v =>
         SnapshotStore.versionKind(root, v).contains("rewrite"))
       val versionsOk = cur == 6L
       val compacted = rewrites == 1
-      val (evCount, mm) = scala.concurrent.Await.result(evCensusF,
-        scala.concurrent.duration.Duration.Inf)
       val complete = SnapshotStore.read(spark, root).count() == evCount
       val (tmin, tmax) = (mm.getLong(0), mm.getLong(1))
       val lo = tmin + (tmax - tmin) * 2L / 5L
@@ -2279,9 +2239,7 @@ object StreamQueries {
     (spark, sfDir) => {
       import graft.engine.sources.SnapshotStore
       import graft.engine.relational.{Histogram, Planner, TableStats}
-      val base = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_x74_stats_${ProcessHandle.current().pid()}"
-      SnapshotStore.deleteRecursively(java.nio.file.Paths.get(base))
+      val base = Artifacts.scratch("x74_stats")
       val root = s"$base/tbl"
       val (profRoot, histRoot) = (s"$base/prof", s"$base/hist")
       val dayUs = 86400000000L
@@ -2298,20 +2256,17 @@ object StreamQueries {
           storeVersion: Long, tag: String): Unit = {
         // the profile and histogram maintain INDEPENDENT stores; their
         // actions were only sequential because the driver called them
-        // sequentially (guide §2.6) — overlapping them makes a tick's
+        // sequentially — overlapping them makes a tick's
         // maintenance path cost max(profile, histogram), not the sum,
         // and lets each chain's small jobs back-fill the other's idle
         // cores. Same stores, same tags, same per-store version chains.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val hist = Future {
-          Histogram.refresh(batch, histRoot, "o_day", binWidth = w,
-            tag = Some(s"hist-$tag"))
+        Par.overlap(spark) { s =>
+          s.fork(Histogram.refresh(batch, histRoot, "o_day", binWidth = w,
+            tag = Some(s"hist-$tag")))
+          TableStats.refreshProfile(batch.select(profCols.map(col): _*),
+            profRoot, profCols, tag = Some(s"prof-$tag"),
+            sourceVersion = storeVersion)
         }
-        TableStats.refreshProfile(batch.select(profCols.map(col): _*),
-          profRoot, profCols, tag = Some(s"prof-$tag"),
-          sourceVersion = storeVersion)
-        Await.result(hist, scala.concurrent.duration.Duration.Inf)
         ()
       }
       val slice0 = ord.filter(pmod(col("o_orderkey"), lit(5L)) === 0L)
@@ -2334,34 +2289,36 @@ object StreamQueries {
         .start()
       // the lineitem key profile and the raw-orders census are pure
       // functions of the INPUT tables — independent of every x74 store —
-      // so they run CONCURRENTLY with the micro-batch engine (guide
-      // §2.6: the per-tick planning leaves most cores idle; x65's
-      // one-shot-trim posture), awaited only where they are consumed
-      val liKeyF = scala.concurrent.Future {
-        TableStats.refreshProfile(
-          Tables.lineitem(spark, sfDir).select(col("l_orderkey")),
-          s"$base/li", Seq("l_orderkey"))
-        Planner.keyProfile(spark, s"$base/li", "l_orderkey")
-      }(scala.concurrent.ExecutionContext.global)
-      val ordCountF = scala.concurrent.Future(ord.count())(
-        scala.concurrent.ExecutionContext.global)
-      try q.processAllAvailable() finally q.stop()
-      val freshOk = Planner.keyProfile(spark, profRoot, "o_orderkey",
-        sourceRoot = Some(root)).rows > 0L
-      // a late batch lands WITHOUT its refresh: planning must refuse
-      val late = ord.filter(pmod(col("o_orderkey"), lit(5L)).between(3L, 4L))
-      val vLate = SnapshotStore.merge(late, root, keysAreDistinct = true,
-        tag = Some("late"))
-      val staleRefused =
-        try { Planner.keyProfile(spark, profRoot, "o_orderkey",
-          sourceRoot = Some(root)); false }
-        catch { case e: IllegalArgumentException =>
-          e.getMessage.contains("STALE") }
-      refreshStats(late, vLate, "late") // the normal delta recovery
-      val ordKey = Planner.keyProfile(spark, profRoot, "o_orderkey",
-        sourceRoot = Some(root))
-      val liKey = scala.concurrent.Await.result(liKeyF,
-        scala.concurrent.duration.Duration.Inf)
+      // so they run CONCURRENTLY with the micro-batch engine (the
+      // per-tick planning leaves most cores idle; x65's one-shot-trim
+      // posture) and the late-batch checks, joined where they are needed
+      val (freshOk, staleRefused, ordKey, liKey, ordCount) =
+        Par.overlap(spark) { s =>
+          val liKeyF = s.fork {
+            TableStats.refreshProfile(
+              Tables.lineitem(spark, sfDir).select(col("l_orderkey")),
+              s"$base/li", Seq("l_orderkey"))
+            Planner.keyProfile(spark, s"$base/li", "l_orderkey")
+          }
+          val ordCountF = s.fork(ord.count())
+          try q.processAllAvailable() finally q.stop()
+          val freshOk = Planner.keyProfile(spark, profRoot, "o_orderkey",
+            sourceRoot = Some(root)).rows > 0L
+          // a late batch lands WITHOUT its refresh: planning must refuse
+          val late =
+            ord.filter(pmod(col("o_orderkey"), lit(5L)).between(3L, 4L))
+          val vLate = SnapshotStore.merge(late, root,
+            keysAreDistinct = true, tag = Some("late"))
+          val staleRefused =
+            try { Planner.keyProfile(spark, profRoot, "o_orderkey",
+              sourceRoot = Some(root)); false }
+            catch { case e: IllegalArgumentException =>
+              e.getMessage.contains("STALE") }
+          refreshStats(late, vLate, "late") // the normal delta recovery
+          val ordKey = Planner.keyProfile(spark, profRoot, "o_orderkey",
+            sourceRoot = Some(root))
+          (freshOk, staleRefused, ordKey, liKeyF.join(), ordCountF.join())
+        }
       val cfg = Planner.Config(broadcastMaxRows = ordKey.rows / 2L,
         broadcastMaxBytes = math.max(1L, ordKey.bytes / 2L))
       val cRaw = Planner.chooseJoin(liKey, ordKey, cfg)
@@ -2369,8 +2326,7 @@ object StreamQueries {
       val cF = Planner.chooseJoin(liKey,
         Planner.filteredProfile(ordKey, est.fraction), cfg)
       val stored = SnapshotStore.read(spark, root).drop("_bucket")
-      val complete = stored.count() == scala.concurrent.Await.result(
-        ordCountF, scala.concurrent.duration.Duration.Inf)
+      val complete = stored.count() == ordCount
       val dim = stored.filter(col("o_day") >= lo && col("o_day") < hiEx)
       val estimateExact = est.straddleRows == 0L &&
         math.abs(est.estimate - dim.count().toDouble) < 0.5

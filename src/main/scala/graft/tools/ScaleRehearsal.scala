@@ -28,12 +28,8 @@ object ScaleRehearsal {
   private val VecsBase = 2000L
   private val EventsBase = 100000L
 
-  private def tmp(name: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_rehearsal_${ProcessHandle.current().pid()}/$name"
-    SnapshotStore.deleteRecursively(java.nio.file.Paths.get(p))
-    p
-  }
+  private def tmp(name: String): String =
+    graft.engine.Artifacts.scratch(s"rehearsal_$name")
 
   /** One family: untimed setup returns the timed thunk (thunk must force
     * the work — count() or an action inside). */
@@ -145,7 +141,7 @@ object ScaleRehearsal {
     Family("store_merge", (spark, m) => {
       val n = DocsBase * m
       val docs = ScaleCorpus.documents(spark, n).localCheckpoint()
-      val root = tmp(s"merge_$m/tbl")
+      val root = tmp(s"merge_$m") + "/tbl"
       // the 100 TB posture: bucket count scales WITH the data, so a
       // fixed-key upsert touches a shrinking fraction of the table
       SnapshotStore.publishBucketed(docs, root, "doc_id",
@@ -158,7 +154,7 @@ object ScaleRehearsal {
     Family("store_readkeys", (spark, m) => {
       val n = DocsBase * m
       val docs = ScaleCorpus.documents(spark, n)
-      val root = tmp(s"readkeys_$m/tbl")
+      val root = tmp(s"readkeys_$m") + "/tbl"
       SnapshotStore.publishBucketed(docs, root, "doc_id",
         nBuckets = (16 * m).toInt)
       val keys = spark.range(10L).select(col("id").as("doc_id"))
@@ -174,7 +170,7 @@ object ScaleRehearsal {
     // fraction alongside the timing.
     Family("clustered_box", (spark, m) => {
       val appends = m.toInt
-      val root = tmp(s"zbox_$m/tbl")
+      val root = tmp(s"zbox_$m") + "/tbl"
       val ev = buildClusteredAppends(spark, root, appends, nFiles = 8)
       val box = middleBox(ev)
       val (_, r0, t0) = ClusteredStore.readBox(spark, root, box)
@@ -185,7 +181,7 @@ object ScaleRehearsal {
     }),
     Family("clustered_compact_box", (spark, m) => {
       val appends = m.toInt
-      val root = tmp(s"zcbox_$m/tbl")
+      val root = tmp(s"zcbox_$m") + "/tbl"
       val ev = buildClusteredAppends(spark, root, appends, nFiles = 8)
       ClusteredStore.compactClustered(spark, root, nFiles = 16)
       val box = middleBox(ev)
@@ -228,7 +224,7 @@ object ScaleRehearsal {
       import graft.engine.relational.Histogram
       val n = DocsBase * m
       val docs = ScaleCorpus.documents(spark, n).localCheckpoint()
-      val root = tmp(s"hist_$m/bins")
+      val root = tmp(s"hist_$m") + "/bins"
       Histogram.refresh(docs, root, "n_chars", binWidth = 64L)
       val batch = docs.filter(col("doc_id") < DocsBase).localCheckpoint()
       (n, () => { Histogram.refresh(batch, root, "n_chars",
@@ -242,7 +238,7 @@ object ScaleRehearsal {
     // and the read set is the ~2 edge straddlers per accumulated run.
     Family("meta_count", (spark, m) => {
       val appends = m.toInt
-      val root = tmp(s"zcount_$m/tbl")
+      val root = tmp(s"zcount_$m") + "/tbl"
       val ev = buildClusteredAppends(spark, root, appends, nFiles = 8,
         clusterCols = Seq("t_us"))
       val box = middleBox(ev).take(1) // t_us band only
@@ -259,7 +255,7 @@ object ScaleRehearsal {
     // so the cost curve should track the metadata walk, not the pile.
     Family("meta_topk", (spark, m) => {
       val appends = m.toInt
-      val root = tmp(s"ztopk_$m/tbl")
+      val root = tmp(s"ztopk_$m") + "/tbl"
       buildClusteredAppends(spark, root, appends, nFiles = 8,
         clusterCols = Seq("t_us"))
       val (_, r0, t0) = ClusteredStore.readTopK(spark, root, "t_us", 25)
