@@ -22,11 +22,34 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** The shared conf block — exists exactly once so the session
-    * invariants cannot fork between the driver surfaces and the jobs. */
-  private def configured(b: SparkSession.Builder,
+    * invariants cannot fork between the driver surfaces, the jobs and the
+    * test session (which adds only its own app name and warehouse dir).
+    *
+    * Two invariants size Spark's per-query fixed costs to this engine's
+    * working set:
+    *  - `spark.sql.codegen.cache.maxEntries` = 4096: the LRU of compiled
+    *    generated classes. Spark's 100-entry default is smaller than one
+    *    pass of the curation funnel, so each class was evicted before its
+    *    reuse: every repeated 3 000-doc curate pass recompiled ~216
+    *    classes and every store cycle ~35. A whole run holds 232
+    *    distinct classes for curate, 162 for store and 3 618 for a
+    *    191-query `graft.Bench` at sf0.1; 4096 holds the largest of
+    *    them, so a repeated curate pass compiles none and a store cycle
+    *    ~15.
+    *  - `spark.sql.adaptive.coalescePartitions.minPartitionSize` = 64k:
+    *    AQE never coalesces a shuffle into partitions smaller than this
+    *    (under Spark's default `parallelismFirst` it is this floor, not
+    *    the 64 MB advisory size, that bounds coalescing). At the 1 MB
+    *    default AQE folded corpusFilter's 870 KB shuffle into ONE task
+    *    for its CPU-bound text scoring on a 4-core host; at 64 KB sub-MB
+    *    CPU-bound text stages keep the `local[N]` cores, while tiny
+    *    shuffles still coalesce. */
+  private[graft] def configured(b: SparkSession.Builder,
       cpus: String): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -22,6 +22,14 @@ import org.apache.spark.sql.{Column, Dataset, SparkSession}
   * coalescing, which would fold the kernel's input right back into one
   * sub-`minPartitionSize` partition — exactly the state being escaped.
   *
+  * The session's AQE floor ([[GraftSession]]: `minPartitionSize` 64 KB,
+  * not the 1 MB default) already keeps an unpinned sub-MB shuffle of
+  * CPU-bound text rows on several tasks — corpusFilter's 870 KB scoring
+  * shuffle ran as ONE task under the default. The fan-out stays: the floor
+  * acts only on shuffle output, while a single-row-group scan is one task
+  * however AQE is set, and a pinned exchange also holds full width where
+  * the floor would still coalesce (inputs under ~64 KB per core).
+  *
   * Cost discipline: the exchange moves the kernel's INPUT rows once.
   * Every call site sits where the kernel's own downstream volume
   * dominates that exchange at any scale (a window-key table is ~24

@@ -773,47 +773,36 @@ object Dedup {
     *
     * Per round: one join + one aggregation + one self-join, materialized by
     * a single `localCheckpoint` action (on a cluster prefer `checkpoint()`
-    * with a reliable dir; same semantics). Convergence is detected from the
-    * same materialized result with one cheap scan: labels only ever
-    * decrease, so `sum(comp)` is strictly decreasing until the fixed point —
-    * no per-round join-against-previous diff, no driver-side row comparison.
-    * A fixed point of neighbor-min over symmetric edges is constant per
-    * component, so equal sums two rounds running == fully converged.
+    * with a reliable dir; same semantics). That action IS the convergence
+    * test, so detecting the fixed point costs no extra round: the labels
+    * have converged iff no edge joins two different labels. Then every
+    * component carries one label, and that label is its min id — labels
+    * only ever decrease, every label is the id of a vertex in the same
+    * component, and the min vertex starts at its own id, so it can never
+    * leave it. A graph whose clusters are stars around their min id (every
+    * pair-only graph) therefore finishes in ONE round.
     *
     * Throws `IllegalStateException` if `maxIter` rounds pass without
     * convergence (silently returning partial labels would make the caller
-    * keep extra duplicates). Convergence detection itself consumes one
-    * round — it needs two consecutive equal sums and the first round has
-    * no predecessor to compare against — so the effective diameter
-    * headroom is 2^(maxIter−1); the default 21 keeps the advertised
-    * ~2^20 after that discount, and a graph that historically converged
-    * in exactly 20 rounds still fits.
+    * keep extra duplicates). Detection takes no round of its own, so
+    * `maxIter` rounds cover a component diameter of ~2^maxIter: the
+    * default 21 keeps the advertised ~2^20 with one doubling to spare.
     *
     * Returns (id, component) where component = min id in the cluster.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 21): DataFrame = {
     // every round joins against this; checkpointed so it computes once.
-    // NON-eager: materialization folds into the first round's label-sum
+    // NON-eager: materialization folds into the first round's convergence
     // job instead of paying a separate driver-sequenced job up front (the
     // loop is fixed-cost-bound at harness scale — r6 profile: eager
     // checkpoints put CC at ~2 s of pure job latency on a 40-edge graph).
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .localCheckpoint(eager = false)
-    // decimal(38,0) sum: exact and overflow-proof even for 10^12 ids at
-    // 100 TB (ANSI mode would throw on a long overflow)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("comp").cast("decimal(38,0)")).as("s")).head.getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
     var comp = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint(eager = false) // materialized by round 1's labelSum
-    // No init-sum job: round 1 must run regardless (null skips the first
-    // convergence compare), so the init measurement only ever served the
-    // empty-graph case — which now just converges one (cheap) round later.
-    var prevSum: java.math.BigDecimal = null
+      .localCheckpoint(eager = false) // materialized by round 1's check
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -827,10 +816,15 @@ object Dedup {
       val updated = propagated.join(lookup, propagated("comp") === lookup("cid"), "left")
         .select(propagated("id"),
           least(propagated("comp"), coalesce(col("ccomp"), propagated("comp"))).as("comp"))
-        .localCheckpoint(eager = false) // materialized by this round's sum
-      val newSum = labelSum(updated)
-      converged = prevSum != null && newSum.compareTo(prevSum) == 0
-      prevSum = newSum
+        .localCheckpoint(eager = false) // materialized by this round's check
+      // edges are symmetric, so one direction covers every edge
+      val src = updated.select(col("id").as("s_id"), col("comp").as("s_comp"))
+      val dst = updated.select(col("id").as("d_id"), col("comp").as("d_comp"))
+      converged = edges.filter(col("src") < col("dst"))
+        .join(src, col("src") === col("s_id"))
+        .join(dst, col("dst") === col("d_id"))
+        .filter(col("s_comp") =!= col("d_comp"))
+        .count() == 0L
       comp = updated
       iter += 1
     }

@@ -109,21 +109,21 @@ object ClusteredStore {
           "publish the first non-empty batch instead")
       return cur
     }
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    // per-file envelopes come from the staged files themselves; file
-    // names are write-unique, so the relative name survives the atomic
-    // staging -> vN rename
-    val lines = stageZRun(df, staging, clusterCols, bits, nFiles, mm)
-    Files.write(staging.resolve(ClusterFile),
-      (sidecarHeader(clusterCols, bits) +: lines.sorted).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-    tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    SnapshotStore.writeVersionManifest(staging, kind = "base",
-      schema = df.schema)
-    SnapshotStore.commitStaged(root, staging, base = -1L, tag,
-      op = "clustered publish")
+    SnapshotStore.staged(root) { staging =>
+      // per-file envelopes come from the staged files themselves; file
+      // names are write-unique, so the relative name survives the atomic
+      // staging -> vN rename
+      val lines = stageZRun(df, staging, clusterCols, bits, nFiles, mm)
+      Files.write(staging.resolve(ClusterFile),
+        (sidecarHeader(clusterCols, bits) +: lines.sorted).mkString("\n")
+          .getBytes(StandardCharsets.UTF_8))
+      tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      SnapshotStore.writeVersionManifest(staging, kind = "base",
+        schema = df.schema)
+      SnapshotStore.commitStaged(root, staging, base = -1L, tag,
+        op = "clustered publish")
+    }
   }
 
   /** APPEND a batch to a clustered store as a new version: the batch is
@@ -180,41 +180,41 @@ object ClusteredStore {
     val baseSidecar = new String(
       Files.readAllBytes(baseDir.resolve(ClusterFile)),
       StandardCharsets.UTF_8).linesIterator.toSeq
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    // fresh-file envelopes: everything staged so far IS the batch
-    val freshLines = stageZRun(df, staging, cols, baseBits, nFiles, mm)
-    // base carryover: hardlink data files, keep lines. The fallback is
-    // ONLY for filesystems without hardlink support (r18 ADVICE: base and
-    // batch files share this one flat staging dir, so a broad IOException
-    // catch + REPLACE_EXISTING copy would let a base/batch NAME COLLISION
-    // silently overwrite a fresh batch file — dropping batch rows — and
-    // mask real I/O errors as copies; collisions and I/O failures must
-    // fail the append loudly instead)
-    baseManifest.foreach { rel =>
-      val src = baseDir.resolve(rel)
-      val dst = staging.resolve(rel)
-      Files.createDirectories(dst.getParent)
-      try Files.createLink(dst, src)
-      catch {
-        case _: UnsupportedOperationException =>
-          Files.copy(src, dst) // no REPLACE: a collision throws
+    SnapshotStore.staged(root) { staging =>
+      // fresh-file envelopes: everything staged so far IS the batch
+      val freshLines = stageZRun(df, staging, cols, baseBits, nFiles, mm)
+      // base carryover: hardlink data files, keep lines. The fallback is
+      // ONLY for filesystems without hardlink support (r18 ADVICE: base and
+      // batch files share this one flat staging dir, so a broad IOException
+      // catch + REPLACE_EXISTING copy would let a base/batch NAME COLLISION
+      // silently overwrite a fresh batch file — dropping batch rows — and
+      // mask real I/O errors as copies; collisions and I/O failures must
+      // fail the append loudly instead)
+      baseManifest.foreach { rel =>
+        val src = baseDir.resolve(rel)
+        val dst = staging.resolve(rel)
+        Files.createDirectories(dst.getParent)
+        try Files.createLink(dst, src)
+        catch {
+          case _: UnsupportedOperationException =>
+            Files.copy(src, dst) // no REPLACE: a collision throws
+        }
       }
+      Files.write(staging.resolve(ClusterFile),
+        (baseSidecar.head +:
+          (baseSidecar.tail ++ freshLines).sorted).mkString("\n")
+          .getBytes(StandardCharsets.UTF_8))
+      tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      // record the STORE's schema, not the batch's (r18 ADVICE): the types
+      // are verified equal above, but the batch's column ORDER may differ,
+      // and the recorded schema is what every later read applies to the
+      // hardlinked base files too — mirror append's base-schema posture
+      SnapshotStore.writeVersionManifest(staging, kind = "append",
+        schema = baseSchema.getOrElse(df.schema))
+      SnapshotStore.commitStaged(root, staging, base, tag,
+        op = "clustered append")
     }
-    Files.write(staging.resolve(ClusterFile),
-      (baseSidecar.head +:
-        (baseSidecar.tail ++ freshLines).sorted).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-    tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    // record the STORE's schema, not the batch's (r18 ADVICE): the types
-    // are verified equal above, but the batch's column ORDER may differ,
-    // and the recorded schema is what every later read applies to the
-    // hardlinked base files too — mirror append's base-schema posture
-    SnapshotStore.writeVersionManifest(staging, kind = "append",
-      schema = baseSchema.getOrElse(df.schema))
-    SnapshotStore.commitStaged(root, staging, base, tag,
-      op = "clustered append")
   }
 
   /** COMPACT a clustered store: re-z-order the current version's rows
@@ -265,19 +265,19 @@ object ClusteredStore {
     if (!SnapshotStore.versionKind(root, base).contains("append"))
       return base // already one global z-run: nothing to repair
     val df = SnapshotStore.read(spark, root, base)
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    val lines =
-      stageZRun(df, staging, cols, bits, nFiles, ZOrder.minMaxCount(df, cols))
-    Files.write(staging.resolve(ClusterFile),
-      (sidecarHeader(cols, bits) +: lines.sorted).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-    tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    SnapshotStore.writeVersionManifest(staging, kind = "rewrite",
-      schema = SnapshotStore.versionSchema(root, base).getOrElse(df.schema))
-    SnapshotStore.commitStaged(root, staging, base, tag,
-      op = "clustered compact")
+    SnapshotStore.staged(root) { staging =>
+      val lines =
+        stageZRun(df, staging, cols, bits, nFiles, ZOrder.minMaxCount(df, cols))
+      Files.write(staging.resolve(ClusterFile),
+        (sidecarHeader(cols, bits) +: lines.sorted).mkString("\n")
+          .getBytes(StandardCharsets.UTF_8))
+      tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      SnapshotStore.writeVersionManifest(staging, kind = "rewrite",
+        schema = SnapshotStore.versionSchema(root, base).getOrElse(df.schema))
+      SnapshotStore.commitStaged(root, staging, base, tag,
+        op = "clustered compact")
+    }
   }
 
   /** RETENTION TRIM — drop every row with `column < cutoff` (the TTL /
@@ -341,46 +341,46 @@ object ClusteredStore {
       .filterNot(carried.toSet)
     if (dropped.isEmpty && straddle.isEmpty) return base // nothing below
     val schema = SnapshotStore.versionSchema(root, base)
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    val freshLines: Seq[String] =
-      if (straddle.isEmpty) Seq.empty
-      else {
-        val rdr = schema match {
-          case Some(st) => spark.read.schema(st)
-          case None => spark.read
+    SnapshotStore.staged(root) { staging =>
+      val freshLines: Seq[String] =
+        if (straddle.isEmpty) Seq.empty
+        else {
+          val rdr = schema match {
+            case Some(st) => spark.read.schema(st)
+            case None => spark.read
+          }
+          val survivors = rdr
+            .parquet(straddle.map(f => s"$baseDir/$f"): _*)
+            .filter(col(column) >= cutoff)
+          // emptiness folded into the z-scaling aggregate (r22): the
+          // isEmpty probe re-read the straddle files once more
+          val mm = ZOrder.minMaxCount(survivors, cols)
+          if (ZOrder.rowCount(mm, cols) == 0L) Seq.empty
+          else stageZRun(survivors, staging, cols, bits, nFiles, mm)
         }
-        val survivors = rdr
-          .parquet(straddle.map(f => s"$baseDir/$f"): _*)
-          .filter(col(column) >= cutoff)
-        // emptiness folded into the z-scaling aggregate (r22): the
-        // isEmpty probe re-read the straddle files once more
-        val mm = ZOrder.minMaxCount(survivors, cols)
-        if (ZOrder.rowCount(mm, cols) == 0L) Seq.empty
-        else stageZRun(survivors, staging, cols, bits, nFiles, mm)
+      Files.createDirectories(staging) // straddle-free trims stage no data
+      carried.foreach { rel =>
+        val src = baseDir.resolve(rel)
+        val dst = staging.resolve(rel)
+        Files.createDirectories(dst.getParent)
+        try Files.createLink(dst, src)
+        catch {
+          case _: UnsupportedOperationException =>
+            Files.copy(src, dst) // no REPLACE: a collision throws
+        }
       }
-    Files.createDirectories(staging) // straddle-free trims stage no data
-    carried.foreach { rel =>
-      val src = baseDir.resolve(rel)
-      val dst = staging.resolve(rel)
-      Files.createDirectories(dst.getParent)
-      try Files.createLink(dst, src)
-      catch {
-        case _: UnsupportedOperationException =>
-          Files.copy(src, dst) // no REPLACE: a collision throws
-      }
+      Files.write(staging.resolve(ClusterFile),
+        (sidecarHeader(cols, bits) +:
+          (carried.map(lineByFile) ++ freshLines).sorted).mkString("\n")
+          .getBytes(StandardCharsets.UTF_8))
+      tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      SnapshotStore.writeVersionManifest(staging, kind = "rewrite",
+        schema = schema.getOrElse(
+          SnapshotStore.read(spark, root, base).schema))
+      SnapshotStore.commitStaged(root, staging, base, tag,
+        op = "clustered trim")
     }
-    Files.write(staging.resolve(ClusterFile),
-      (sidecarHeader(cols, bits) +:
-        (carried.map(lineByFile) ++ freshLines).sorted).mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-    tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    SnapshotStore.writeVersionManifest(staging, kind = "rewrite",
-      schema = schema.getOrElse(
-        SnapshotStore.read(spark, root, base).schema))
-    SnapshotStore.commitStaged(root, staging, base, tag,
-      op = "clustered trim")
   }
 
   /** POLICY compaction — the always-on writer's maintenance hook (the

@@ -81,6 +81,26 @@ object SnapshotStore {
       finally walk.close()
     }
 
+  /** The one owner of a writer's staging dir: runs `write` against a
+    * fresh `.staging-<pid>-<nanos>` dir under `root` (the name [[vacuum]]'s
+    * stale sweep matches) and, if `write` throws — a failed or cancelled
+    * Spark job included — deletes the dir before rethrowing. A `write`
+    * that returns has moved the dir into a version or removed it
+    * ([[commitStaged]], an empty append). */
+  private[sources] def staged[T](root: String)(
+      write: java.nio.file.Path => T): T = {
+    val staging = Paths.get(root,
+      s"$StagingPrefix${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    try write(staging)
+    catch { case e: Throwable =>
+      try deleteRecursively(staging)
+      catch { case c: Exception => e.addSuppressed(c) }
+      throw e
+    }
+  }
+
+  private val StagingPrefix = ".staging-"
+
   private val ManifestFile = "_GRAFT_MANIFEST"
   private val KindFile = "_GRAFT_KIND"
   private val SchemaFile = "_GRAFT_SCHEMA"
@@ -263,22 +283,16 @@ object SnapshotStore {
       s"$root is a bucketed store (publishBucketed/merge/append/" +
         "deleteKeys are its writers); a plain publish would strip the " +
         "_bucket layout and wedge incremental writers")
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    try {
+    staged(root) { staging =>
       df.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
       writeVersionManifest(staging, kind = "base", schema = df.schema)
-    } catch { case e: Throwable =>
-      try deleteRecursively(staging)
-      catch { case c: Exception => e.addSuppressed(c) }
-      throw e
-    }
-    withFlipLock(root) {
-      val next = maxVersion(root) + 1
-      Files.move(staging, Paths.get(root, s"v$next"),
-        StandardCopyOption.ATOMIC_MOVE)
-      advancePointerLocked(root, next)
-      next
+      withFlipLock(root) {
+        val next = maxVersion(root) + 1
+        Files.move(staging, Paths.get(root, s"v$next"),
+          StandardCopyOption.ATOMIC_MOVE)
+        advancePointerLocked(root, next)
+        next
+      }
     }
   }
 
@@ -907,28 +921,28 @@ object SnapshotStore {
     val alreadyApplied = taggedVersion(root, tag)
     if (alreadyApplied.isDefined) return alreadyApplied.get
     writeBucketSpec(root, keyCol, nBuckets)
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    val bucketed = df.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
-    // ONE file per bucket directory: without the repartition, partitionBy
-    // fans every upstream task across every bucket dir (tasks x buckets
-    // files — the r18 scale rehearsal measured 5120 files for a 160-
-    // bucket publish, and merge/readKeys costs tracking FILE COUNT
-    // instead of touched data). Hash-repartitioning on _bucket lands
-    // each bucket wholly in one task; bucket SIZE stays the caller's
-    // knob (nBuckets), exactly the bucketed-table contract.
-    bucketed
-      .repartition(nBuckets, col("_bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-      .parquet(staging.toString)
-    tag.foreach(t => Files.write(staging.resolve(TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    writeSpecSidecar(staging, keyCol, nBuckets)
-    writeVersionManifest(staging, kind = "base", schema = bucketed.schema)
-    // base = -1: a full publish claims max+1 unconditionally (two racing
-    // bucketed publishers land DISTINCT versions by design); the shared
-    // tail still gives the tag re-check and the staging integrity fence
-    commitStaged(root, staging, base = -1L, tag, op = "bucketed publish")
+    staged(root) { staging =>
+      val bucketed = df.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
+      // ONE file per bucket directory: without the repartition, partitionBy
+      // fans every upstream task across every bucket dir (tasks x buckets
+      // files — the r18 scale rehearsal measured 5120 files for a 160-
+      // bucket publish, and merge/readKeys costs tracking FILE COUNT
+      // instead of touched data). Hash-repartitioning on _bucket lands
+      // each bucket wholly in one task; bucket SIZE stays the caller's
+      // knob (nBuckets), exactly the bucketed-table contract.
+      bucketed
+        .repartition(nBuckets, col("_bucket"))
+        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+        .parquet(staging.toString)
+      tag.foreach(t => Files.write(staging.resolve(TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      writeSpecSidecar(staging, keyCol, nBuckets)
+      writeVersionManifest(staging, kind = "base", schema = bucketed.schema)
+      // base = -1: a full publish claims max+1 unconditionally (two racing
+      // bucketed publishers land DISTINCT versions by design); the shared
+      // tail still gives the tag re-check and the staging integrity fence
+      commitStaged(root, staging, base = -1L, tag, op = "bucketed publish")
+    }
   }
 
   /** Hardlink every data file of `base`'s bucket directories into
@@ -1041,11 +1055,11 @@ object SnapshotStore {
   }
 
   /** Commit a fully-staged version under the flip lock — the shared
-    * tail of [[merge]]/[[deleteKeys]]/[[append]]/[[compact]]: re-check
-    * the idempotence tag (a concurrent same-tag writer may have won),
-    * abort on a stale base (staging cleaned up, so a retrying caller
-    * leaks nothing per attempt), else claim max+1, move the staging dir
-    * in atomically, and advance the pointer. */
+    * tail of every [[staged]] writer: re-check the idempotence tag (a
+    * concurrent same-tag writer may have won), abort on a stale base
+    * ([[staged]] removes the staging dir, so a retrying caller leaks
+    * nothing per attempt), else claim max+1, move the staging dir in
+    * atomically, and advance the pointer. */
   private[sources] def commitStaged(root: String, staging: java.nio.file.Path,
       base: Long, tag: Option[String], op: String): Long =
     withFlipLock(root) {
@@ -1054,12 +1068,10 @@ object SnapshotStore {
           deleteRecursively(staging); v
         case None =>
           val cur = currentVersion(root)
-          if (base >= 0 && cur != base) {
-            deleteRecursively(staging)
+          if (base >= 0 && cur != base)
             throw new StalePublishException(
               s"stale $op: computed against v$base but CURRENT is v$cur " +
                 s"under $root; re-run the $op against the new base")
-          }
           // integrity fence against the staging reaper: a vacuum that
           // misjudged this staging as abandoned (e.g. while we waited on
           // a contended lock longer than its stagingStaleMs) may have
@@ -1072,14 +1084,12 @@ object SnapshotStore {
             else new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
               .split('\n').toSeq.filter(_.nonEmpty)
               .filterNot(rel => Files.exists(staging.resolve(rel)))
-          if (missing.nonEmpty) {
-            deleteRecursively(staging)
+          if (missing.nonEmpty)
             throw new IllegalStateException(
               s"staged $op under $root lost files before commit (likely " +
                 "reaped as stale by a concurrent vacuum — raise its " +
                 s"stagingStaleMs above the lock wait): " +
                 s"${missing.take(3).mkString(",")}; re-run the $op")
-          }
           val next = maxVersion(root) + 1
           Files.move(staging, Paths.get(root, s"v$next"),
             StandardCopyOption.ATOMIC_MOVE)
@@ -1204,25 +1214,25 @@ object SnapshotStore {
     val survivors = baseDf
       .filter(col("_bucket").isin(touched.toSeq.map(Int.box): _*))
       .join(batchB.select(keyColumns.map(col): _*), keyColumns, "left_anti")
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    // union coercion does the evolution work in the touched-bucket
-    // rewrite: allowMissingColumns NULL-fills an added column into the
-    // survivors, and a widened batch column up-casts theirs — exactly
-    // the semantics the merged READ serves for the untouched buckets
-    val merged = survivors.unionByName(batchB,
-      allowMissingColumns = allowNewColumns)
-    merged // one file per touched bucket (see publishBucketed)
-      .repartition(math.max(1, touched.size), col("_bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-      .parquet(staging.toString)
-    tag.foreach(t => Files.write(staging.resolve(TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    // carry untouched buckets over as hardlinks ([[carryoverBuckets]])
-    carryoverBuckets(root, base, staging, nBuckets, skip = touched)
-    writeSpecSidecar(staging, keyCol, nBuckets)
-    writeVersionManifest(staging, kind = "rewrite", schema = merged.schema)
-    commitStaged(root, staging, base, tag, op = "merge")
+    staged(root) { staging =>
+      // union coercion does the evolution work in the touched-bucket
+      // rewrite: allowMissingColumns NULL-fills an added column into the
+      // survivors, and a widened batch column up-casts theirs — exactly
+      // the semantics the merged READ serves for the untouched buckets
+      val merged = survivors.unionByName(batchB,
+        allowMissingColumns = allowNewColumns)
+      merged // one file per touched bucket (see publishBucketed)
+        .repartition(math.max(1, touched.size), col("_bucket"))
+        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+        .parquet(staging.toString)
+      tag.foreach(t => Files.write(staging.resolve(TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      // carry untouched buckets over as hardlinks ([[carryoverBuckets]])
+      carryoverBuckets(root, base, staging, nBuckets, skip = touched)
+      writeSpecSidecar(staging, keyCol, nBuckets)
+      writeVersionManifest(staging, kind = "rewrite", schema = merged.schema)
+      commitStaged(root, staging, base, tag, op = "merge")
+    }
   }
 
   /** Key-frame contract shared by [[readKeys]] and [[deleteKeys]]:
@@ -1363,19 +1373,19 @@ object SnapshotStore {
     val survivors = baseDf
       .filter(col("_bucket").isin(touched.toSeq.map(Int.box): _*))
       .join(keysB.select(keyColumns.map(col): _*), keyColumns, "left_anti")
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    survivors // one file per touched bucket (see publishBucketed)
-      .repartition(math.max(1, touched.size), col("_bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-      .parquet(staging.toString)
-    tag.foreach(t => Files.write(staging.resolve(TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    carryoverBuckets(root, base, staging, nBuckets, skip = touched)
-    writeSpecSidecar(staging, keyCol, nBuckets)
-    writeVersionManifest(staging, kind = "rewrite",
-      schema = survivors.schema)
-    commitStaged(root, staging, base, tag, op = "delete")
+    staged(root) { staging =>
+      survivors // one file per touched bucket (see publishBucketed)
+        .repartition(math.max(1, touched.size), col("_bucket"))
+        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+        .parquet(staging.toString)
+      tag.foreach(t => Files.write(staging.resolve(TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      carryoverBuckets(root, base, staging, nBuckets, skip = touched)
+      writeSpecSidecar(staging, keyCol, nBuckets)
+      writeVersionManifest(staging, kind = "rewrite",
+        schema = survivors.schema)
+      commitStaged(root, staging, base, tag, op = "delete")
+    }
   }
 
   /** APPEND (insert-only) a batch into a new version WITHOUT rewriting
@@ -1452,39 +1462,40 @@ object SnapshotStore {
           s"store's ${baseDf.columns.filterNot(_ == "_bucket").sorted.mkString(",")}")
     requireMatchingTypes(batch, baseDf, "append batch",
       allowWidening = allowWidening, keyColumns = bucketKeyCols(keyCol))
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    val batchB = batch.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
-    batchB // one file per touched bucket (see publishBucketed)
-      .repartition(nBuckets, col("_bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-      .parquet(staging.toString)
-    // empty batch = no-op: nothing minted (see merge). Detected from the
-    // staged write itself — a partitioned write of zero rows stages no
-    // part-files — instead of a separate isEmpty probe job, which re-ran
-    // the batch's whole lineage once more per append (r22, guide §1.2:
-    // don't compute things twice; take(1) over an aggregated/joined batch
-    // pays its full upstream shuffles)
-    if (!hasStagedDataFiles(staging)) {
-      deleteRecursively(staging)
-      return base
+    staged(root) { staging =>
+      val batchB = batch.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
+      batchB // one file per touched bucket (see publishBucketed)
+        .repartition(nBuckets, col("_bucket"))
+        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+        .parquet(staging.toString)
+      // empty batch = no-op: nothing minted (see merge). Detected from the
+      // staged write itself — a partitioned write of zero rows stages no
+      // part-files — instead of a separate isEmpty probe job, which re-ran
+      // the batch's whole lineage once more per append (r22, guide §1.2:
+      // don't compute things twice; take(1) over an aggregated/joined batch
+      // pays its full upstream shuffles)
+      if (!hasStagedDataFiles(staging)) {
+        deleteRecursively(staging)
+        base
+      } else {
+        tag.foreach(t => Files.write(staging.resolve(TagFile),
+          t.getBytes(StandardCharsets.UTF_8)))
+        // hardlink the ENTIRE base version's data into the staging dirs —
+        // metadata-only carryover, fresh files and links merge per bucket dir
+        carryoverBuckets(root, base, staging, nBuckets, skip = _ => false)
+        writeSpecSidecar(staging, keyCol, nBuckets)
+        // the widest schema wins: an evolving/widening append records the
+        // batch's union schema (its types are the widened ones — narrowing
+        // was rejected above); a plain append records the base's
+        writeVersionManifest(staging, kind = "append",
+          schema = if (allowNewColumns || allowWidening)
+            org.apache.spark.sql.types.StructType(
+              batchB.schema.fields ++ baseDf.schema.fields.filterNot(f =>
+                batchB.schema.fieldNames.contains(f.name)))
+            else baseDf.schema)
+        commitStaged(root, staging, base, tag, op = "append")
+      }
     }
-    tag.foreach(t => Files.write(staging.resolve(TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    // hardlink the ENTIRE base version's data into the staging dirs —
-    // metadata-only carryover, fresh files and links merge per bucket dir
-    carryoverBuckets(root, base, staging, nBuckets, skip = _ => false)
-    writeSpecSidecar(staging, keyCol, nBuckets)
-    // the widest schema wins: an evolving/widening append records the
-    // batch's union schema (its types are the widened ones — narrowing
-    // was rejected above); a plain append records the base's
-    writeVersionManifest(staging, kind = "append",
-      schema = if (allowNewColumns || allowWidening)
-        org.apache.spark.sql.types.StructType(
-          batchB.schema.fields ++ baseDf.schema.fields.filterNot(f =>
-            batchB.schema.fieldNames.contains(f.name)))
-        else baseDf.schema)
-    commitStaged(root, staging, base, tag, op = "append")
   }
 
   /** [[append]] under WRITE CONTENTION: two always-on pipelines feeding
@@ -1585,25 +1596,25 @@ object SnapshotStore {
         dataFiles(Paths.get(root, s"v$base", s"_bucket=$k")) > maxFilesPerBucket)
     }
     if (fragmented.isEmpty) return base
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    // mergeSchema: a fragmented bucket of an EVOLVED store holds files of
-    // both physical schemas; a pick-one-footer read could rewrite the
-    // bucket WITHOUT the evolved column — silent data loss in a "content
-    // identical" layout op. The union schema NULL-fills old files, which
-    // IS the store's read contract after an evolution.
-    val compacted = read(spark, root, base, mergeSchema = true)
-      .filter(col("_bucket").isin(fragmented.map(Int.box): _*))
-    compacted
-      .repartition(fragmented.size, col("_bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-      .parquet(staging.toString)
-    carryoverBuckets(root, base, staging, nBuckets,
-      skip = fragmented.contains)
-    writeSpecSidecar(staging, specKey, nBuckets)
-    writeVersionManifest(staging, kind = "rewrite",
-      schema = compacted.schema)
-    commitStaged(root, staging, base, tag = None, op = "compact")
+    staged(root) { staging =>
+      // mergeSchema: a fragmented bucket of an EVOLVED store holds files of
+      // both physical schemas; a pick-one-footer read could rewrite the
+      // bucket WITHOUT the evolved column — silent data loss in a "content
+      // identical" layout op. The union schema NULL-fills old files, which
+      // IS the store's read contract after an evolution.
+      val compacted = read(spark, root, base, mergeSchema = true)
+        .filter(col("_bucket").isin(fragmented.map(Int.box): _*))
+      compacted
+        .repartition(fragmented.size, col("_bucket"))
+        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+        .parquet(staging.toString)
+      carryoverBuckets(root, base, staging, nBuckets,
+        skip = fragmented.contains)
+      writeSpecSidecar(staging, specKey, nBuckets)
+      writeVersionManifest(staging, kind = "rewrite",
+        schema = compacted.schema)
+      commitStaged(root, staging, base, tag = None, op = "compact")
+    }
   }
 
   /** OPTIMISTIC full content rewrite: publish `df` as the store's next
@@ -1639,18 +1650,18 @@ object SnapshotStore {
     bucketKeyCols(keyCol).foreach(k =>
       require(df.columns.contains(k), s"missing key column $k"))
     val bucketed = df.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    bucketed // one file per bucket (see publishBucketed)
-      .repartition(nBuckets, col("_bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-      .parquet(staging.toString)
-    tag.foreach(t => Files.write(staging.resolve(TagFile),
-      t.getBytes(StandardCharsets.UTF_8)))
-    writeSpecSidecar(staging, keyCol, nBuckets)
-    writeVersionManifest(staging, kind = "rewrite",
-      schema = bucketed.schema)
-    commitStaged(root, staging, base, tag, op = "content rewrite")
+    staged(root) { staging =>
+      bucketed // one file per bucket (see publishBucketed)
+        .repartition(nBuckets, col("_bucket"))
+        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+        .parquet(staging.toString)
+      tag.foreach(t => Files.write(staging.resolve(TagFile),
+        t.getBytes(StandardCharsets.UTF_8)))
+      writeSpecSidecar(staging, keyCol, nBuckets)
+      writeVersionManifest(staging, kind = "rewrite",
+        schema = bucketed.schema)
+      commitStaged(root, staging, base, tag, op = "content rewrite")
+    }
   }
 
   /** REBUCKET a store that outgrew its layout — the maintenance op a
@@ -1694,16 +1705,16 @@ object SnapshotStore {
           s"(${df.columns.sorted.mkString(",")})"))
     val rebucketed = df
       .withColumn("_bucket", bucketExpr(keySpec, newBuckets))
-    val staging = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    rebucketed
-      .repartition(newBuckets, col("_bucket"))
-      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-      .parquet(staging.toString)
-    writeSpecSidecar(staging, keySpec, newBuckets)
-    writeVersionManifest(staging, kind = "rewrite",
-      schema = rebucketed.schema)
-    val v = commitStaged(root, staging, base, tag = None, op = "rebucket")
+    val v = staged(root) { staging =>
+      rebucketed
+        .repartition(newBuckets, col("_bucket"))
+        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+        .parquet(staging.toString)
+      writeSpecSidecar(staging, keySpec, newBuckets)
+      writeVersionManifest(staging, kind = "rewrite",
+        schema = rebucketed.schema)
+      commitStaged(root, staging, base, tag = None, op = "rebucket")
+    }
     // refresh the root record (atomic replace) — observability only; a
     // crash landing between the flip and here leaves the sidecar as the
     // binding spec, which every resolution path prefers. Locked and
@@ -1824,7 +1835,7 @@ object SnapshotStore {
       try {
         import scala.jdk.CollectionConverters._
         s.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(".staging-"))
+          .filter(_.getFileName.toString.startsWith(StagingPrefix))
           .filter(p => {
             val newest = newestMtime(p)
             newest != Long.MaxValue &&

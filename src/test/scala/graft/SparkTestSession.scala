@@ -1,19 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** One shared local session for the whole test JVM (guide: one SparkSession
-  * per suite, lazy). UTC + small shuffle partitions mirror the driver's
-  * Verify config. */
+  * per suite, lazy). Its settings are [[GraftSession]]'s conf block at the
+  * driver's `local[4]` width, so the suite runs every session invariant the
+  * driver surfaces run; only the app name and warehouse dir are its own. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.configured(
+      SparkSession.builder().master("local[4]").appName("graft-tests"), "4")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()

@@ -382,6 +382,17 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("connected components: a star around its min id converges in one round") {
+    import spark.implicits._
+    // pair-only clusters (every member paired with the cluster's lowest id)
+    // are labelled in round 1, and the same round detects the fixed point
+    val pairs = ((2L to 6L).map(i => (1L, i)) :+ ((7L, 8L))).toDF("id_a", "id_b")
+    val comp = Dedup.connectedComponents(pairs, maxIter = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((1L to 6L).forall(comp(_) == 1L))
+    assert(comp(7L) == 7L && comp(8L) == 7L)
+  }
+
   test("simHash: degenerate hot bucket is capped, not quadratic") {
     import spark.implicits._
     // 1000 identical docs share one fingerprint; every band bucket holds the
