@@ -1188,11 +1188,11 @@ object RelationalQueries {
     * must widen the table WITHOUT rewriting the corpus. v1 publishes the
     * even-doc half with the original 3 columns; v2 appends the odd half
     * carrying a NEW `quality` column (`append(allowNewColumns = true)` —
-    * O(batch), zero existing files touched). The union read
-    * (`read(mergeSchema = true)`) surfaces `quality` as NULL for v1
+    * O(batch), zero existing files touched). A plain read serves v2's
+    * recorded union schema and surfaces `quality` as NULL for v1
     * rows; the DuckDB twin is the prescribed UNION-with-NULL-fill.
     * Time-travel schema arithmetic is pinned at value level: v1 read
-    * back (merging ON) still has 3 columns — a pinned pre-evolution
+    * back still has 3 columns — a pinned pre-evolution
     * version keeps its own schema — while the current version has 4.
     * `n_with_quality` (COUNT over the nullable column) pins that
     * exactly the post-evolution rows carry values. */
@@ -1211,9 +1211,9 @@ object RelationalQueries {
         docs.filter(col("doc_id") % 2 === 1)
           .withColumn("quality", (col("doc_id") % 7).cast("double")),
         root, allowNewColumns = true)
-      val v1Cols = SnapshotStore.read(spark, root, 1L, mergeSchema = true)
+      val v1Cols = SnapshotStore.read(spark, root, 1L)
         .columns.count(_ != "_bucket")
-      val cur = SnapshotStore.read(spark, root, mergeSchema = true)
+      val cur = SnapshotStore.read(spark, root)
       val v2Cols = cur.columns.count(_ != "_bucket")
       cur.groupBy(col("source"))
         .agg(lcount().as("n_docs"),
@@ -1638,7 +1638,7 @@ object RelationalQueries {
     * mechanic is widen-on-write ([[graft.engine.sources.SnapshotStore
     * .append]] `allowWidening`): the new files carry the wider type, NO
     * existing file rewrites, the version sidecar records the widened
-    * union, and merged reads up-cast the old int32 files at scan (a
+    * union, and reads up-cast the old int32 files at scan (a
     * parquet footer-merge would throw CANNOT_MERGE_SCHEMAS on the
     * straddle). Value-level teeth: the appended rows carry counts above
     * Int.MaxValue, so the final per-source SUM is only right if the
@@ -1675,9 +1675,9 @@ object RelationalQueries {
             root, allowWidening = true)
           false
         } catch { case _: IllegalArgumentException => true }
-      val cur = SnapshotStore.read(spark, root, mergeSchema = true)
+      val cur = SnapshotStore.read(spark, root)
       val widened = cur.schema("n_chars").dataType == LongType
-      val v1Int = SnapshotStore.read(spark, root, 1L, mergeSchema = true)
+      val v1Int = SnapshotStore.read(spark, root, 1L)
         .schema("n_chars").dataType ==
         org.apache.spark.sql.types.IntegerType
       cur.groupBy(col("source"))

@@ -45,21 +45,22 @@ object ClusteredStore {
   /** Z-cluster `df` into `staging` as ≈`nFiles` equi-count z-range files
     * and return one sidecar envelope line per staged file — derived from
     * the staged files THEMSELVES (they can never disagree with the
-    * data). Driver-side rows = nFiles, bounded by the write's own
-    * granularity choice — metadata-scale by construction. Shared by
-    * publish / append / compact so the three writers cannot drift on the
-    * layout or the envelope format. */
+    * data), read back under the schema they were written with.
+    * Driver-side rows = nFiles, bounded by the write's own granularity
+    * choice — metadata-scale by construction. Shared by publish / append
+    * / compact so the three writers cannot drift on the layout or the
+    * envelope format. */
   private def stageZRun(df: DataFrame, staging: java.nio.file.Path,
       cols: Seq[String], bits: Int, nFiles: Int,
       mm: org.apache.spark.sql.Row): Seq[String] = {
-    val spark = df.sparkSession
     val z = ZOrder.zExprScaled(mm, cols, bits)
     df.withColumn("_z", z)
       .repartitionByRange(nFiles, col("_z"))
       .sortWithinPartitions(col("_z"))
       .drop("_z")
       .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-    val stats = spark.read.parquet(staging.toString)
+    val stats = SnapshotStore.scanFiles(df.sparkSession, staging.toString,
+        SnapshotStore.dataFilesUnder(staging), df.schema)
       .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1)
         .as("file"))
       .agg(ZOrder.statExprs(cols).head, ZOrder.statExprs(cols).tail: _*)
@@ -345,12 +346,7 @@ object ClusteredStore {
       val freshLines: Seq[String] =
         if (straddle.isEmpty) Seq.empty
         else {
-          val rdr = schema match {
-            case Some(st) => spark.read.schema(st)
-            case None => spark.read
-          }
-          val survivors = rdr
-            .parquet(straddle.map(f => s"$baseDir/$f"): _*)
+          val survivors = SnapshotStore.scan(spark, root, base, straddle)
             .filter(col(column) >= cutoff)
           // emptiness folded into the z-scaling aggregate (r22): the
           // isEmpty probe re-read the straddle files once more
@@ -487,11 +483,7 @@ object ClusteredStore {
     val readCount =
       if (toRead.isEmpty) 0L
       else {
-        val rdr = SnapshotStore.versionSchema(root, v) match {
-          case Some(st) => spark.read.schema(st)
-          case None => spark.read
-        }
-        rdr.parquet(toRead.map(f => s"$root/v$v/$f"): _*)
+        SnapshotStore.scan(spark, root, v, toRead)
           .filter(box.map { case (c, lo, hi) => col(c).between(lo, hi) }
             .reduce(_ && _))
           .count()
@@ -549,14 +541,10 @@ object ClusteredStore {
       }.toMap
     if (unknown.isEmpty) return (metaRows, metaEnvs, 0, manifest.size)
     // fail-safe: fold the unknown files' real rows in (one narrow job)
-    val rdr = SnapshotStore.versionSchema(root, v) match {
-      case Some(st) => spark.read.schema(st)
-      case None => spark.read
-    }
     val aggs = count(lit(1L)).as("_n") +: cols.flatMap(c =>
       Seq(min(col(c)).cast(org.apache.spark.sql.types.LongType),
         max(col(c)).cast(org.apache.spark.sql.types.LongType)))
-    val r = rdr.parquet(unknown.map(f => s"$root/v$v/$f"): _*)
+    val r = SnapshotStore.scan(spark, root, v, unknown)
       .agg(aggs.head, aggs.tail: _*).head()
     val readRows = r.getLong(0)
     // an unknown file can be EMPTY (range partitioning mints empty
@@ -655,12 +643,7 @@ object ClusteredStore {
     val prefix = ordered.take(nPrefix)
     if (prefix.isEmpty) // zero-file version (full retention expiry)
       return (SnapshotStore.read(spark, root, v), 0, 0)
-    val rdr0 = SnapshotStore.versionSchema(root, v) match {
-      case Some(st) => spark.read.schema(st)
-      case None => spark.read
-    }
-    def readFiles(fs: Seq[String]) =
-      rdr0.parquet(fs.map(f => s"$root/v$v/$f"): _*)
+    def readFiles(fs: Seq[String]) = SnapshotStore.scan(spark, root, v, fs)
     val sortCol = if (descending) col(column).desc else col(column).asc
     // the k-th extreme of the prefix: one narrow job, k collected values
     // (cast: cluster columns are BIGINT-castable, not necessarily BIGINT)
@@ -722,15 +705,10 @@ object ClusteredStore {
     }
     val boxFilter = box.map { case (c, lo, hi) => col(c).between(lo, hi) }
       .reduce(_ && _)
-    val dir = s"$root/v$v"
-    val rdr = SnapshotStore.versionSchema(root, v) match {
-      case Some(st) => spark.read.schema(st)
-      case None => spark.read
-    }
     val data =
       if (selected.isEmpty)
         SnapshotStore.read(spark, root, v).filter(lit(false))
-      else rdr.parquet(selected.map(f => s"$dir/$f"): _*).filter(boxFilter)
+      else SnapshotStore.scan(spark, root, v, selected).filter(boxFilter)
     (data, selected.size, manifest.size)
   }
 }

@@ -117,21 +117,6 @@ object SnapshotStore {
     else Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8).trim)
   }
 
-  /** Write the per-version FILE MANIFEST into a staging dir: one relative
-    * data-file path per line, sorted. Called after every data write /
-    * hardlink carryover and BEFORE the atomic move, so a version and its
-    * manifest become visible together or not at all (the same contract as
-    * [[versionTags]]'s tag file). [[read]] consumes the manifest instead
-    * of enumerating the directory — at real scale the listing-at-read
-    * pattern is the object-store anti-pattern every table format exists
-    * to kill (O(files) LIST calls, eventual-consistency windows); the
-    * manifest makes reads O(1) metadata fetches, with [[auditVersion]]
-    * keeping `Files.walk` as a consistency AUDIT rather than the source
-    * of truth. The one-time walk here is of the just-written staging dir
-    * — write-time cost, amortized over every later read. Each version
-    * also records its lineage KIND here (`_GRAFT_KIND`, [[versionKind]])
-    * so kind, manifest, and data become visible together or not at all. */
-
   /** The READ schema a version was written with (including `_bucket` for
     * bucketed stores), recorded so a version holding ZERO data files —
     * a full takedown ([[deleteKeys]] of every key) legitimately produces
@@ -148,40 +133,46 @@ object SnapshotStore {
     }
   }
 
+  /** Write the per-version FILE MANIFEST into a staging dir: one relative
+    * data-file path per line, sorted. Called after every data write /
+    * hardlink carryover and BEFORE the atomic move, so a version and its
+    * manifest become visible together or not at all (the same contract as
+    * [[versionTags]]'s tag file). Every read plans its scan from the
+    * manifest ([[scan]]) instead of enumerating the directory — at real
+    * scale the listing-at-read pattern is the object-store anti-pattern
+    * every table format exists to kill (O(files) LIST calls,
+    * eventual-consistency windows). A read costs two small metadata
+    * reads (this manifest and the schema sidecar) plus one stat per
+    * listed file: no LIST call and no footer read. [[auditVersion]] keeps
+    * `Files.walk` as a consistency AUDIT rather than the source of truth.
+    * The one-time walk here is of the just-written staging dir —
+    * write-time cost, amortized over every later read. Each version also
+    * records its lineage KIND (`_GRAFT_KIND`, [[versionKind]]) and its
+    * READ schema (`_GRAFT_SCHEMA`, [[versionSchema]]) here, so kind,
+    * schema, manifest and data become visible together or not at all. */
   private[sources] def writeVersionManifest(staging: java.nio.file.Path,
       kind: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val walk = Files.walk(staging)
-    val rel =
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.filter { f =>
-          val n = f.getFileName.toString
-          Files.isRegularFile(f) && n.endsWith(".parquet") &&
-            !n.startsWith("_") && !n.startsWith(".")
-        }.map(f => staging.relativize(f).toString).toSeq.sorted
-      } finally walk.close()
     Files.write(staging.resolve(ManifestFile),
-      rel.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      dataFilesUnder(staging).mkString("\n").getBytes(StandardCharsets.UTF_8))
     Files.write(staging.resolve(KindFile),
       kind.getBytes(StandardCharsets.UTF_8))
     Files.write(staging.resolve(SchemaFile),
       schema.json.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** Does a just-written staging dir hold ANY data file? (The emptiness
-    * fact [[append]] folds into its staged write — same data-file filter
-    * as [[writeVersionManifest]]'s walk.) */
-  private def hasStagedDataFiles(staging: java.nio.file.Path): Boolean = {
-    if (!Files.exists(staging)) return false
-    val walk = Files.walk(staging)
+  /** The data files under `dir` as sorted relative paths: regular
+    * `.parquet` files whose names carry no `_`/`.` prefix. The one
+    * filter the manifest, the staged read-back and the audits share. */
+  private[sources] def dataFilesUnder(dir: java.nio.file.Path): Seq[String] = {
+    val walk = Files.walk(dir)
     try {
       import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.exists { f =>
+      walk.iterator().asScala.filter { f =>
         val n = f.getFileName.toString
         Files.isRegularFile(f) && n.endsWith(".parquet") &&
           !n.startsWith("_") && !n.startsWith(".")
-      }
+      }.map(f => dir.relativize(f).toString).toSeq.sorted
     } finally walk.close()
   }
 
@@ -200,18 +191,8 @@ object SnapshotStore {
     * healthy version. The directory walk lives HERE — an explicit audit
     * tool — not in the read path. */
   def auditVersion(root: String, version: Long): (Seq[String], Seq[String]) = {
-    val dir = Paths.get(root, s"v$version")
     val listed = manifestFiles(root, version).getOrElse(Seq.empty)
-    val walk = Files.walk(dir)
-    val onDisk =
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.filter { f =>
-          val n = f.getFileName.toString
-          Files.isRegularFile(f) && n.endsWith(".parquet") &&
-            !n.startsWith("_") && !n.startsWith(".")
-        }.map(f => dir.relativize(f).toString).toSeq.sorted
-      } finally walk.close()
+    val onDisk = dataFilesUnder(Paths.get(root, s"v$version"))
     (listed.diff(onDisk), onDisk.diff(listed))
   }
 
@@ -221,16 +202,8 @@ object SnapshotStore {
     * [[auditVersion]]: an audit tool, not a read path. */
   def versionFileInodes(root: String, version: Long): Map[String, Any] = {
     val dir = Paths.get(root, s"v$version")
-    val walk = Files.walk(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.filter { f =>
-        val n = f.getFileName.toString
-        Files.isRegularFile(f) && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }.map(f => dir.relativize(f).toString ->
-        Files.getAttribute(f, "unix:ino")).toMap
-    } finally walk.close()
+    dataFilesUnder(dir).map(rel =>
+      rel -> Files.getAttribute(dir.resolve(rel), "unix:ino")).toMap
   }
 
   /** Highest version present, whether or not CURRENT points at it. */
@@ -507,60 +480,69 @@ object SnapshotStore {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Read the current (or a pinned) snapshot. The version's manifest is
-    * the file-listing source of truth (see [[writeVersionManifest]] — no
-    * directory enumeration on the read path); `basePath` keeps partition
-    * columns (`_bucket=k/` paths) parsing exactly as a directory read
-    * would. Pre-manifest versions fall back to the directory read.
+  /** Read the current (or a pinned) snapshot, planned from the version's
+    * own metadata ([[scan]]): its manifest names the files and its schema
+    * sidecar is the schema, so building the DataFrame starts no Spark
+    * job. Pre-manifest versions fall back to a directory read.
     *
-    * `mergeSchema` is the read half of SCHEMA EVOLUTION (see
-    * [[append]]'s `allowNewColumns`): a version whose files straddle an
-    * evolution carries two physical schemas, and Spark's default
-    * pick-one-footer read would resolve the column set
-    * non-deterministically. With `mergeSchema = true` the scan takes the
-    * union schema and pre-evolution files read the new columns as NULL —
-    * the lakehouse contract. Time travel composes: a version pinned
-    * BEFORE the evolution only lists pre-evolution files, so it returns
-    * its own (narrower) schema whether or not merging is on. The cost is
-    * one footer read per file at planning time — the reason it is opt-in
-    * rather than the default (an un-evolved store pays nothing). */
-  def read(spark: SparkSession, root: String, version: Long = 0L,
-      mergeSchema: Boolean = false): DataFrame = {
+    * The recorded schema is the read half of SCHEMA EVOLUTION (see
+    * [[append]]'s `allowNewColumns` / `allowWidening`): a version whose
+    * files straddle an evolution carries two physical schemas, and its
+    * sidecar records their UNION — pre-evolution files read a new column
+    * as NULL and up-cast a widened one at scan, deterministically (no
+    * footer sampling). Time travel composes: the sidecar is per version,
+    * so a version pinned BEFORE the evolution returns its own narrower
+    * schema. */
+  def read(spark: SparkSession, root: String, version: Long = 0L): DataFrame = {
     val v = if (version > 0) version else currentVersion(root)
     require(v > 0, s"no published version under $root")
-    val dir = s"$root/v$v"
-    val reader = spark.read.option("mergeSchema", mergeSchema.toString)
     manifestFiles(root, v) match {
-      case Some(files) if files.nonEmpty =>
-        // merged read of a sidecar-bearing version: serve the RECORDED
-        // union schema instead of parquet's footer merge. Deterministic
-        // (no footer sampling), free (no footer reads at planning), and
-        // — the part footer-merge cannot do — it reads files that
-        // straddle a TYPE WIDENING (int32 files under a bigint column)
-        // by up-casting at scan, where option("mergeSchema") throws
-        // CANNOT_MERGE_SCHEMAS. Files missing an evolved column
-        // NULL-fill, same as before.
-        val recorded = if (mergeSchema) versionSchema(root, v) else None
-        val rdr = recorded match {
-          case Some(st) => spark.read.schema(st)
-          case None => reader
-        }
-        rdr.option("basePath", dir)
-          .parquet(files.map(f => s"$dir/$f"): _*)
-      case Some(_) =>
-        // a version with ZERO data files (a full-takedown deleteKeys is
-        // the legitimate producer) has no footers to infer from; the
-        // schema sidecar keeps the store readable — and therefore
-        // merge/append-able again — instead of bricked
-        val schema = versionSchema(root, v).getOrElse(
-          throw new IllegalStateException(
-            s"v$v under $root has an empty manifest and no schema " +
-              "sidecar (pre-sidecar legacy version?) — cannot read an " +
-              "empty version without a recorded schema"))
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      case _ => reader.parquet(dir)
+      case Some(files) => scan(spark, root, v, files)
+      case None =>
+        spark.read.option("mergeSchema", "true").parquet(s"$root/v$v")
     }
+  }
+
+  /** THE way a versioned store's files become a DataFrame: `files`
+    * (relative to `v$version`, from its manifest or a subset of it) under
+    * the version's recorded schema ([[versionSchema]]), through a
+    * [[ManifestFileIndex]] — no footer job, no listing job, and a
+    * zero-file subset is simply the empty answer with that schema (a
+    * full-takedown [[deleteKeys]] produces one). A pre-sidecar legacy
+    * version has no recorded schema: its files are footer-merged, and
+    * an empty one cannot be read at all. */
+  private[sources] def scan(spark: SparkSession, root: String, version: Long,
+      files: Seq[String]): DataFrame = {
+    val dir = s"$root/v$version"
+    versionSchema(root, version) match {
+      case Some(schema) => scanFiles(spark, dir, files, schema)
+      case None =>
+        if (files.isEmpty) throw new IllegalStateException(
+          s"v$version under $root has no files to read and no schema " +
+            "sidecar (pre-sidecar legacy version?) — cannot read an " +
+            "empty version without a recorded schema")
+        spark.read.option("mergeSchema", "true").option("basePath", dir)
+          .parquet(files.map(f => s"$dir/$f"): _*)
+    }
+  }
+
+  /** [[scan]] with the schema in hand — also the read-back of a staged
+    * write, whose schema is the written frame's. `_bucket` is a
+    * partition column when every file sits under a `_bucket=k/` dir,
+    * so it comes last, as a directory read would place it. */
+  private[sources] def scanFiles(spark: SparkSession, dir: String,
+      files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.types.StructType
+    val bucketed = schema.fieldNames.contains("_bucket") &&
+      files.forall(_.startsWith("_bucket="))
+    val (part, data) =
+      if (bucketed) schema.fields.partition(_.name == "_bucket")
+      else (Array.empty[org.apache.spark.sql.types.StructField], schema.fields)
+    val partSchema = StructType(part.map(_.copy(nullable = true)))
+    org.apache.spark.sql.graft.Bridge.parquetScan(spark,
+      new ManifestFileIndex(spark, dir, files, partSchema), partSchema,
+      StructType(data))
   }
 
   /** The rows ADDED strictly after `fromVersion`, as of `toVersion`
@@ -579,17 +561,12 @@ object SnapshotStore {
     * primitive (a backfill or downstream sync reads only what it has not
     * yet consumed, never the corpus). `fromVersion = 0` means "nothing
     * consumed yet" and returns the full current snapshot. Returns None
-    * when the delta holds no files (no schema to read from zero files —
-    * the honest empty answer). */
+    * when the delta holds no files: nothing new to consume. */
   def readSince(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Long = 0L): Option[DataFrame] = {
     val to = if (toVersion > 0) toVersion else currentVersion(root)
     require(to > 0, s"no published version under $root")
-    // mergeSchema for the same reason as the delta branch below: a new
-    // consumer of an EVOLVED store must bootstrap with the union schema,
-    // not one sampled footer's
-    if (fromVersion <= 0L)
-      return Some(read(spark, root, to, mergeSchema = true))
+    if (fromVersion <= 0L) return Some(read(spark, root, to))
     require(fromVersion <= to,
       s"readSince from v$fromVersion > to v$to under $root")
     if (fromVersion == to) return None
@@ -609,19 +586,9 @@ object SnapshotStore {
           "versions cannot be delta-read)"))
     val seen = files(fromVersion).toSet // Set: linear delta, not Seq#diff's O(n*m)
     val delta = files(to).filterNot(seen)
-    if (delta.isEmpty) None
-    else {
-      val dir = s"$root/v$to"
-      // the delta's own appends may straddle an evolution: serve the
-      // to-version's recorded union schema (handles widened types too —
-      // see read); footer-merge only for pre-sidecar legacy versions
-      val rdr = versionSchema(root, to) match {
-        case Some(st) => spark.read.schema(st)
-        case None => spark.read.option("mergeSchema", "true")
-      }
-      Some(rdr.option("basePath", dir)
-        .parquet(delta.map(f => s"$dir/$f"): _*))
-    }
+    // the delta's own appends may straddle an evolution: the to-version's
+    // recorded union schema serves them all (widened types too — see read)
+    if (delta.isEmpty) None else Some(scan(spark, root, to, delta))
   }
 
   /** Persisted per-consumer cursor: the highest version `consumer` has
@@ -746,20 +713,19 @@ object SnapshotStore {
     * key+content-hash projection instead of full rows. */
   def diff(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Long): DataFrame = {
-    // mergeSchema + column alignment: across a schema evolution the two
-    // versions have different column sets — without alignment exceptAll
-    // either throws (widths differ) or, with a narrow footer sample,
-    // silently compares minus the evolved column; NULL-filling the
-    // missing side makes "this row gained a value in the new column"
-    // surface as added+removed, which IS the honest row-level diff
+    // column alignment: across a schema evolution the two versions have
+    // different column sets, and without alignment exceptAll throws
+    // (widths differ); NULL-filling the missing side makes "this row
+    // gained a value in the new column" surface as added+removed, which
+    // IS the honest row-level diff
     // _bucket is LAYOUT, not data: comparing it would make a rebucket
     // (identical rows, every bucket assignment changed) read as a full
     // added+removed churn — and a q141-style consumer resync across it
     // would pointlessly rewrite the whole derived store. Dropped from
     // both sides; a plain store's drop is a no-op.
-    val from = read(spark, root, fromVersion, mergeSchema = true)
+    val from = read(spark, root, fromVersion)
       .drop("_bucket")
-    val to = read(spark, root, toVersion, mergeSchema = true)
+    val to = read(spark, root, toVersion)
       .drop("_bucket")
     val fieldByName = (to.schema.fields ++ from.schema.fields)
       .groupBy(_.name).map { case (n, fs) =>
@@ -1163,12 +1129,10 @@ object SnapshotStore {
       throw new IllegalStateException(
         s"$root is not a bucketed store; bootstrap with publishBucketed"))
     val keyColumns = bucketKeyCols(keyCol)
-    // mergeSchema: on an evolved store (append allowNewColumns) the files
-    // straddle two physical schemas — a pick-one-footer read would resolve
-    // the column set nondeterministically, making this require flaky and
-    // the survivors' rewrite silently narrow. The union schema costs one
-    // footer read per file at planning time, a maintenance-path price.
-    val baseDf = read(spark, root, base, mergeSchema = true)
+    // on an evolved store (append allowNewColumns) the files straddle two
+    // physical schemas; read serves the recorded UNION, so this require
+    // and the survivors' rewrite see every column (no footer sampling)
+    val baseDf = read(spark, root, base)
     if (allowNewColumns)
       require((baseDf.columns.toSet - "_bucket").subsetOf(batch.columns.toSet)
           && !batch.columns.contains("_bucket"),
@@ -1218,7 +1182,7 @@ object SnapshotStore {
       // union coercion does the evolution work in the touched-bucket
       // rewrite: allowMissingColumns NULL-fills an added column into the
       // survivors, and a widened batch column up-casts theirs — exactly
-      // the semantics the merged READ serves for the untouched buckets
+      // the semantics every read serves for the untouched buckets
       val merged = survivors.unionByName(batchB,
         allowMissingColumns = allowNewColumns)
       merged // one file per touched bucket (see publishBucketed)
@@ -1257,25 +1221,17 @@ object SnapshotStore {
     }
   }
 
-  /** Bucket census of a validated key frame — shared by [[readKeys]]
-    * and [[deleteKeys]] so the census discipline can never diverge
-    * between the read and delete legs. NULL-keyed rows are dropped
-    * first: they can never equi-join a stored row (both legs' joins are
-    * standard equality), and xxhash64(null) would otherwise census the
-    * seed bucket — wasted IO on the read path, a pointless identical
-    * rewrite on the delete path. ([[merge]]'s batch census is NOT this:
-    * a null-keyed batch row is a real row to store.) Returns the
-    * bucketed, checkpoint-pinned key frame plus its touched-bucket set
-    * (driver-side, bounded by nBuckets). */
-  private def keyFrameCensus(keys: DataFrame, keySpec: String,
-      nBuckets: Int, keyColumns: Seq[String]): (DataFrame, Set[Int]) = {
-    val keysB = keys.na.drop("any", keyColumns)
+  /** The bucketed key frame shared by [[readKeys]] and [[deleteKeys]],
+    * so the two legs can never bucket differently. NULL-keyed rows are
+    * dropped first: they can never equi-join a stored row (both legs'
+    * joins are standard equality), and xxhash64(null) would otherwise
+    * touch the seed bucket — wasted IO on the read path, a pointless
+    * identical rewrite on the delete path. ([[merge]]'s batch census is
+    * NOT this: a null-keyed batch row is a real row to store.) */
+  private def bucketedKeys(keys: DataFrame, keySpec: String, nBuckets: Int,
+      keyColumns: Seq[String]): DataFrame =
+    keys.na.drop("any", keyColumns)
       .withColumn("_bucket", bucketExpr(keySpec, nBuckets))
-      .localCheckpoint(eager = false)
-    val touched = keysB.select(col("_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    (keysB, touched)
-  }
 
   // The pruned-lookup plan contract (a scan carrying a `_bucket`
   // membership partition filter) is pinned STRUCTURALLY by
@@ -1294,12 +1250,12 @@ object SnapshotStore {
     * partition column, so the isin prunes at the directory level) and
     * semi-joins against the (broadcast) key frame inside them.
     *
-    * Contract: `keys` is a POINT-LOOKUP-SIZED frame — it is broadcast
-    * (census collect is bounded by nBuckets either way). For a
-    * corpus-scale key set use `read` + your own join instead. NULL-keyed
-    * rows are dropped before the census ([[keyFrameCensus]] — they could
-    * never equi-join a stored row, and would otherwise force a read of
-    * the seed bucket for nothing; a null row identity is the caller's
+    * Contract: `keys` is a POINT-LOOKUP-SIZED frame — it is collected
+    * to the driver once and broadcast from there. For a corpus-scale
+    * key set use `read` + your own join instead. NULL-keyed rows are
+    * dropped before the census ([[bucketedKeys]] — they could never
+    * equi-join a stored row, and would otherwise force a read of the
+    * seed bucket for nothing; a null row identity is the caller's
     * modeling error, as in [[deleteKeys]]).
     * Duplicate keys are fine (semi-join returns each stored row once).
     * Time travel composes with [[rebucket]]: the census uses the spec
@@ -1316,17 +1272,24 @@ object SnapshotStore {
         s"$root is not a bucketed store; point lookups need a bucket " +
           "key — bootstrap with publishBucketed"))
     val keyColumns = bucketKeyCols(keyCol)
-    val baseDf = read(spark, root, v, mergeSchema = true)
+    val baseDf = read(spark, root, v)
     requireKeyFrame(keys, keyColumns, baseDf)
-    val (keysB, touched) = keyFrameCensus(keys, keyCol, nBuckets, keyColumns)
+    // the key frame is point-lookup-sized (it is broadcast), so ONE
+    // collect serves both the touched-bucket census and the broadcast
+    // side: no census shuffle, no second distinct at the caller's action
+    val keyRows = bucketedKeys(keys, keyCol, nBuckets, keyColumns).collect()
+    val touched = keyRows.map(_.getInt(keyColumns.length)).toSet
     val dataCols = baseDf.columns.filterNot(_ == "_bucket")
       .map(col).toSeq
     if (touched.isEmpty) // empty key set: the honest empty answer
       return baseDf.filter(lit(false)).select(dataCols: _*)
+    val keySide = spark.createDataFrame(
+      java.util.Arrays.asList(keyRows.map(r =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq.init)).distinct: _*),
+      keys.schema)
     baseDf
       .filter(col("_bucket").isin(touched.toSeq.map(Int.box): _*))
-      .join(org.apache.spark.sql.functions.broadcast(
-        keysB.select(keyColumns.map(col): _*).distinct()),
+      .join(org.apache.spark.sql.functions.broadcast(keySide),
         keyColumns, "left_semi")
       .select(dataCols: _*)
   }
@@ -1366,9 +1329,14 @@ object SnapshotStore {
       throw new IllegalStateException(
         s"$root is not a bucketed store; bootstrap with publishBucketed"))
     val keyColumns = bucketKeyCols(keyCol)
-    val baseDf = read(spark, root, base, mergeSchema = true)
+    val baseDf = read(spark, root, base)
     requireKeyFrame(keys, keyColumns, baseDf)
-    val (keysB, touched) = keyFrameCensus(keys, keyCol, nBuckets, keyColumns)
+    // the key frame is not broadcast here (a takedown list may be large):
+    // pin it once, census its touched buckets (≤ nBuckets rows collected)
+    val keysB = bucketedKeys(keys, keyCol, nBuckets, keyColumns)
+      .localCheckpoint(eager = false)
+    val touched = keysB.select(col("_bucket")).distinct()
+      .collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return base // empty key set: nothing minted
     val survivors = baseDf
       .filter(col("_bucket").isin(touched.toSeq.map(Int.box): _*))
@@ -1418,10 +1386,10 @@ object SnapshotStore {
     * the batch must still contain every existing column (dropping or
     * retyping a column is a rewrite, not an append), the new files carry
     * the wider schema, and NO existing file is touched — the evolution
-    * is O(batch) like any append. Readers opt into the union view with
-    * `read(mergeSchema = true)` (pre-evolution files surface the new
-    * columns as NULL); a time-traveled pre-evolution version keeps its
-    * own narrower schema.
+    * is O(batch) like any append. Every [[read]] of the new version
+    * serves the union recorded in its schema sidecar (pre-evolution
+    * files surface the new columns as NULL); a time-traveled
+    * pre-evolution version keeps its own narrower schema.
     *
     * TYPE WIDENING (`allowWidening = true`): the batch may carry a
     * WIDER type for an existing column ([[widensTo]]: integer chain,
@@ -1429,8 +1397,8 @@ object SnapshotStore {
     * columns (counts outgrow int, scores move to double). Widen-on-
     * write: the new files carry the wider type, NO existing file is
     * touched, and the version's schema sidecar records the widened
-    * union — which `read(mergeSchema = true)` serves by up-casting the
-    * narrow files at scan (Spark 4 parquet widening reads; parquet
+    * union — which [[read]] serves by up-casting the narrow files at
+    * scan (Spark 4 parquet widening reads; parquet
     * footer-merge would throw CANNOT_MERGE_SCHEMAS on the straddle).
     * NARROWING is always rejected, flag or no flag; widening a
     * BUCKET-KEY column is rejected too (the hash is type-sensitive —
@@ -1447,8 +1415,8 @@ object SnapshotStore {
     val (keyCol, nBuckets) = bucketSpecAt(root, base).getOrElse(
       throw new IllegalStateException(
         s"$root is not a bucketed store; bootstrap with publishBucketed"))
-    // mergeSchema: see merge — deterministic union schema on evolved stores
-    val baseDf = read(spark, root, base, mergeSchema = true)
+    // the recorded union schema on evolved stores — see merge
+    val baseDf = read(spark, root, base)
     if (allowNewColumns)
       require((baseDf.columns.toSet - "_bucket").subsetOf(batch.columns.toSet)
           && !batch.columns.contains("_bucket"),
@@ -1474,7 +1442,7 @@ object SnapshotStore {
       // the batch's whole lineage once more per append (r22, guide §1.2:
       // don't compute things twice; take(1) over an aggregated/joined batch
       // pays its full upstream shuffles)
-      if (!hasStagedDataFiles(staging)) {
+      if (!Files.exists(staging) || dataFilesUnder(staging).isEmpty) {
         deleteRecursively(staging)
         base
       } else {
@@ -1569,40 +1537,23 @@ object SnapshotStore {
     val (specKey, nBuckets) = bucketSpecAt(root, base).getOrElse(
       throw new IllegalStateException(
         s"$root is not a bucketed store; bootstrap with publishBucketed"))
-    def dataFiles(dir: java.nio.file.Path): Int =
-      if (!Files.exists(dir)) 0
-      else {
-        val s = Files.list(dir)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.count { f =>
-            val n = f.getFileName.toString
-            n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-          }
-        } finally s.close()
-      }
     // fragmentation census from the version MANIFEST (the file-listing
-    // source of truth — same rationale as read); directory listing remains
+    // source of truth — same rationale as read); a directory walk remains
     // only as the pre-manifest-version fallback
-    val fragmented = manifestFiles(root, base) match {
-      case Some(files) =>
-        val perBucket = files.groupBy(_.split('/').head).collect {
-          case (d, fs) if d.startsWith("_bucket=") =>
-            d.stripPrefix("_bucket=").toInt -> fs.size
-        }
-        (0 until nBuckets).filter(k =>
-          perBucket.getOrElse(k, 0) > maxFilesPerBucket)
-      case None => (0 until nBuckets).filter(k =>
-        dataFiles(Paths.get(root, s"v$base", s"_bucket=$k")) > maxFilesPerBucket)
-    }
+    val perBucket = manifestFiles(root, base)
+      .getOrElse(dataFilesUnder(Paths.get(root, s"v$base")))
+      .groupBy(_.split('/').head).collect {
+        case (d, fs) if d.startsWith("_bucket=") =>
+          d.stripPrefix("_bucket=").toInt -> fs.size
+      }
+    val fragmented = (0 until nBuckets).filter(k =>
+      perBucket.getOrElse(k, 0) > maxFilesPerBucket)
     if (fragmented.isEmpty) return base
     staged(root) { staging =>
-      // mergeSchema: a fragmented bucket of an EVOLVED store holds files of
-      // both physical schemas; a pick-one-footer read could rewrite the
-      // bucket WITHOUT the evolved column — silent data loss in a "content
-      // identical" layout op. The union schema NULL-fills old files, which
-      // IS the store's read contract after an evolution.
-      val compacted = read(spark, root, base, mergeSchema = true)
+      // a fragmented bucket of an EVOLVED store holds files of both
+      // physical schemas; read's recorded union schema NULL-fills the old
+      // files, so the "content identical" rewrite keeps every column
+      val compacted = read(spark, root, base)
         .filter(col("_bucket").isin(fragmented.map(Int.box): _*))
       compacted
         .repartition(fragmented.size, col("_bucket"))
@@ -1698,7 +1649,7 @@ object SnapshotStore {
     require(keySpec != oldKey || newBuckets != oldN,
       s"rebucket to the current spec (key=$keySpec, buckets=$newBuckets) " +
         "is a no-op; nothing to do")
-    val df = read(spark, root, base, mergeSchema = true).drop("_bucket")
+    val df = read(spark, root, base).drop("_bucket")
     bucketKeyCols(keySpec).foreach(k =>
       require(df.columns.contains(k),
         s"new key column $k is not in the store's schema " +

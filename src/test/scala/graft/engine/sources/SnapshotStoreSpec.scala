@@ -869,7 +869,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     SnapshotStore.append(
       Seq((3L, 3000000030L)).toDF("k", "n"), r,
       allowWidening = true) // v2
-    val cur = SnapshotStore.read(spark, r, mergeSchema = true)
+    val cur = SnapshotStore.read(spark, r)
     assert(cur.schema("n").dataType == LongType,
       "merged read must serve the widened union type")
     assert(cur.select("n").as[Long].collect().toSet ==
@@ -889,7 +889,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
         allowWidening = true)
     }
     // time travel: v1 keeps its own narrow schema
-    assert(SnapshotStore.read(spark, r, 1L, mergeSchema = true)
+    assert(SnapshotStore.read(spark, r, 1L)
       .schema("n").dataType == IntegerType)
     // readSince across the widening serves the union type (append kind)
     val delta = SnapshotStore.readSince(spark, r, 1L)
@@ -901,7 +901,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(d.select("change").as[String].collect().toSeq == Seq("added"))
     // merge on the widened store keeps working (batch cast to the union)
     SnapshotStore.merge(Seq((1L, 111L)).toDF("k", "n"), r) // v3
-    assert(SnapshotStore.read(spark, r, mergeSchema = true)
+    assert(SnapshotStore.read(spark, r)
       .select("n").as[Long].collect().toSet ==
       Set(111L, 20L, 3000000030L))
   }
@@ -924,7 +924,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // path at all
     SnapshotStore.merge(Seq((1L, 3000000030L)).toDF("k", "n"), r,
       allowWidening = true)
-    val w = SnapshotStore.read(spark, r, mergeSchema = true)
+    val w = SnapshotStore.read(spark, r)
     assert(w.schema("n").dataType == LongType)
     assert(w.select("k", "n").as[(Long, Long)].collect().toSet ==
       Set((1L, 3000000030L), (2L, 20L)),
@@ -933,7 +933,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // touched bucket's survivors NULL-fill it in the rewrite
     SnapshotStore.merge(Seq((2L, 21L, 0.7)).toDF("k", "n", "q"), r,
       allowNewColumns = true)
-    val e = SnapshotStore.read(spark, r, mergeSchema = true)
+    val e = SnapshotStore.read(spark, r)
     val byK = e.select(col("k"), col("n"), col("q")).collect()
       .map(rw => rw.getLong(0) -> ((rw.getLong(1),
         if (rw.isNullAt(2)) None else Some(rw.getDouble(2))))).toMap
@@ -970,7 +970,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
       Seq((1L, 111L, 0.9)).toDF("k", "n", "q"), r)
     // v6: rebucket the evolved store 2 -> 8
     SnapshotStore.rebucket(spark, r, 8)
-    val cur = SnapshotStore.read(spark, r, mergeSchema = true)
+    val cur = SnapshotStore.read(spark, r)
     assert(cur.schema("n").dataType == LongType)
     assert(cur.filter(col("_bucket") =!=
       SnapshotStore.bucketExpr("k", 8)).isEmpty)
@@ -1028,7 +1028,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     SnapshotStore.append(
       Seq((3L, "c", 0.5), (4L, "d", 0.7)).toDF("k", "s", "q"),
       r, allowNewColumns = true) // v2, wider
-    val cur = SnapshotStore.read(spark, r, mergeSchema = true)
+    val cur = SnapshotStore.read(spark, r)
     assert(cur.columns.toSet == Set("k", "s", "q", "_bucket"))
     val byK = cur.select(col("k"), col("q")).collect()
       .map(rw => rw.getLong(0) -> (if (rw.isNullAt(1)) None
@@ -1037,7 +1037,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
       3L -> Some(0.5), 4L -> Some(0.7)),
       "pre-evolution rows must read the new column as NULL")
     // time travel: v1 keeps its own 2-column schema even with merging on
-    assert(SnapshotStore.read(spark, r, 1L, mergeSchema = true)
+    assert(SnapshotStore.read(spark, r, 1L)
       .columns.toSet == Set("k", "s", "_bucket"))
   }
 

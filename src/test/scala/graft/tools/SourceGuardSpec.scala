@@ -4,11 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source gate for the two decisions that must live in ONE place: all
+/** Source gate for the decisions that must live in ONE place: all
   * driver-side concurrency goes through `Par.overlap` (cancellable,
-  * job-tagged, structured), and every `graft_*` scratch name comes from
-  * `Artifacts` (whose dead-session GC parses that format back). File
-  * reads only, no Spark. */
+  * job-tagged, structured), every `graft_*` scratch name comes from
+  * `Artifacts` (whose dead-session GC parses that format back), and a
+  * versioned store's files become a DataFrame only through
+  * `SnapshotStore.scan` (manifest-planned, recorded schema). File reads
+  * only, no Spark. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val mainSources: Seq[Path] = {
@@ -44,5 +46,25 @@ class SourceGuardSpec extends AnyFunSuite {
           line.contains("/graft_mlscored/")))
     assert(found.isEmpty, "build scratch dirs with graft.engine.Artifacts." +
       "scratch: " + found.mkString(", "))
+  }
+
+  test("store files are read only by SnapshotStore.scan and read's " +
+      "pre-manifest directory fallback") {
+    val stores = Set("SnapshotStore.scala", "ClusteredStore.scala")
+    val memberDef = raw"^  (?:private(?:\[\w+\])? )?def (\w+)".r
+    val reader = raw"\.read\b(?!\s*\()".r
+    val files = mainSources.filter(p => stores(p.getFileName.toString))
+    assert(files.size == 2)
+    val found = files.flatMap { p =>
+      var member = ""
+      Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (line, i) =>
+        memberDef.findFirstMatchIn(line).foreach(m => member = m.group(1))
+        if (reader.findFirstIn(line).isDefined &&
+            member != "scan" && member != "read") Some(s"$p:${i + 1}")
+        else None
+      }
+    }
+    assert(found.isEmpty, "plan store reads with SnapshotStore.scan / " +
+      "scanFiles, not a DataFrameReader: " + found.mkString(", "))
   }
 }
