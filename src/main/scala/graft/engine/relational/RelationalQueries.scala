@@ -1028,39 +1028,40 @@ object RelationalQueries {
       "hardlinks survive")
 
   /** q103 — Z-order clustered layout + file-level min/max skipping
-    * ([[graft.engine.sources.ZOrder]]): events is clustered on the Morton
-    * interleave of (epoch-micros, value-band) and republished with a
-    * one-row-per-file manifest; a middle-decile box query on BOTH columns
-    * then reads only the files whose min/max envelopes touch the box.
-    * The box bounds derive from each column's global min/max with exact
-    * integer arithmetic (`mn + (mx-mn)*45//100`), so the DuckDB twin
-    * computes the identical box straight off the raw table. `pruned` is
-    * the honest skipping observable — selected files ≤ half the manifest
-    * (measured 3/32 at sf0.01; the conservative bound keeps the oracle
-    * stable under range-partitioner sampling jitter) — and correctness
-    * never depends on the manifest: the box filter re-applies to the
-    * surviving files. */
+    * ([[graft.engine.sources.ClusteredStore]]): events is published as a
+    * store version clustered on the Morton interleave of (epoch-micros,
+    * value-band), with one envelope line per file in its sidecar; a
+    * middle-decile box query on BOTH columns then reads only the files
+    * whose min/max envelopes touch the box. The box bounds derive from
+    * each column's global min/max (read off the sidecar by `tableStats`)
+    * with exact integer arithmetic (`mn + (mx-mn)*45//100`), so the
+    * DuckDB twin computes the identical box straight off the raw table.
+    * `pruned` is the honest skipping observable — selected files ≤ half
+    * the version's files (measured 3/32 at sf0.01 and at sf0.1; the
+    * conservative bound keeps the oracle stable under range-partitioner
+    * sampling jitter) — and correctness never depends on the sidecar:
+    * the box filter re-applies to the surviving files. */
   val q103 = GraftQuery(
     "q103_zorder_skipping",
     (spark, sfDir) => {
       val root = Artifacts.scratch("q103_zorder") + "/tbl"
-      import graft.engine.sources.ZOrder
+      import graft.engine.sources.ClusteredStore
       val ev = Tables.events(spark, sfDir)
         .filter(col("ts").isNotNull && col("value").isNotNull)
         .select(col("event_id"), col("event_type"), col("value"),
           unix_micros(col("ts")).as("ts_us"),
           expr("CAST(FLOOR(value * 1000) AS BIGINT)").as("v_k"))
-      ZOrder.clusterWrite(ev, root, "ts_us", "v_k", nFiles = 32)
-      val Array(mm) = ev.agg(min(col("ts_us")), max(col("ts_us")),
-        min(col("v_k")), max(col("v_k"))).collect()
-      def lo(mn: Long, mx: Long) = mn + (mx - mn) * 45L / 100L
-      def hi(mn: Long, mx: Long) = mn + (mx - mn) * 55L / 100L
-      val (tMn, tMx, vMn, vMx) =
-        (mm.getLong(0), mm.getLong(1), mm.getLong(2), mm.getLong(3))
-      val (box, filesRead, filesTotal) = ZOrder.readBox(spark, root,
-        "ts_us", lo(tMn, tMx), hi(tMn, tMx),
-        "v_k", lo(vMn, vMx), hi(vMn, vMx))
-      box.groupBy(col("event_type"))
+      val cols = Seq("ts_us", "v_k")
+      ClusteredStore.publishClustered(ev, root, cols, nFiles = 32)
+      // each column's global min/max, from the sidecar alone (no job)
+      val (_, mm, _, _) = ClusteredStore.tableStats(spark, root)
+      val box = cols.map { c =>
+        val (mn, mx) = mm(c)
+        (c, mn + (mx - mn) * 45L / 100L, mn + (mx - mn) * 55L / 100L)
+      }
+      val (boxDf, filesRead, filesTotal) =
+        ClusteredStore.readBox(spark, root, box)
+      boxDf.groupBy(col("event_type"))
         .agg(lcount().as("n_box"), dsum(col("value")).as("sum_value"))
         .withColumn("pruned", lit(filesRead * 2 <= filesTotal))
         .orderBy(col("event_type"))
@@ -1080,12 +1081,13 @@ object RelationalQueries {
         AND v_k BETWEEN vmn + (vmx - vmn) * 45 // 100
                     AND vmn + (vmx - vmn) * 55 // 100
       GROUP BY event_type ORDER BY event_type"""),
-    doc = "z-order clustering + manifest min/max skipping: 2-D box reads few files")
+    doc = "z-order clustered store + sidecar min/max skipping: 2-D box reads few files")
 
   /** q108 — N-dimensional z-order (q103's 3-D successor): events is
     * clustered on the 3-way Morton interleave of (epoch-micros,
-    * value-band, user_id) and a 35–45%-decile box on ALL THREE columns is
-    * read through the manifest. The box sits INSIDE the curve's first
+    * value-band, user_id) as a [[graft.engine.sources.ClusteredStore]]
+    * version and a 35–45%-decile box on ALL THREE columns is read through
+    * its sidecar envelopes. The box sits INSIDE the curve's first
     * octant (0.45·span < 2^(spanBits−1), so the top scaled bit is 0 on
     * every axis — a box straddling the midpoint on all axes is Morton's
     * worst case and prunes little at this file granularity; real
@@ -1094,14 +1096,15 @@ object RelationalQueries {
     * derive from each column's global min/max with exact integer
     * arithmetic, so the DuckDB twin computes the identical box straight
     * off the raw table; `pruned` pins that a ~10%-per-axis 3-D box
-    * (~0.1% of the volume) touches at most half the files. Correctness
-    * never depends on the manifest: readBox re-applies the box filter
-    * and reads unknown files unpruned. */
+    * (~0.1% of the volume) touches at most half the files (measured 3/32
+    * at sf0.01, 4/32 at sf0.1). Correctness never depends on the
+    * sidecar: readBox re-applies the box filter and reads files without
+    * an envelope unpruned. */
   val q108 = GraftQuery(
     "q108_zorder_3d",
     (spark, sfDir) => {
       val root = Artifacts.scratch("q108_zorder3") + "/tbl"
-      import graft.engine.sources.ZOrder
+      import graft.engine.sources.ClusteredStore
       val ev = Tables.events(spark, sfDir)
         .filter(col("ts").isNotNull && col("value").isNotNull &&
           col("user_id").isNotNull)
@@ -1109,18 +1112,16 @@ object RelationalQueries {
           col("user_id"),
           unix_micros(col("ts")).as("ts_us"),
           expr("CAST(FLOOR(value * 1000) AS BIGINT)").as("v_k"))
-      ZOrder.clusterWrite(ev, root, Seq("ts_us", "v_k", "user_id"),
-        nFiles = 32, bits = 16)
-      val Array(mm) = ev.agg(min(col("ts_us")), max(col("ts_us")),
-        min(col("v_k")), max(col("v_k")),
-        min(col("user_id")), max(col("user_id"))).collect()
-      def lo(mn: Long, mx: Long) = mn + (mx - mn) * 35L / 100L
-      def hi(mn: Long, mx: Long) = mn + (mx - mn) * 45L / 100L
-      val box = Seq(
-        ("ts_us", lo(mm.getLong(0), mm.getLong(1)), hi(mm.getLong(0), mm.getLong(1))),
-        ("v_k", lo(mm.getLong(2), mm.getLong(3)), hi(mm.getLong(2), mm.getLong(3))),
-        ("user_id", lo(mm.getLong(4), mm.getLong(5)), hi(mm.getLong(4), mm.getLong(5))))
-      val (boxDf, filesRead, filesTotal) = ZOrder.readBox(spark, root, box)
+      val cols = Seq("ts_us", "v_k", "user_id")
+      ClusteredStore.publishClustered(ev, root, cols, nFiles = 32)
+      // each column's global min/max, from the sidecar alone (no job)
+      val (_, mm, _, _) = ClusteredStore.tableStats(spark, root)
+      val box = cols.map { c =>
+        val (mn, mx) = mm(c)
+        (c, mn + (mx - mn) * 35L / 100L, mn + (mx - mn) * 45L / 100L)
+      }
+      val (boxDf, filesRead, filesTotal) =
+        ClusteredStore.readBox(spark, root, box)
       boxDf.groupBy(col("event_type"))
         .agg(lcount().as("n_box"), dsum(col("value")).as("sum_value"))
         .withColumn("pruned", lit(filesRead * 2 <= filesTotal))
@@ -1145,7 +1146,7 @@ object RelationalQueries {
         AND user_id BETWEEN umn + (umx - umn) * 35 // 100
                         AND umn + (umx - umn) * 45 // 100
       GROUP BY event_type ORDER BY event_type"""),
-    doc = "3-D z-order clustering + manifest skipping: 35-45%-decile box " +
+    doc = "3-D z-order clustered store + sidecar skipping: 35-45%-decile box " +
       "on (time, value, user) reads few files")
 
   /** q86 — JSONL sink → source round-trip (the LLM-corpus exchange format,

@@ -6,11 +6,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** [[ZOrder]] clustering THROUGH [[SnapshotStore]] versions (VERDICT r17
-  * item 5): until now clustered layout and versioned storage were
-  * separate roots, so a store column with range locality (timestamps,
-  * doc ids) got no data skipping and a clustered layout got no atomic
-  * versions, time travel, tags, or vacuum.
+/** The engine's ONE clustered layout: [[ZOrder]] clustering THROUGH
+  * [[SnapshotStore]] versions, so a store column with range locality
+  * (timestamps, doc ids) gets data skipping AND a clustered layout gets
+  * atomic versions, time travel, tags, and vacuum.
   *
   * [[publishClustered]] writes a version whose data files are contiguous
   * z-ranges over k BIGINT columns, plus a per-version CLUSTER SIDECAR
@@ -20,7 +19,7 @@ import org.apache.spark.sql.functions._
   * [[readBox]] then serves a k-dimensional box predicate over a version
   * reading only the files whose envelopes touch the box.
   *
-  * Scale shape (the ZOrder story, now versioned):
+  * Scale shape:
   *  - publish = one range-shuffle of the batch (the same one-off cost
   *    class as publishBucketed's hash layout);
   *  - the sidecar is one line per file — at 100 TB with 1 GB files,
@@ -131,7 +130,7 @@ object ClusteredStore {
     * z-clustered WITHIN ITSELF (scaled by its own min/max — sound
     * because z-values are never stored or compared across batches; the
     * sidecar's RAW per-file envelopes are exact filesystem facts
-    * regardless of scaling, ZOrder.appendCluster's argument), written as
+    * regardless of scaling), written as
     * `nFiles` fresh files, and every base file HARDLINKS over with its
     * sidecar envelope line carried verbatim (file names are
     * write-unique, so the lines stay valid). Lineage kind is `append` —
@@ -147,10 +146,11 @@ object ClusteredStore {
     if (alreadyApplied.isDefined) return alreadyApplied.get
     val base = SnapshotStore.currentVersion(root)
     require(base > 0, s"no published version under $root")
-    val (cols, baseBits) = clusterSpecAt(root, base).getOrElse(
+    val baseSidecar = sidecarLines(root, base).getOrElse(
       throw new IllegalStateException(
         s"v$base under $root is not clustered — bootstrap with " +
           "publishClustered"))
+    val (cols, baseBits) = parseSpec(baseSidecar.head)
     cols.foreach(c => require(df.columns.contains(c),
       s"missing cluster column $c"))
     // empty batch = no-op (append's "empty mints no version" posture),
@@ -159,48 +159,28 @@ object ClusteredStore {
     // is metadata-only, so reordering it before the probe adds no work)
     val mm = ZOrder.minMaxCount(df, cols)
     if (ZOrder.rowCount(mm, cols) == 0L) return base
-    val baseSchema = SnapshotStore.versionSchema(root, base)
-    baseSchema.foreach { st =>
-      require(df.columns.toSet == st.fieldNames.toSet,
-        s"append batch columns ${df.columns.sorted.mkString(",")} must " +
-          s"match the store's ${st.fieldNames.sorted.mkString(",")} " +
-          "(clustered appends do not evolve the schema)")
-      // name match alone is not enough (r18 ADVICE): a same-named column
-      // with a drifted TYPE would land silently, and whichever schema the
-      // manifest recorded would then be applied to the OTHER write's
-      // hardlinked files on every later read — types must match the
-      // store's exactly (no widening either: the recorded version schema
-      // is served over ALL files of the version, old and new alike)
-      SnapshotStore.requireMatchingTypes(df.schema, st,
-        "clustered append", allowWidening = false, keyColumns = Seq.empty)
-    }
+    val (baseManifest, baseSchema) = SnapshotStore.versionMeta(root, base)
+    require(df.columns.toSet == baseSchema.fieldNames.toSet,
+      s"append batch columns ${df.columns.sorted.mkString(",")} must " +
+        s"match the store's ${baseSchema.fieldNames.sorted.mkString(",")} " +
+        "(clustered appends do not evolve the schema)")
+    // name match alone is not enough (r18 ADVICE): a same-named column
+    // with a drifted TYPE would land silently, and whichever schema the
+    // manifest recorded would then be applied to the OTHER write's
+    // hardlinked files on every later read — types must match the
+    // store's exactly (no widening either: the recorded version schema
+    // is served over ALL files of the version, old and new alike)
+    SnapshotStore.requireMatchingTypes(df.schema, baseSchema,
+      "clustered append", allowWidening = false, keyColumns = Seq.empty)
     val baseDir = Paths.get(root, s"v$base")
-    val baseManifest = SnapshotStore.manifestFiles(root, base).getOrElse(
-      throw new IllegalStateException(
-        s"clustered v$base under $root has no manifest"))
-    val baseSidecar = new String(
-      Files.readAllBytes(baseDir.resolve(ClusterFile)),
-      StandardCharsets.UTF_8).linesIterator.toSeq
     SnapshotStore.staged(root) { staging =>
       // fresh-file envelopes: everything staged so far IS the batch
       val freshLines = stageZRun(df, staging, cols, baseBits, nFiles, mm)
-      // base carryover: hardlink data files, keep lines. The fallback is
-      // ONLY for filesystems without hardlink support (r18 ADVICE: base and
-      // batch files share this one flat staging dir, so a broad IOException
-      // catch + REPLACE_EXISTING copy would let a base/batch NAME COLLISION
-      // silently overwrite a fresh batch file — dropping batch rows — and
-      // mask real I/O errors as copies; collisions and I/O failures must
-      // fail the append loudly instead)
-      baseManifest.foreach { rel =>
-        val src = baseDir.resolve(rel)
-        val dst = staging.resolve(rel)
-        Files.createDirectories(dst.getParent)
-        try Files.createLink(dst, src)
-        catch {
-          case _: UnsupportedOperationException =>
-            Files.copy(src, dst) // no REPLACE: a collision throws
-        }
-      }
+      // base carryover: link data files, keep lines. Base and batch files
+      // share this one flat staging dir, so a name collision must fail
+      // the append, never overwrite a batch file (linkOrCopy)
+      baseManifest.foreach(rel =>
+        SnapshotStore.linkOrCopy(baseDir.resolve(rel), staging.resolve(rel)))
       Files.write(staging.resolve(ClusterFile),
         (baseSidecar.head +:
           (baseSidecar.tail ++ freshLines).sorted).mkString("\n")
@@ -212,7 +192,7 @@ object ClusteredStore {
       // and the recorded schema is what every later read applies to the
       // hardlinked base files too — mirror append's base-schema posture
       SnapshotStore.writeVersionManifest(staging, kind = "append",
-        schema = baseSchema.getOrElse(df.schema))
+        schema = baseSchema)
       SnapshotStore.commitStaged(root, staging, base, tag,
         op = "clustered append")
     }
@@ -275,7 +255,7 @@ object ClusteredStore {
       tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
         t.getBytes(StandardCharsets.UTF_8)))
       SnapshotStore.writeVersionManifest(staging, kind = "rewrite",
-        schema = SnapshotStore.versionSchema(root, base).getOrElse(df.schema))
+        schema = SnapshotStore.versionMeta(root, base)._2)
       SnapshotStore.commitStaged(root, staging, base, tag,
         op = "clustered compact")
     }
@@ -313,23 +293,19 @@ object ClusteredStore {
     if (alreadyApplied.isDefined) return alreadyApplied.get
     val base = SnapshotStore.currentVersion(root)
     require(base > 0, s"no published version under $root")
-    val (cols, bits) = clusterSpecAt(root, base).getOrElse(
+    val sidecar = sidecarLines(root, base).getOrElse(
       throw new IllegalStateException(
         s"v$base under $root is not clustered — trimBelow prunes by " +
           "sidecar envelopes; use a filtered republish for unclustered " +
           "stores"))
+    val (cols, bits) = parseSpec(sidecar.head)
     val ci = cols.indexOf(column)
     require(ci >= 0,
       s"trim column $column is not a cluster column of v$base " +
         s"(${cols.mkString(",")}) — its envelopes are not in the sidecar")
     val baseDir = Paths.get(root, s"v$base")
-    val manifest = SnapshotStore.manifestFiles(root, base).getOrElse(
-      throw new IllegalStateException(
-        s"clustered v$base under $root has no manifest"))
-    val sidecarLines = new String(
-      Files.readAllBytes(baseDir.resolve(ClusterFile)),
-      StandardCharsets.UTF_8).linesIterator.toSeq
-    val lineByFile = sidecarLines.tail.map(l => l.split("\t")(0) -> l).toMap
+    val (manifest, schema) = SnapshotStore.versionMeta(root, base)
+    val lineByFile = sidecar.tail.map(l => l.split("\t")(0) -> l).toMap
     def envelope(file: String): Option[(Long, Long)] =
       lineByFile.get(file).map { l =>
         val f = l.split("\t")
@@ -341,7 +317,6 @@ object ClusteredStore {
     val straddle = manifest.filterNot(dropped.toSet)
       .filterNot(carried.toSet)
     if (dropped.isEmpty && straddle.isEmpty) return base // nothing below
-    val schema = SnapshotStore.versionSchema(root, base)
     SnapshotStore.staged(root) { staging =>
       val freshLines: Seq[String] =
         if (straddle.isEmpty) Seq.empty
@@ -355,16 +330,8 @@ object ClusteredStore {
           else stageZRun(survivors, staging, cols, bits, nFiles, mm)
         }
       Files.createDirectories(staging) // straddle-free trims stage no data
-      carried.foreach { rel =>
-        val src = baseDir.resolve(rel)
-        val dst = staging.resolve(rel)
-        Files.createDirectories(dst.getParent)
-        try Files.createLink(dst, src)
-        catch {
-          case _: UnsupportedOperationException =>
-            Files.copy(src, dst) // no REPLACE: a collision throws
-        }
-      }
+      carried.foreach(rel =>
+        SnapshotStore.linkOrCopy(baseDir.resolve(rel), staging.resolve(rel)))
       Files.write(staging.resolve(ClusterFile),
         (sidecarHeader(cols, bits) +:
           (carried.map(lineByFile) ++ freshLines).sorted).mkString("\n")
@@ -372,8 +339,7 @@ object ClusteredStore {
       tag.foreach(t => Files.write(staging.resolve(SnapshotStore.TagFile),
         t.getBytes(StandardCharsets.UTF_8)))
       SnapshotStore.writeVersionManifest(staging, kind = "rewrite",
-        schema = schema.getOrElse(
-          SnapshotStore.read(spark, root, base).schema))
+        schema = schema)
       SnapshotStore.commitStaged(root, staging, base, tag,
         op = "clustered trim")
     }
@@ -406,17 +372,53 @@ object ClusteredStore {
 
   /** The cluster spec a version was published with: (cols, bits), or
     * None for versions without a sidecar (not clustered). */
-  def clusterSpecAt(root: String, version: Long): Option[(Seq[String], Int)] = {
-    val f = Paths.get(root, s"v$version", ClusterFile)
+  def clusterSpecAt(root: String, version: Long): Option[(Seq[String], Int)] =
+    sidecarLines(root, version).map(lines => parseSpec(lines.head))
+
+  /** Version `v`'s raw sidecar lines (header first), or None when it
+    * carries no sidecar. */
+  private def sidecarLines(root: String, v: Long): Option[Seq[String]] = {
+    val f = Paths.get(root, s"v$v", ClusterFile)
     if (!Files.exists(f)) None
-    else {
-      val header = new String(Files.readAllBytes(f),
-        StandardCharsets.UTF_8).linesIterator.next()
-      val parts = header.split(";")
-      val cols = parts(0).stripPrefix("cols=").split(",").toSeq
-      val bits = parts(1).stripPrefix("bits=").toInt
-      Some((cols, bits))
-    }
+    else Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
+      .linesIterator.toSeq)
+  }
+
+  private def parseSpec(header: String): (Seq[String], Int) = {
+    val parts = header.split(";")
+    (parts(0).stripPrefix("cols=").split(",").toSeq,
+      parts(1).stripPrefix("bits=").toInt)
+  }
+
+  /** A clustered version as every metadata reader (readBox / countBox /
+    * tableStats / readTopK) plans from it: the resolved version
+    * (`version = 0` → current), its cluster columns, per-file
+    * `(envelopes, rowCount)` from ONE read of its sidecar, and its
+    * manifest. The sidecar line format (`file \t min1 \t max1 … \t
+    * count`) lives in exactly two places: [[stageZRun]] writes it, this
+    * parses it (trimBelow carries raw lines VERBATIM into the next
+    * version's sidecar). Refuses a root with no published version, and
+    * a version without a sidecar: a `what` over an unclustered version
+    * would silently scan every file. */
+  private def clusteredVersion(root: String, version: Long, what: String)
+      : (Long, Seq[String], Map[String, (IndexedSeq[(Long, Long)], Long)],
+        Seq[String]) = {
+    val v = if (version == 0L) SnapshotStore.currentVersion(root) else version
+    require(v > 0, s"no published version under $root")
+    val lines = sidecarLines(root, v).getOrElse(
+      throw new IllegalStateException(
+        s"v$v under $root carries no cluster sidecar — a $what over an " +
+          "unclustered version would silently scan every file; " +
+          "publishClustered the version (or read + filter explicitly if " +
+          "a full scan is intended)"))
+    val (cols, _) = parseSpec(lines.head)
+    val envelopes = lines.tail.map { line =>
+      val f = line.split("\t")
+      f(0) -> ((cols.indices.map(i =>
+        (f(1 + 2 * i).toLong, f(2 + 2 * i).toLong)),
+        f(1 + 2 * cols.length).toLong))
+    }.toMap
+    (v, cols, envelopes, SnapshotStore.versionMeta(root, v)._1)
   }
 
   /** METADATA-ONLY BOX COUNT over a clustered store version — the
@@ -446,17 +448,10 @@ object ClusteredStore {
       box: Seq[(String, Long, Long)],
       version: Long = 0L): (Long, Int, Int) = {
     require(box.nonEmpty, "need at least one box clause")
-    val v = if (version == 0L) SnapshotStore.currentVersion(root) else version
-    val (cols, _) = clusterSpecAt(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"v$v under $root carries no cluster sidecar — a box count over " +
-          "an unclustered version would silently scan every file"))
+    val (v, cols, sidecar, manifest) =
+      clusteredVersion(root, version, "box count")
     box.foreach { case (c, _, _) => require(cols.contains(c),
       s"box column $c is not a cluster column of v$v (${cols.mkString(",")})") }
-    val sidecar = sidecarEnvelopes(root, v, cols)
-    val manifest = SnapshotStore.manifestFiles(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"clustered v$v under $root has no manifest"))
     // per file: disjoint on ANY box column -> 0 rows; inside on EVERY
     // box column -> sidecar count; anything else (straddle, unknown
     // envelope) -> read
@@ -491,23 +486,6 @@ object ClusteredStore {
     (metaCount + readCount, toRead.size, manifest.size)
   }
 
-  /** Parse version `v`'s cluster sidecar into per-file
-    * `(envelopes, rowCount)` — the one reader every metadata consumer
-    * (readBox / countBox / tableStats / readTopK) shares, so the line
-    * format (`file \t min1 \t max1 … \t count`) lives in exactly two
-    * places: [[stageZRun]] writes it, this parses it. (trimBelow keeps
-    * its own raw-line map: it carries surviving lines VERBATIM into the
-    * next version's sidecar.) */
-  private def sidecarEnvelopes(root: String, v: Long, cols: Seq[String])
-      : Map[String, (IndexedSeq[(Long, Long)], Long)] =
-    new String(Files.readAllBytes(Paths.get(root, s"v$v", ClusterFile)),
-      StandardCharsets.UTF_8).linesIterator.drop(1).map { line =>
-      val f = line.split("\t")
-      f(0) -> ((cols.indices.map(i =>
-        (f(1 + 2 * i).toLong, f(2 + 2 * i).toLong)),
-        f(1 + 2 * cols.length).toLong))
-    }.toMap
-
   /** METADATA-ONLY TABLE STATS — exact row count plus per-cluster-column
     * min/max for a version, normally with ZERO file reads: every
     * envelope and count in the sidecar is a fact the writer derived from
@@ -522,15 +500,8 @@ object ClusteredStore {
     * (rows, min/max per cluster column, filesRead, filesTotal). */
   def tableStats(spark: SparkSession, root: String, version: Long = 0L)
       : (Long, Map[String, (Long, Long)], Int, Int) = {
-    val v = if (version == 0L) SnapshotStore.currentVersion(root) else version
-    val (cols, _) = clusterSpecAt(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"v$v under $root carries no cluster sidecar — table stats " +
-          "would silently scan every file; aggregate an explicit read"))
-    val sidecar = sidecarEnvelopes(root, v, cols)
-    val manifest = SnapshotStore.manifestFiles(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"clustered v$v under $root has no manifest"))
+    val (v, cols, sidecar, manifest) =
+      clusteredVersion(root, version, "table-stats probe")
     val (known, unknown) = manifest.partition(sidecar.contains)
     val metaRows = known.map(sidecar(_)._2).sum
     val metaEnvs: Map[String, (Long, Long)] =
@@ -605,19 +576,12 @@ object ClusteredStore {
       k: Int, descending: Boolean = true,
       version: Long = 0L): (DataFrame, Int, Int) = {
     require(k >= 1, s"k must be positive, got $k")
-    val v = if (version == 0L) SnapshotStore.currentVersion(root) else version
-    val (cols, _) = clusterSpecAt(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"v$v under $root carries no cluster sidecar — a top-k over an " +
-          "unclustered version would silently scan every file"))
+    val (v, cols, sidecar, manifest) =
+      clusteredVersion(root, version, "top-k")
     require(cols.contains(column),
       s"top-k column $column is not a cluster column of v$v " +
         s"(${cols.mkString(",")}) — its envelopes are not in the sidecar")
     val ci = cols.indexOf(column)
-    val sidecar = sidecarEnvelopes(root, v, cols)
-    val manifest = SnapshotStore.manifestFiles(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"clustered v$v under $root has no manifest"))
     // unknown-envelope files sort first (read them no matter what):
     // None < Some under Option's ordering, and the known files follow
     // under an EXPLICIT per-direction Ordering — max descending for the
@@ -681,19 +645,10 @@ object ClusteredStore {
       box: Seq[(String, Long, Long)],
       version: Long = 0L): (DataFrame, Int, Int) = {
     require(box.nonEmpty, "need at least one box clause")
-    val v = if (version == 0L) SnapshotStore.currentVersion(root) else version
-    val (cols, _) = clusterSpecAt(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"v$v under $root carries no cluster sidecar — a box read over " +
-          "an unclustered version would silently scan every file; " +
-          "publishClustered the version (or read + filter explicitly " +
-          "if a full scan is intended)"))
+    val (v, cols, sidecar, manifest) =
+      clusteredVersion(root, version, "box read")
     box.foreach { case (c, _, _) => require(cols.contains(c),
       s"box column $c is not a cluster column of v$v (${cols.mkString(",")})") }
-    val sidecar = sidecarEnvelopes(root, v, cols)
-    val manifest = SnapshotStore.manifestFiles(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"clustered v$v under $root has no manifest"))
     val selected = manifest.filter { file =>
       sidecar.get(file) match {
         case None => true // unknown envelope -> must read (fail-safe)

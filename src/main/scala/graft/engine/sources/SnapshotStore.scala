@@ -109,8 +109,8 @@ object SnapshotStore {
     * soundness depends on: `base` (full publish/publishBucketed),
     * `append` (fresh files only, every base file carried by link),
     * `rewrite` (merge/compact replaced files, so a file diff across it
-    * no longer equals a row delta). None for pre-kind legacy versions.
-    * Written with the manifest, atomic with the version. */
+    * no longer equals a row delta). Written with the manifest, atomic
+    * with the version; None only for a path that holds no version. */
   def versionKind(root: String, version: Long): Option[String] = {
     val f = Paths.get(root, s"v$version", KindFile)
     if (!Files.exists(f)) None
@@ -121,7 +121,8 @@ object SnapshotStore {
     * bucketed stores), recorded so a version holding ZERO data files —
     * a full takedown ([[deleteKeys]] of every key) legitimately produces
     * one — stays readable: with no footers to infer from, the sidecar is
-    * the only schema source. None for pre-sidecar legacy versions. */
+    * the only schema source. None when the version records none
+    * ([[versionMeta]] rejects such a version). */
   def versionSchema(root: String, version: Long)
       : Option[org.apache.spark.sql.types.StructType] = {
     val f = Paths.get(root, s"v$version", SchemaFile)
@@ -177,8 +178,8 @@ object SnapshotStore {
   }
 
   /** The data files of a published version AS ITS MANIFEST RECORDS THEM
-    * (relative paths). Empty for pre-manifest versions (legacy fallback:
-    * directory read). */
+    * (relative paths). None when the version has no manifest
+    * ([[versionMeta]] rejects such a version). */
   def manifestFiles(root: String, version: Long): Option[Seq[String]] = {
     val mf = Paths.get(root, s"v$version", ManifestFile)
     if (!Files.exists(mf)) None
@@ -186,12 +187,28 @@ object SnapshotStore {
       .split('\n').toSeq.filter(_.nonEmpty))
   }
 
+  /** A version's manifest files and recorded read schema — the ONE
+    * metadata lookup every reader and writer plans from. Every writer
+    * records both ([[writeVersionManifest]]), atomically with the
+    * version, so a version missing either is damaged (or the path holds
+    * no version): it is rejected loudly, never read another way. */
+  private[sources] def versionMeta(root: String, version: Long)
+      : (Seq[String], org.apache.spark.sql.types.StructType) =
+    (manifestFiles(root, version), versionSchema(root, version)) match {
+      case (Some(files), Some(schema)) => (files, schema)
+      case (files, _) => throw new IllegalStateException(
+        s"v$version under $root has no " +
+          (if (files.isEmpty) ManifestFile else SchemaFile) +
+          ": every published version records its manifest and schema, " +
+          "so this one is damaged or not a store version")
+    }
+
   /** Consistency AUDIT of a version: (manifest entries missing on disk,
     * on-disk data files the manifest does not list). Both empty for a
     * healthy version. The directory walk lives HERE — an explicit audit
     * tool — not in the read path. */
   def auditVersion(root: String, version: Long): (Seq[String], Seq[String]) = {
-    val listed = manifestFiles(root, version).getOrElse(Seq.empty)
+    val listed = versionMeta(root, version)._1
     val onDisk = dataFilesUnder(Paths.get(root, s"v$version"))
     (listed.diff(onDisk), onDisk.diff(listed))
   }
@@ -297,64 +314,32 @@ object SnapshotStore {
     setPointer(root, version)
   }
 
+  /** The flip lock's lease: the age past which a held lock counts as
+    * abandoned, and half the longest a writer waits to acquire. */
+  private val LockLeaseMs = 60000L
+
   /** Mutual exclusion for pointer flips via atomic lock-file create (maps
     * to an atomic PUT-if-absent / create-no-overwrite on HDFS and object
-    * stores that support it). A lock older than `staleMs` is treated as
-    * abandoned by a crashed writer and broken.
+    * stores that support it). A lock older than [[LockLeaseMs]] is
+    * treated as abandoned by a crashed writer and broken.
     *
     * Ownership is tracked by a unique token (pid + thread + nonce) written
     * into the lock file, because stale-breaking makes "I created the file"
-    * insufficient: a holder paused past `staleMs` (GC / FS stall) can have
+    * insufficient: a holder paused past the lease (GC / FS stall) can have
     * its lock broken and re-acquired by another writer. The token lets a
     * revived holder DETECT the loss — it re-enters the acquire loop instead
     * of flipping, and its release never deletes a lock it no longer owns.
-    * `staleMs` must exceed the worst-case critical-section pause; the
-    * section itself is a dir rename + pointer write (milliseconds), and
+    * The lease must exceed the worst-case critical-section pause; every
+    * section is metadata only (a dir rename + pointer write, a cursor or
+    * spec write — milliseconds, no Spark job), and
     * [[advancePointerLocked]]'s forward-only check backstops publish even
-    * if a pathological pause defeats the lease.
-    *
-    * KNOWN CONSTRAINT: the lease duration is a WAITER-side parameter and
-    * is not advertised in the lock file, so every writer of one root
-    * must use the same `staleMs` — a short-lease contender would break a
-    * healthy long-lease holder (ZOrder's 600 s writers and the 60 s
-    * default never share a root today; advertising the lease in the
-    * lock file is the upgrade path if they ever do). Package-private so
-    * the spec can drive the ownership-loss path directly. */
-  private[sources] def withFlipLock[A](root: String, staleMs: Long = 60000L)(body: => A): A =
-    withFlipLockRenewable(root, staleMs)(_ => body)
-
-  /** [[withFlipLock]] for critical sections containing LONG Spark jobs:
-    * the body receives a `renew` callback that (a) FAILS LOUDLY if this
-    * holder's token is no longer on the lock — the lease expired
-    * mid-section and a concurrent writer broke in, so continuing would
-    * interleave two list → write → manifest sequences into silent
-    * corruption — and (b) refreshes the lock mtime, extending the lease.
-    * The lease clock only ticks between `renew` calls: a holder that
-    * renews after every long step can never be judged staler than its
-    * longest SINGLE step, instead of its whole section. */
-  private[sources] def withFlipLockRenewable[A](root: String,
-      staleMs: Long = 60000L)(body: (() => Unit) => A): A = {
+    * if a pathological pause defeats the lease. Package-private so the
+    * spec can drive the ownership-loss path directly. */
+  private[sources] def withFlipLock[A](root: String)(body: => A): A = {
     Files.createDirectories(Paths.get(root))
     val lock = Paths.get(root, ".CURRENT.lock")
     val token = s"${ProcessHandle.current().pid()}-" +
       s"${Thread.currentThread().getId}-${System.nanoTime()}"
-    val renew: () => Unit = () => {
-      def lost(cause: Throwable = null): Nothing =
-        throw new IllegalStateException(
-          s"flip lock $lock lost mid-section (lease expired and a " +
-            "concurrent writer broke it); aborting before touching " +
-            "shared state — re-run this publish", cause)
-      if (!readLockToken(lock).contains(token)) lost()
-      // the touch can race a breaker renaming the lock away — a raw
-      // NoSuchFileException here IS the lost-lock condition, and a
-      // post-touch re-read closes the check-then-touch window where the
-      // touch would land on (and silently extend) a successor's fresh
-      // lock while we proceed as if renewed
-      try Files.setLastModifiedTime(lock,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      catch { case e: Exception => lost(e) }
-      if (!readLockToken(lock).contains(token)) lost()
-    }
     var waitedMs = 0L
     // the lock exists and is someone else's: age it, maybe break it,
     // else back off (shared by the primary and degraded acquire paths)
@@ -363,11 +348,11 @@ object SnapshotStore {
       val age = try System.currentTimeMillis() -
         Files.getLastModifiedTime(lock).toMillis
       catch { case _: java.nio.file.NoSuchFileException => 0L }
-      if (age > staleMs) breakStaleLock(lock, observed)
+      if (age > LockLeaseMs) breakStaleLock(lock, observed)
       else {
         Thread.sleep(10)
         waitedMs += 10
-        require(waitedMs < staleMs * 2, s"could not acquire flip lock $lock")
+        require(waitedMs < LockLeaseMs * 2, s"could not acquire flip lock $lock")
       }
     }
     // STAMP-AT-BIRTH: the token is written to a private tmp file and the
@@ -388,13 +373,13 @@ object SnapshotStore {
           try {
             // re-stamp the inode's mtime at EVERY attempt: link(2) copies
             // the inode (whose mtime was set when stampTmp was written,
-            // possibly up to 2*staleMs ago after a long contention wait),
+            // possibly up to 2 leases ago after a long contention wait),
             // so without this a winner that waited W ms would acquire a
             // lock already W ms into its lease — immediately breakable by
             // the next contender while the winner is inside its critical
             // section (mutual-exclusion hole). Touching stampTmp just
             // before the link makes the lease start at acquisition, same
-            // as the degraded createFile path and renew().
+            // as the degraded createFile path.
             Files.setLastModifiedTime(stampTmp,
               java.nio.file.attribute.FileTime.fromMillis(
                 System.currentTimeMillis()))
@@ -430,7 +415,7 @@ object SnapshotStore {
         // lock now — re-enter the acquire loop rather than flip under a
         // lock we lost
         if (readLockToken(lock).contains(token)) {
-          try return body(renew)
+          try return body
           finally {
             // release only what we still own; deleting a successor's
             // fresh lock would let a third writer in alongside them
@@ -483,7 +468,7 @@ object SnapshotStore {
   /** Read the current (or a pinned) snapshot, planned from the version's
     * own metadata ([[scan]]): its manifest names the files and its schema
     * sidecar is the schema, so building the DataFrame starts no Spark
-    * job. Pre-manifest versions fall back to a directory read.
+    * job.
     *
     * The recorded schema is the read half of SCHEMA EVOLUTION (see
     * [[append]]'s `allowNewColumns` / `allowWidening`): a version whose
@@ -496,11 +481,8 @@ object SnapshotStore {
   def read(spark: SparkSession, root: String, version: Long = 0L): DataFrame = {
     val v = if (version > 0) version else currentVersion(root)
     require(v > 0, s"no published version under $root")
-    manifestFiles(root, v) match {
-      case Some(files) => scan(spark, root, v, files)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(s"$root/v$v")
-    }
+    val (files, schema) = versionMeta(root, v)
+    scanFiles(spark, s"$root/v$v", files, schema)
   }
 
   /** THE way a versioned store's files become a DataFrame: `files`
@@ -508,23 +490,10 @@ object SnapshotStore {
     * the version's recorded schema ([[versionSchema]]), through a
     * [[ManifestFileIndex]] — no footer job, no listing job, and a
     * zero-file subset is simply the empty answer with that schema (a
-    * full-takedown [[deleteKeys]] produces one). A pre-sidecar legacy
-    * version has no recorded schema: its files are footer-merged, and
-    * an empty one cannot be read at all. */
+    * full-takedown [[deleteKeys]] produces one). */
   private[sources] def scan(spark: SparkSession, root: String, version: Long,
-      files: Seq[String]): DataFrame = {
-    val dir = s"$root/v$version"
-    versionSchema(root, version) match {
-      case Some(schema) => scanFiles(spark, dir, files, schema)
-      case None =>
-        if (files.isEmpty) throw new IllegalStateException(
-          s"v$version under $root has no files to read and no schema " +
-            "sidecar (pre-sidecar legacy version?) — cannot read an " +
-            "empty version without a recorded schema")
-        spark.read.option("mergeSchema", "true").option("basePath", dir)
-          .parquet(files.map(f => s"$dir/$f"): _*)
-    }
-  }
+      files: Seq[String]): DataFrame =
+    scanFiles(spark, s"$root/v$version", files, versionMeta(root, version)._2)
 
   /** [[scan]] with the schema in hand — also the read-back of a staged
     * write, whose schema is the written frame's. `_bucket` is a
@@ -553,13 +522,12 @@ object SnapshotStore {
     * the interval rewrites files and would make the file diff overcount —
     * that is ENFORCED, not advised: every version in `(from, to]` must
     * carry the `append` lineage kind ([[versionKind]], stamped by every
-    * writer since the kind was introduced), and a `rewrite`/`base`/
-    * legacy-unkinded version in the interval throws, directing the
-    * caller to [[diff]] — a silent overcount becomes a loud error.
-    * Cost is
-    * O(delta) data read + O(manifest) metadata — the incremental-consumer
-    * primitive (a backfill or downstream sync reads only what it has not
-    * yet consumed, never the corpus). `fromVersion = 0` means "nothing
+    * writer), and a `rewrite`/`base`/unkinded version in the interval
+    * throws, directing the caller to [[diff]] — a silent overcount
+    * becomes a loud error. Cost is O(delta) data read + O(manifest)
+    * metadata — the incremental-consumer primitive (a backfill or
+    * downstream sync reads only what it has not yet consumed, never the
+    * corpus). `fromVersion = 0` means "nothing
     * consumed yet" and returns the full current snapshot. Returns None
     * when the delta holds no files: nothing new to consume. */
   def readSince(spark: SparkSession, root: String, fromVersion: Long,
@@ -580,15 +548,14 @@ object SnapshotStore {
             "equals the row delta) — use diff() for row-level deltas " +
             "across rewrites")
     }
-    def files(v: Long) = manifestFiles(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"readSince needs a manifest on v$v under $root (pre-manifest " +
-          "versions cannot be delta-read)"))
-    val seen = files(fromVersion).toSet // Set: linear delta, not Seq#diff's O(n*m)
-    val delta = files(to).filterNot(seen)
+    // Set: linear delta, not Seq#diff's O(n*m)
+    val seen = versionMeta(root, fromVersion)._1.toSet
+    val (toFiles, schema) = versionMeta(root, to)
+    val delta = toFiles.filterNot(seen)
     // the delta's own appends may straddle an evolution: the to-version's
     // recorded union schema serves them all (widened types too — see read)
-    if (delta.isEmpty) None else Some(scan(spark, root, to, delta))
+    if (delta.isEmpty) None
+    else Some(scanFiles(spark, s"$root/v$to", delta, schema))
   }
 
   /** Persisted per-consumer cursor: the highest version `consumer` has
@@ -911,16 +878,36 @@ object SnapshotStore {
     }
   }
 
-  /** Hardlink every data file of `base`'s bucket directories into
+  /** Carry one base-version file into a staging dir — THE carry policy
+    * of every writer that builds a version from its base's files
+    * ([[carryoverBuckets]], ClusteredStore's append and trim). A
+    * hardlink (metadata only, inode shared); a plain copy only where the
+    * filesystem cannot link: UnsupportedOperationException, or a
+    * FileSystemException such as a cross-device link. A name collision
+    * (FileAlreadyExistsException) is NOT a link failure — the staging
+    * dir already holds a fresh file of that name — so it throws, and no
+    * copy ever replaces a file: a silent overwrite would drop the fresh
+    * file's rows. NOTE the inode-equality audits (q95 reuse_ok, q138/x70
+    * no_rewrite) assume the link path succeeded — true on POSIX-local
+    * storage; on a no-link fs the data stays correct, only the
+    * zero-copy claim degrades. */
+  private[sources] def linkOrCopy(src: java.nio.file.Path,
+      dst: java.nio.file.Path): Unit = {
+    Files.createDirectories(dst.getParent)
+    try Files.createLink(dst, src)
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException => throw e
+      case _: UnsupportedOperationException |
+          _: java.nio.file.FileSystemException => Files.copy(src, dst)
+    }
+  }
+
+  /** [[linkOrCopy]] every file of `base`'s bucket directories into
     * `staging`, except buckets where `skip(k)` — the metadata-only
     * carryover shared by [[merge]]/[[append]]/[[compact]]/[[deleteKeys]].
-    * Falls back to a real copy wherever linking fails: filesystems
-    * without hardlink support surface FileSystemException (not just
-    * UnsupportedOperationException), e.g. cross-device links. NOTE the
-    * inode-equality audits (q95 reuse_ok, q138/x70 no_rewrite) assume
-    * the link path succeeded — true on POSIX-local storage; on a
-    * no-link fs the data stays correct, only the zero-copy claim
-    * degrades. */
+    * EVERY file of a bucket dir is carried (parquet checksums too), not
+    * just the manifest's: q95's reuse audit compares whole per-bucket
+    * listings across versions. */
   private def carryoverBuckets(root: String, base: Long,
       staging: java.nio.file.Path, nBuckets: Int,
       skip: Int => Boolean): Unit =
@@ -928,17 +915,9 @@ object SnapshotStore {
       val src = Paths.get(root, s"v$base", s"_bucket=$k")
       if (Files.exists(src)) {
         val dst = staging.resolve(s"_bucket=$k")
-        Files.createDirectories(dst)
         val stream = Files.list(src)
         try stream.iterator().forEachRemaining { f =>
-          if (!Files.isDirectory(f)) {
-            val t = dst.resolve(f.getFileName)
-            try Files.createLink(t, f)
-            catch {
-              case _: UnsupportedOperationException | _: java.io.IOException =>
-                Files.copy(f, t, StandardCopyOption.REPLACE_EXISTING)
-            }
-          }
+          if (!Files.isDirectory(f)) linkOrCopy(f, dst.resolve(f.getFileName))
         } finally stream.close()
       }
     }
@@ -1538,10 +1517,8 @@ object SnapshotStore {
       throw new IllegalStateException(
         s"$root is not a bucketed store; bootstrap with publishBucketed"))
     // fragmentation census from the version MANIFEST (the file-listing
-    // source of truth — same rationale as read); a directory walk remains
-    // only as the pre-manifest-version fallback
-    val perBucket = manifestFiles(root, base)
-      .getOrElse(dataFilesUnder(Paths.get(root, s"v$base")))
+    // source of truth — same rationale as read)
+    val perBucket = versionMeta(root, base)._1
       .groupBy(_.split('/').head).collect {
         case (d, fs) if d.startsWith("_bucket=") =>
           d.stripPrefix("_bucket=").toInt -> fs.size
@@ -1721,8 +1698,8 @@ object SnapshotStore {
     * base of the next [[readSince]] file-diff) plus everything after it,
     * so only versions strictly below every cursor are reapable. Without
     * the floor, an aggressive vacuum reaps a slow q138/x70 consumer's
-    * cursor version and its next readSince throws ("needs a manifest on
-    * v_from") forcing a full resync — loud, but the store was already
+    * cursor version and its next readSince throws ("v_from … has no
+    * _GRAFT_MANIFEST") forcing a full resync — loud, but the store was already
     * persisting exactly the retention floor the consumer needed.
     * `ignoreConsumers` is the escape hatch for ABANDONED cursors: named
     * consumers are excluded from the floor (and an operator should then
@@ -1752,7 +1729,7 @@ object SnapshotStore {
     * bounded by the staged file count (a maintenance-path cost).
     * `stagingStaleMs` must exceed the longest time a FINISHED staging
     * can sit waiting on a contended flip lock (the acquire loop allows
-    * 2x the lock's staleMs, i.e. 120 s at defaults — hence the 300 s
+    * 2x the lock's 60 s lease, i.e. 120 s — hence the 300 s
     * default with margin): a reap racing a waiting publisher would
     * half-delete a dir the publisher is about to commit.
     * [[commitStaged]] backstops even that misconfiguration — it

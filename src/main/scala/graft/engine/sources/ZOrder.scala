@@ -1,11 +1,11 @@
 package graft.engine.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Z-order clustered layout with file-level min/max data skipping, over
-  * ANY number of BIGINT cluster columns.
+/** Z-curve math for the clustered store layout ([[ClusteredStore]]),
+  * over ANY number of BIGINT cluster columns.
   *
   * THE multi-dimensional pruning story for a 100 TB fact table: a table
   * sorted on one column prunes range predicates on THAT column only — a
@@ -18,37 +18,13 @@ import org.apache.spark.sql.types.LongType
   * column is tight, and a box query intersects only the few files whose
   * envelopes touch the box.
   *
-  * Scale posture (100 TB lens):
-  *   - [[clusterWrite]] is one range-shuffle over the input — the same
-  *     one-off cost as any sorted/bucketed publish ([[SnapshotStore]],
-  *     `Bucketed.publishTable`); recurring box queries then read
-  *     `O(files touching the box)` instead of `O(all files)`.
-  *   - The manifest holds ONE row per data file (path + per-column
-  *     min/max + row count). At 100 TB with 1 GB files that is ~10^5
-  *     rows — the same order as the driver's own `FileIndex`, and the
-  *     same thing Delta/Iceberg keep in their manifests. [[readBox]]
-  *     collects only the SELECTED paths (bounded by the file count, and
-  *     by the pruning itself), never data rows.
-  *   - Skipping is an optimization, never a correctness dependency: the
-  *     box filter is re-applied to the surviving files, selection keeps
-  *     every file whose envelope intersects the box, AND any data file
-  *     the manifest does not know (a publish torn between its data and
-  *     manifest steps, or an external writer's in-flight files) is
-  *     included UNPRUNED — unknown-envelope files must be read, and the
-  *     re-applied filter keeps the result exact.
-  *   - Scaling to [0, 2^bits) uses the GLOBAL min/max (2k longs to the
-  *     driver, one aggregate) — equi-width in value space; the range
-  *     shuffle then makes files equi-COUNT in z space, so skew in any
-  *     column degrades file envelopes gracefully instead of producing
-  *     empty/huge files.
-  *
-  * Writer concurrency: [[clusterWrite]] and [[appendCluster]] serialize
-  * through the same lock-file discipline as [[SnapshotStore]] publishes
-  * (`withFlipLock`), so two appends cannot interleave their
-  * list → write → diff → manifest sequences and attribute each other's
-  * in-flight files; a crash mid-publish leaves at worst data files the
-  * manifest misses, which [[readBox]] reads unpruned (above) and the
-  * next [[appendCluster]] adopts into the manifest.
+  * Scaling to [0, 2^bits) uses the GLOBAL min/max (2k longs to the
+  * driver, one aggregate, [[minMaxCount]]) — equi-width in value space;
+  * the range shuffle in `ClusteredStore.stageZRun` then makes files
+  * equi-COUNT in z space, so skew in any column degrades file envelopes
+  * gracefully instead of producing empty/huge files. Writing, the
+  * per-file envelopes, pruning and versioning all live in
+  * [[ClusteredStore]]; this object holds no I/O.
   *
   * No counterpart in the reference (its only layout control is
   * `repartition(1)`, `train_model.py:57`); modeled on the public
@@ -76,11 +52,6 @@ object ZOrder {
     }
   }
 
-  /** Two-column Morton interleave (the k = 2 special case, kept for the
-    * common time × value layout). */
-  def interleave(a: Column, b: Column, bits: Int): Column =
-    interleaveN(Seq(a, b), bits)
-
   /** Scale a long column to [0, 2^bits) given its global min/max.
     * Exact integer arithmetic (double division would lose precision on
     * epoch-microsecond magnitudes): rebase to `v - min`, then drop low
@@ -101,7 +72,7 @@ object ZOrder {
   }
 
   /** Per-file envelope aggregates. min/max are cast to LongType so the
-    * sidecar path accepts the same column types [[zExpr]] does (r18
+    * sidecar path accepts the same column types [[zExprScaled]] does (r18
     * ADVICE): the documented contract is "BIGINT-castable", and an INT
     * cluster column satisfies it for clustering but would make
     * ClusteredStore's `Row.getLong` sidecar extraction throw
@@ -139,195 +110,4 @@ object ZOrder {
       scaled(col(c), mm.getLong(2 * i), mm.getLong(2 * i + 1), bits)
     }, bits)
   }
-
-  private[sources] def zExpr(df: DataFrame, cols: Seq[String], bits: Int): Column =
-    zExprScaled(minMaxCount(df, cols), cols, bits)
-
-  /** Cluster `df` on the Z-curve of k BIGINT columns and publish to
-    * `root`: data parquet under `root/data` (≈ `nFiles` files, each a
-    * contiguous z-range) plus a one-row-per-file min/max manifest under
-    * `root/manifest` (columns `min_i`/`max_i` in `cols` order). The
-    * manifest pass re-reads the written files once (write-time cost,
-    * amortized over every later skipped read) and derives per-file stats
-    * from the files themselves — it can never disagree with the data.
-    * Serialized against other writers by the publish lock (see object
-    * doc). */
-  def clusterWrite(df: DataFrame, root: String, cols: Seq[String],
-      nFiles: Int, bits: Int): Unit = {
-    require(nFiles >= 1, "nFiles must be positive")
-    val spark = df.sparkSession
-    val z = zExpr(df, cols, bits)
-    // renew between the two Spark jobs: the lease clock then bounds ONE
-    // job, not the whole publish — a write outlasting the lease fails
-    // loudly at the renew instead of silently sharing the manifest step
-    // with whoever broke the lock
-    SnapshotStore.withFlipLockRenewable(root, staleMs = 600000L) { renew =>
-      df.withColumn("_z", z)
-        .repartitionByRange(nFiles, col("_z"))
-        .sortWithinPartitions(col("_z"))
-        .drop("_z")
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/data")
-      renew()
-      spark.read.parquet(s"$root/data")
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(statExprs(cols).head, statExprs(cols).tail: _*)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/manifest")
-    }
-  }
-
-  def clusterWrite(df: DataFrame, root: String, colA: String, colB: String,
-      nFiles: Int, bits: Int = 16): Unit =
-    clusterWrite(df, root, Seq(colA, colB), nFiles, bits)
-
-  /** APPEND a new batch to an existing clustered layout: the batch is
-    * z-clustered WITHIN ITSELF (scaled by its own min/max — see below),
-    * written as `nFiles` additional data files, and the manifest gains
-    * one row per new file. This is the steady-state write path: a 100 TB
-    * table takes daily appends, each clustered within itself; a full
-    * [[clusterWrite]] re-cluster is the rare maintenance action (same
-    * cost class as q104's compact) once accumulated appends overlap the
-    * base layout enough to degrade skipping.
-    *
-    * Why per-batch scaling is sound: the z-value exists ONLY to cluster
-    * rows within one write — it is never stored and never compared
-    * across batches. Skipping reads use the manifest's RAW per-file
-    * min/max envelopes, which are exact filesystem facts regardless of
-    * how any batch was scaled. A time-ordered append stream even helps:
-    * each day's files envelope that day's timestamp range, so time-range
-    * boxes prune whole appends.
-    *
-    * The new-file set is found by diffing the data listing against the
-    * manifest's known files (driver-side path lists, bounded by file
-    * count — the same metadata a FileIndex holds); stats are computed by
-    * reading ONLY the new files. The whole list → write → diff →
-    * manifest sequence runs under the publish lock, so a concurrent
-    * append cannot have ITS in-flight files attributed to this batch's
-    * manifest pass; the diff also adopts any orphan files a previously
-    * crashed (torn) publish left behind, healing the manifest. */
-  def appendCluster(df: DataFrame, root: String, cols: Seq[String],
-      nFiles: Int, bits: Int): Unit = {
-    require(nFiles >= 1, "nFiles must be positive")
-    val spark = df.sparkSession
-    val z = zExpr(df, cols, bits)
-    SnapshotStore.withFlipLockRenewable(root, staleMs = 600000L) { renew =>
-      val known = spark.read.parquet(s"$root/manifest")
-        .select(col("file")).collect().map(_.getString(0)).toSet
-      df.withColumn("_z", z)
-        .repartitionByRange(nFiles, col("_z"))
-        .sortWithinPartitions(col("_z"))
-        .drop("_z")
-        .write.mode(SaveMode.Append).parquet(s"$root/data")
-      // a write that outlasted the lease must NOT proceed to the
-      // list-diff-manifest sequence: whoever broke the lock may be
-      // mid-append, and our diff would adopt THEIR in-flight files
-      renew()
-      // fresh files come from a DIRECTORY LISTING (metadata-only —
-      // scanning the table to discover its own new files would defeat the
-      // append's cost model); names are write-unique, so suffix-matching
-      // against the manifest's URIs is exact
-      val fresh = unknownDataFiles(root, known)
-      require(fresh.nonEmpty, "append produced no new files (empty batch?)")
-      spark.read.parquet(fresh.toIndexedSeq: _*)
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(statExprs(cols).head, statExprs(cols).tail: _*)
-        .coalesce(1)
-        .write.mode(SaveMode.Append).parquet(s"$root/manifest")
-    }
-  }
-
-  def appendCluster(df: DataFrame, root: String, colA: String, colB: String,
-      nFiles: Int, bits: Int = 16): Unit =
-    appendCluster(df, root, Seq(colA, colB), nFiles, bits)
-
-  /** RE-CLUSTER maintenance: rebuild the layout into a FRESH root from
-    * the current data. [[appendCluster]] keeps each batch clustered
-    * within itself, so accumulated appends overlap the base layout in z
-    * space and box reads stop skipping (ZOrderSpec pins the decay and
-    * this repair); recluster is the rare whole-table rewrite that
-    * restores one global clustering — the OPTIMIZE/rewrite action of the
-    * public lakehouse formats, and the same cost class as a bootstrap
-    * [[clusterWrite]].
-    *
-    * It writes to `dstRoot` (must not exist) rather than rewriting
-    * `srcRoot` in place: an in-place overwrite would either read and
-    * clobber the same directory in one job or leave a window where the
-    * manifest lists files that no longer exist — a fresh root keeps every
-    * reader of the old layout correct for as long as the caller keeps it,
-    * and cutting consumers over to `dstRoot` is a catalog pointer swap
-    * (publish the path through [[SnapshotStore]] if an atomic pointer is
-    * needed). Reads the data files, not the manifest, so a torn append's
-    * orphans are carried along (same fail-safe stance as [[readBox]]). */
-  def recluster(spark: SparkSession, srcRoot: String, dstRoot: String,
-      cols: Seq[String], nFiles: Int, bits: Int): Unit = {
-    require(!java.nio.file.Files.exists(java.nio.file.Paths.get(dstRoot)),
-      s"recluster destination $dstRoot already exists; " +
-        "pick a fresh root and swap consumers over after the rewrite")
-    clusterWrite(spark.read.parquet(s"$srcRoot/data"), dstRoot, cols,
-      nFiles, bits)
-  }
-
-  /** Data files on disk that the given manifest file set does not know,
-    * as absolute paths (driver-side listing, bounded by file count). */
-  private def unknownDataFiles(root: String, known: Set[String]): Array[String] = {
-    val d = java.nio.file.Paths.get(root, "data")
-    if (!java.nio.file.Files.exists(d)) Array.empty
-    else {
-      val s = java.nio.file.Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        val knownNames = known.map(u => u.substring(u.lastIndexOf('/') + 1))
-        s.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.endsWith(".parquet") && !n.startsWith(".") &&
-              !knownNames.contains(n)
-          }
-          .map(_.toAbsolutePath.toString).toArray
-      } finally s.close()
-    }
-  }
-
-  /** k-dimensional box read (`lo_i <= col_i <= hi_i` for every clause)
-    * with manifest skipping. Returns the filtered DataFrame plus
-    * (filesRead, filesTotal) — the honest pruning observable callers pin
-    * in contract booleans. The driver holds only the selected path list.
-    *
-    * Fail-safe against a torn publish: the manifest is the PRUNING
-    * authority, but never a correctness authority — data files the
-    * manifest does not list (crash between the data and manifest steps,
-    * or a concurrent writer's in-flight files on a deployment ignoring
-    * the lock) are read UNPRUNED, counted in both filesRead and
-    * filesTotal, and the re-applied box filter keeps the result exact. */
-  def readBox(spark: SparkSession, root: String,
-      box: Seq[(String, Long, Long)]): (DataFrame, Int, Int) = {
-    require(box.nonEmpty, "need at least one box clause")
-    val manifest = spark.read.parquet(s"$root/manifest")
-    // .distinct on both path sets: a duplicated manifest row (possible
-    // only if a writer ever outlives its lease AND ignores the renew
-    // abort) must degrade to a redundant stat, never to a file scanned
-    // twice — double-reading a path would silently double its rows
-    val knownFiles = manifest.select(col("file")).collect()
-      .map(_.getString(0)).distinct
-    val pruneFilter = box.zipWithIndex.map { case ((_, lo, hi), i) =>
-      col(s"max_$i") >= lo && col(s"min_$i") <= hi
-    }.reduce(_ && _)
-    val selected = manifest.filter(pruneFilter)
-      .select(col("file")).collect().map(_.getString(0)).distinct
-    val unknown = unknownDataFiles(root, knownFiles.toSet)
-    val paths = selected ++ unknown
-    val filesTotal = knownFiles.length + unknown.length
-    val boxFilter = box.map { case (c, lo, hi) => col(c).between(lo, hi) }
-      .reduce(_ && _)
-    val data =
-      if (paths.isEmpty)
-        spark.read.parquet(s"$root/data").filter(lit(false))
-      else spark.read.parquet(paths.toIndexedSeq: _*).filter(boxFilter)
-    (data, paths.length, filesTotal)
-  }
-
-  def readBox(spark: SparkSession, root: String,
-      colA: String, loA: Long, hiA: Long,
-      colB: String, loB: Long, hiB: Long): (DataFrame, Int, Int) =
-    readBox(spark, root, Seq((colA, loA, hiA), (colB, loB, hiB)))
 }

@@ -106,7 +106,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     Files.createDirectories(java.nio.file.Paths.get(r))
     val lock = java.nio.file.Paths.get(r, ".CURRENT.lock")
     val out = SnapshotStore.withFlipLock(r) {
-      // simulate: this holder stalled past staleMs, another writer broke
+      // simulate: this holder stalled past its lease, another writer broke
       // the lock and re-acquired with its own token
       Files.write(lock, "new-owner-token".getBytes)
       42
@@ -119,83 +119,6 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // and with ownership intact, release must clean up normally
     SnapshotStore.withFlipLock(r) { 1 }
     assert(!Files.exists(lock), "owned lock must be released")
-  }
-
-  test("lease renewal under live contention: a renewing slow publisher is " +
-      "never broken in on; a holder that stops renewing aborts loudly") {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val r = root()
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(r))
-    // Part 1: the slow publisher's section (6 steps, renew after each)
-    // far exceeds its own staleMs lease, but no single gap does — a rival
-    // running the SAME break-if-stale acquire loop must wait it out, not
-    // interleave. The shared counter proves mutual exclusion held.
-    val depth = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var maxDepth = 0
-    def section[A](body: => A): A = {
-      val d = depth.incrementAndGet()
-      depth.synchronized { maxDepth = math.max(maxDepth, d) }
-      try body finally depth.decrementAndGet()
-    }
-    val slow = Future {
-      SnapshotStore.withFlipLockRenewable(r, staleMs = 300L) { renew =>
-        section {
-          (1 to 6).foreach { _ => Thread.sleep(50); renew() }
-          "slow-done"
-        }
-      }
-    }
-    Thread.sleep(60) // slow publisher acquires first
-    val rival = Future {
-      // the acquire loop gives up after 2x staleMs of waiting — retry,
-      // as a real publisher would, until the holder releases
-      var res: Option[String] = None
-      while (res.isEmpty)
-        try res = Some(SnapshotStore.withFlipLock(r, staleMs = 400L)(
-          section { "rival-done" }))
-        catch { case _: IllegalArgumentException => () }
-      res.get
-    }
-    assert(Await.result(slow, 30.seconds) == "slow-done",
-      "renewal must keep the lease alive through the whole section")
-    assert(Await.result(rival, 30.seconds) == "rival-done")
-    assert(maxDepth == 1,
-      "rival must never share the critical section with a renewing holder")
-
-    // Part 2: the SAME slow-publisher shape WITHOUT renewal: the lease
-    // expires mid-section, the rival legitimately breaks in, and the
-    // holder's next renew() must abort with the lost-lock error BEFORE it
-    // can touch shared state (the silent-double-flip hazard this lease
-    // machinery exists to prevent).
-    val reachedPastRenew = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val stale = Future {
-      intercept[IllegalStateException] {
-        SnapshotStore.withFlipLockRenewable(r, staleMs = 150L) { renew =>
-          Thread.sleep(600) // stall past the lease with NO renew
-          renew()           // the breaker has taken the lock: abort here
-          reachedPastRenew.set(true)
-          "unreachable"
-        }
-      }
-    }
-    Thread.sleep(100) // let the stale holder acquire, then stall
-    val breaker = Future {
-      var res: Option[String] = None
-      while (res.isEmpty)
-        try res = Some(SnapshotStore.withFlipLock(r, staleMs = 150L) {
-          Thread.sleep(30); "breaker-done"
-        })
-        catch { case _: IllegalArgumentException => () }
-      res.get
-    }
-    assert(Await.result(breaker, 30.seconds) == "breaker-done",
-      "the rival must break the expired lease and proceed")
-    val ex = Await.result(stale, 30.seconds)
-    assert(ex.getMessage.contains("lost mid-section"), ex.getMessage)
-    assert(!reachedPastRenew.get(),
-      "the lapsed holder must abort at renew(), never reach shared state")
   }
 
   test("failed publish leaves the pointer on the last good version; next publish recovers") {
@@ -383,6 +306,37 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val (missing, unknown) = SnapshotStore.auditVersion(r, 1L)
     assert(missing.isEmpty && unknown.nonEmpty,
       s"audit must surface the alien file, got ($missing, $unknown)")
+    // a version missing its manifest or its schema is damaged: every
+    // reader rejects it loudly, naming the version and the missing file
+    SnapshotStore.publish(spark.range(10).toDF("id"), r)
+    Files.delete(java.nio.file.Paths.get(r, "v1", "_GRAFT_MANIFEST"))
+    Files.delete(java.nio.file.Paths.get(r, "v2", "_GRAFT_SCHEMA"))
+    for ((v, f) <- Seq(1L -> "_GRAFT_MANIFEST", 2L -> "_GRAFT_SCHEMA")) {
+      val e = intercept[IllegalStateException](SnapshotStore.read(spark, r, v))
+      assert(e.getMessage.contains(s"v$v under") && e.getMessage.contains(f),
+        e.getMessage)
+    }
+    intercept[IllegalStateException](SnapshotStore.auditVersion(r, 1L))
+  }
+
+  test("linkOrCopy: a name collision throws, planted bytes unchanged") {
+    val dir = Files.createTempDirectory("graft-carry")
+    val src = dir.resolve("base/part-0.parquet")
+    val dst = dir.resolve("staging/part-0.parquet")
+    Files.createDirectories(src.getParent)
+    Files.createDirectories(dst.getParent)
+    Files.write(src, "base rows".getBytes)
+    Files.write(dst, "fresh batch rows".getBytes)
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      SnapshotStore.linkOrCopy(src, dst)
+    }
+    assert(new String(Files.readAllBytes(dst)) == "fresh batch rows",
+      "a collision must never overwrite the staged file")
+    // a free name carries by hardlink: the same inode, no copy
+    val free = dir.resolve("staging/sub/part-1.parquet")
+    SnapshotStore.linkOrCopy(src, free)
+    assert(Files.getAttribute(free, "unix:ino") ==
+      Files.getAttribute(src, "unix:ino"))
   }
 
   test("vacuum reaps stranded .staging-* dirs past the staleness horizon") {

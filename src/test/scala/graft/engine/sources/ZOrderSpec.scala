@@ -4,12 +4,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession.spark
 
-/** ZOrder contracts: bit interleaving against a reference Scala
-  * implementation, exact scaling bounds, skipped-read == full-scan
-  * equality on a deterministic grid, and the pruning observable the
-  * layout exists for — a small box touches a small fraction of files,
-  * while the same data sorted on ONE column alone reads every file for
-  * the same box. */
+/** ZOrder's z-curve math: bit interleaving against a reference Scala
+  * implementation and exact scaling bounds. The layout it drives (box
+  * reads equal to full scans, and pruned) is pinned in
+  * ClusteredStoreSpec. */
 class ZOrderSpec extends AnyFunSuite {
   import spark.implicits._
 
@@ -22,7 +20,7 @@ class ZOrderSpec extends AnyFunSuite {
     val cases = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 0L), (0L, 3L),
       (0xFFFFL, 0xFFFFL), (0xAAAAL, 0x5555L), (12345L, 54321L))
     val got = cases.toDF("a", "b")
-      .select(ZOrder.interleave(col("a"), col("b"), 16).as("z"))
+      .select(ZOrder.interleaveN(Seq(col("a"), col("b")), 16).as("z"))
       .collect().map(_.getLong(0))
     val want = cases.map { case (a, b) => refInterleave(a, b, 16) }
     assert(got.toSeq == want)
@@ -49,136 +47,6 @@ class ZOrderSpec extends AnyFunSuite {
     assert(const.forall(_ == 0L))
   }
 
-  test("skipped box read == full-scan box filter, and it prunes") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zorder-spec").toString
-    // deterministic 256x256 grid, one row per cell
-    val grid = spark.range(256L * 256L)
-      .select((col("id") / 256).cast("long").as("a"),
-        pmod(col("id"), lit(256L)).as("b"),
-        col("id").as("payload"))
-    ZOrder.clusterWrite(grid, root, "a", "b", nFiles = 16, bits = 8)
-
-    val (boxDf, read, total) = ZOrder.readBox(spark, root,
-      "a", 100L, 130L, "b", 100L, 130L)
-    val wantRows = grid
-      .filter(col("a").between(100, 130) && col("b").between(100, 130))
-      .select(col("payload")).collect().map(_.getLong(0)).toSet
-    val gotRows = boxDf.select(col("payload")).collect()
-      .map(_.getLong(0)).toSet
-    assert(gotRows == wantRows)
-    assert(gotRows.size == 31 * 31)
-    assert(total == 16)
-    assert(read < total, s"box read $read of $total files — no pruning")
-    // the exact file count is RangePartitioner-sampling dependent: the
-    // sampler's seed folds in the JVM-global RDD id, so WHICH suites ran
-    // before this one moves the estimated file boundaries by a file or
-    // two (observed 8 alone vs 9 after the r16 store specs). The
-    // contract is "the 12% x 12% box prunes most of the layout"; the
-    // half-the-files reading with quantization slack pins that without
-    // re-flaking on every suite reordering.
-    assert(read * 2 <= total + 2,
-      s"12% x 12% box should touch ~half the files, read $read/$total")
-
-    // the single-column-sorted counterfactual: same data sorted on `a`
-    // only — every file spans ALL of b, so the same box prunes nothing
-    // on the b dimension and (a-range ~12%) still demonstrates why the
-    // SECOND dimension needs the curve: restrict the box to full a-range
-    // so only b filters, and a-sorted layout must read every file.
-    val sortedRoot = java.nio.file.Files
-      .createTempDirectory("graft-asorted-spec").toString
-    grid.repartitionByRange(16, col("a")).sortWithinPartitions(col("a"))
-      .write.parquet(s"$sortedRoot/data")
-    spark.read.parquet(s"$sortedRoot/data")
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(min(col("a")).as("min_0"), max(col("a")).as("max_0"),
-        min(col("b")).as("min_1"), max(col("b")).as("max_1"),
-        count(lit(1)).as("n_rows"))
-      .coalesce(1).write.parquet(s"$sortedRoot/manifest")
-    val (_, readSorted, totalSorted) = ZOrder.readBox(spark, sortedRoot,
-      "a", 0L, 255L, "b", 100L, 130L)
-    val (_, readZ, _) = ZOrder.readBox(spark, root,
-      "a", 0L, 255L, "b", 100L, 130L)
-    assert(readSorted == totalSorted,
-      "a-sorted layout cannot skip for a b-only box")
-    assert(readZ < totalSorted,
-      s"z-layout skips for the same b-only box ($readZ/$totalSorted)")
-  }
-
-  test("appendCluster: per-batch clustering keeps envelopes exact, " +
-      "skipped read == full scan over the union, time-boxes prune appends") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zorder-append").toString
-    // base: a in [0,99] (day 1); appends: a in [100,199], [200,299] —
-    // DIFFERENT per-batch min/max, so per-batch scaling is exercised
-    def day(lo: Long): org.apache.spark.sql.DataFrame =
-      spark.range(100L * 64L).select(
-        (lit(lo) + col("id") / 64).cast("long").as("a"),
-        pmod(col("id"), lit(64L)).as("b"),
-        (col("id") + lo * 1000).as("payload"))
-    ZOrder.clusterWrite(day(0L), root, "a", "b", nFiles = 4, bits = 8)
-    ZOrder.appendCluster(day(100L), root, "a", "b", nFiles = 4, bits = 8)
-    ZOrder.appendCluster(day(200L), root, "a", "b", nFiles = 4, bits = 8)
-    val all = day(0L).unionByName(day(100L)).unionByName(day(200L))
-    // full-union correctness through the skipped path
-    val (boxDf, _, total) = ZOrder.readBox(spark, root,
-      "a", 0L, 299L, "b", 0L, 63L)
-    assert(total == 12, s"3 batches x 4 files, got $total manifest rows")
-    assert(boxDf.count() == all.count())
-    // a one-day time box must prune the other days' files entirely
-    val (d2, readD2, _) = ZOrder.readBox(spark, root,
-      "a", 100L, 199L, "b", 0L, 63L)
-    assert(readD2 <= 4, s"day-2 box should read only day-2's files, read $readD2")
-    val want = all.filter(col("a").between(100, 199))
-      .select(col("payload")).collect().map(_.getLong(0)).toSet
-    val got = d2.select(col("payload")).collect().map(_.getLong(0)).toSet
-    assert(got == want)
-    // and the 2-D box still prunes WITHIN the day
-    val (_, readSmall, _) = ZOrder.readBox(spark, root,
-      "a", 110L, 120L, "b", 10L, 20L)
-    assert(readSmall < 4, s"within-day 2-D box should skip, read $readSmall")
-  }
-
-  test("recluster: repairs append-decayed pruning in a fresh root, " +
-      "content-identically") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zorder-reclu").toString
-    // batches that INTERLEAVE in b (same a range): each append is
-    // clustered within itself, so every batch's files overlap every
-    // other's in z space and a b-box must read files from all batches
-    def slice(off: Long): org.apache.spark.sql.DataFrame =
-      spark.range(100L * 16L).select(
-        (col("id") / 16).cast("long").as("a"),
-        (pmod(col("id"), lit(16L)) * 4 + off).as("b"),
-        (col("id") * 10 + off).as("payload"))
-    ZOrder.clusterWrite(slice(0L), root, "a", "b", nFiles = 4, bits = 8)
-    ZOrder.appendCluster(slice(1L), root, "a", "b", nFiles = 4, bits = 8)
-    ZOrder.appendCluster(slice(2L), root, "a", "b", nFiles = 4, bits = 8)
-    val (decayDf, readDecayed, totalDecayed) = ZOrder.readBox(spark, root,
-      "a", 10L, 20L, "b", 0L, 7L)
-    assert(totalDecayed == 12)
-    val dst = root + "-v2"
-    ZOrder.recluster(spark, root, dst, Seq("a", "b"), nFiles = 12, bits = 8)
-    val (recluDf, readReclustered, totalReclustered) =
-      ZOrder.readBox(spark, dst, "a", 10L, 20L, "b", 0L, 7L)
-    assert(totalReclustered == 12)
-    // same rows through both layouts
-    val want = decayDf.select(col("payload")).collect()
-      .map(_.getLong(0)).toSet
-    assert(recluDf.select(col("payload")).collect()
-      .map(_.getLong(0)).toSet == want, "recluster is layout-only")
-    assert(want.nonEmpty)
-    // the rewritten global clustering must prune strictly better than the
-    // decayed append pile for the same box
-    assert(readReclustered < readDecayed,
-      s"expected repair: decayed read $readDecayed files, " +
-        s"reclustered read $readReclustered")
-    // destination must be fresh
-    intercept[IllegalArgumentException] {
-      ZOrder.recluster(spark, root, dst, Seq("a", "b"), 4, 8)
-    }
-  }
-
   test("3-D interleave matches the reference bit walk and stays positive") {
     def ref3(a: Long, b: Long, c: Long, bits: Int): Long =
       (0 until bits).foldLeft(0L) { (acc, i) =>
@@ -199,79 +67,9 @@ class ZOrderSpec extends AnyFunSuite {
     }
   }
 
-  test("3-D clusterWrite + box read == full-scan filter, and it prunes") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zorder-3d").toString
-    // 32x32x32 lattice, one row per cell
-    val grid = spark.range(32L * 32L * 32L).select(
-      (col("id") / 1024).cast("long").as("a"),
-      (pmod(col("id"), lit(1024L)) / 32).cast("long").as("b"),
-      pmod(col("id"), lit(32L)).as("c"),
-      col("id").as("payload"))
-    ZOrder.clusterWrite(grid, root, Seq("a", "b", "c"), nFiles = 16, bits = 5)
-    // box inside one octant (top bit 0 on every axis): Morton locality
-    // confines its z-range to 1/8 of the curve. A box STRADDLING the
-    // midpoint on every axis is the curve's worst case and prunes little
-    // at this file granularity — position boxes off high-bit boundaries
-    // (the q108 oracle does the same).
-    val (boxDf, read, total) = ZOrder.readBox(spark, root,
-      Seq(("a", 2L, 9L), ("b", 2L, 9L), ("c", 2L, 9L)))
-    val want = grid.filter(col("a").between(2, 9) &&
-        col("b").between(2, 9) && col("c").between(2, 9))
-      .select(col("payload")).collect().map(_.getLong(0)).toSet
-    val got = boxDf.select(col("payload")).collect().map(_.getLong(0)).toSet
-    assert(got == want)
-    assert(got.size == 8 * 8 * 8)
-    assert(total == 16)
-    assert(read * 2 <= total,
-      s"25%-per-axis octant-interior 3-D box should skip, read $read/$total")
-  }
-
   test("scaled fails loudly on span overflow instead of degrading to 0") {
     intercept[ArithmeticException] {
       ZOrder.scaled(col("v"), Long.MinValue + 1, Long.MaxValue - 1, 16)
     }
-  }
-
-  test("torn publish: a data file missing from the manifest is read unpruned") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zorder-torn").toString
-    val grid = spark.range(1000L)
-      .select(col("id").as("a"), col("id").as("b"), col("id").as("payload"))
-    ZOrder.clusterWrite(grid, root, "a", "b", nFiles = 4, bits = 8)
-    // simulate a crash between the data and manifest steps of an append:
-    // new rows land in data/ but never make the manifest
-    val orphan = spark.range(5000L, 5010L)
-      .select(col("id").as("a"), col("id").as("b"), col("id").as("payload"))
-    orphan.coalesce(1).write.mode("append").parquet(s"$root/data")
-    // a box that the MANIFEST would prune to zero files still finds the
-    // orphan rows, because unknown files are always read
-    val (df, read, total) = ZOrder.readBox(spark, root,
-      "a", 5000L, 6000L, "b", 5000L, 6000L)
-    assert(df.count() == 10L)
-    assert(total == 5 && read >= 1, s"orphan must be counted, $read/$total")
-    // and the next append ADOPTS the orphan into the manifest (self-heal)
-    ZOrder.appendCluster(
-      spark.range(9000L, 9100L).select(col("id").as("a"), col("id").as("b"),
-        col("id").as("payload")),
-      root, "a", "b", nFiles = 2, bits = 8)
-    val manifest = spark.read.parquet(s"$root/manifest")
-    assert(manifest.count() == 7L, "4 base + 1 adopted orphan + 2 appended")
-    val (df2, _, total2) = ZOrder.readBox(spark, root,
-      "a", 5000L, 6000L, "b", 5000L, 6000L)
-    assert(df2.count() == 10L && total2 == 7)
-  }
-
-  test("empty box selects zero files and returns zero rows") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-zorder-empty").toString
-    val grid = spark.range(1000L)
-      .select(col("id").as("a"), col("id").as("b"), col("id").as("payload"))
-    ZOrder.clusterWrite(grid, root, "a", "b", nFiles = 4, bits = 8)
-    val (df, read, total) = ZOrder.readBox(spark, root,
-      "a", 5000L, 6000L, "b", 0L, 10L)
-    assert(read == 0 && total == 4)
-    assert(df.count() == 0L)
-    assert(df.schema.fieldNames.toSeq == Seq("a", "b", "payload"))
   }
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * job-tagged, structured), every `graft_*` scratch name comes from
   * `Artifacts` (whose dead-session GC parses that format back), and a
   * versioned store's files become a DataFrame only through
-  * `SnapshotStore.scan` (manifest-planned, recorded schema). File reads
-  * only, no Spark. */
+  * `SnapshotStore.scanFiles` (manifest-planned, recorded schema) — the
+  * store sources hold no DataFrameReader at all. File reads only, no
+  * Spark. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val mainSources: Seq[Path] = {
@@ -48,22 +49,12 @@ class SourceGuardSpec extends AnyFunSuite {
       "scratch: " + found.mkString(", "))
   }
 
-  test("store files are read only by SnapshotStore.scan and read's " +
-      "pre-manifest directory fallback") {
-    val stores = Set("SnapshotStore.scala", "ClusteredStore.scala")
-    val memberDef = raw"^  (?:private(?:\[\w+\])? )?def (\w+)".r
-    val reader = raw"\.read\b(?!\s*\()".r
-    val files = mainSources.filter(p => stores(p.getFileName.toString))
-    assert(files.size == 2)
-    val found = files.flatMap { p =>
-      var member = ""
-      Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (line, i) =>
-        memberDef.findFirstMatchIn(line).foreach(m => member = m.group(1))
-        if (reader.findFirstIn(line).isDefined &&
-            member != "scan" && member != "read") Some(s"$p:${i + 1}")
-        else None
-      }
-    }
+  test("the store sources hold no DataFrameReader") {
+    val stores =
+      Set("SnapshotStore.scala", "ClusteredStore.scala", "ZOrder.scala")
+    val found = hits(raw"\.read\b(?!\s*\()",
+      (p, _) => !stores(p.getFileName.toString))
+    assert(mainSources.count(p => stores(p.getFileName.toString)) == 3)
     assert(found.isEmpty, "plan store reads with SnapshotStore.scan / " +
       "scanFiles, not a DataFrameReader: " + found.mkString(", "))
   }
