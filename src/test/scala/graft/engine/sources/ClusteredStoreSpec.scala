@@ -40,34 +40,6 @@ class ClusteredStoreSpec extends AnyFunSuite {
     val expected = grid.filter(col("x").between(100L, 300L) &&
       col("y").between(0L, 500L))
     assert(df.exceptAll(expected).isEmpty && expected.exceptAll(df).isEmpty)
-    // a box outside the data selects zero files and keeps the schema
-    val (none, readNone, totalNone) = ClusteredStore.readBox(spark, r,
-      Seq(("x", 5000L, 6000L)))
-    assert(readNone == 0 && totalNone == 16 && none.count() == 0L)
-    assert(none.schema.fieldNames.toSeq == Seq("id", "x", "y", "grp"))
-
-    // k = 3: a 32x32x32 lattice, one row per cell, and a box inside one
-    // octant (top bit 0 on every axis), where Morton locality confines
-    // its z-range to 1/8 of the curve. A box STRADDLING the midpoint on
-    // every axis is the curve's worst case and prunes little at this
-    // file granularity (the q108 box sits off it the same way).
-    val r3 = root()
-    val lattice = spark.range(32L * 32L * 32L).select(
-      (col("id") / 1024).cast("long").as("a"),
-      (pmod(col("id"), lit(1024L)) / 32).cast("long").as("b"),
-      pmod(col("id"), lit(32L)).as("c"),
-      col("id").as("payload"))
-    ClusteredStore.publishClustered(lattice, r3, Seq("a", "b", "c"),
-      nFiles = 16, bits = 5)
-    val (box3, read3, total3) = ClusteredStore.readBox(spark, r3,
-      Seq(("a", 2L, 9L), ("b", 2L, 9L), ("c", 2L, 9L)))
-    val want3 = lattice.filter(col("a").between(2, 9) &&
-        col("b").between(2, 9) && col("c").between(2, 9))
-      .select(col("payload")).collect().map(_.getLong(0)).toSet
-    val got3 = box3.select(col("payload")).collect().map(_.getLong(0)).toSet
-    assert(got3 == want3 && got3.size == 8 * 8 * 8)
-    assert(total3 == 16 && read3 * 2 <= total3,
-      s"25%-per-axis octant-interior 3-D box should skip, read $read3/$total3")
   }
 
   test("time travel: a box pinned to v1 answers from v1's content and " +
@@ -144,10 +116,6 @@ class ClusteredStoreSpec extends AnyFunSuite {
     assert(total == 16 && read < total)
     val expected = grid.filter(col("x").between(100L, 300L))
     assert(df.exceptAll(expected).isEmpty && expected.exceptAll(df).isEmpty)
-    // a box over the batch's own x-range reads only the batch's files
-    val (_, readB, _) = ClusteredStore.readBox(spark, r,
-      Seq(("x", 1000L, 1999L)))
-    assert(readB <= 8, s"the batch box should read only its 8 files, read $readB")
     // incremental consumer: the file diff is exactly the appended rows
     val delta = SnapshotStore.readSince(spark, r, 1L, 2L).get
     assert(delta.exceptAll(b).isEmpty && b.exceptAll(delta).isEmpty)
