@@ -46,7 +46,9 @@ object Bucketed {
     * inputPartitions × nBuckets small files (guide §6). Aligned, the
     * layout is exactly one file per non-empty bucket at full
     * write-parallelism up to nBuckets — BucketedSpec pins the
-    * one-file-per-bucket invariant. */
+    * one-file-per-bucket invariant. Unlike `SnapshotStore.writeBuckets`
+    * (capped at the shuffle width), this must keep
+    * `repartition(nBuckets, keys)`: `bucketBy` needs partition i = bucket i. */
   def publishTable(df: DataFrame, table: String, nBuckets: Int,
       keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "at least one bucket column")

@@ -840,6 +840,36 @@ object SnapshotStore {
         s"got (key=$keyCol, buckets=$nBuckets)")
   }
 
+  /** THE bucketed write of every writer below: hashing the `_bucket`
+    * value lands each bucket wholly in one task, so each bucket dir gets
+    * one file (without it partitionBy wrote tasks x buckets files: 5120
+    * for a 160-bucket publish in the r18 rehearsal). At most the shuffle
+    * width of tasks (GraftSession: the core count; a cluster configures
+    * it; `defaultParallelism` can read 2 while executors are still being
+    * added): one task per bucket spent a 50-row, 16-bucket append on
+    * per-task overhead, 161–178 ms vs 107–113 ms at 4 tasks on 4 cores. */
+  private def writeBuckets(df: DataFrame, staging: java.nio.file.Path,
+      buckets: Int): Unit = {
+    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(math.min(buckets, width), col("_bucket"))
+      .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
+      .parquet(staging.toString)
+  }
+
+  /** The buckets `bucketed` holds rows for, in ONE job and no shuffle
+    * (`distinct().collect()` runs two under AQE): each partition returns
+    * a bitset of nBuckets bits, ORed on the driver. */
+  private def touchedBuckets(bucketed: DataFrame, nBuckets: Int): Set[Int] = {
+    val i = bucketed.schema.fieldIndex("_bucket")
+    val all = new java.util.BitSet(nBuckets)
+    bucketed.queryExecution.toRdd.mapPartitions { rows =>
+      val bits = new java.util.BitSet(nBuckets)
+      rows.foreach(r => bits.set(r.getInt(i)))
+      Iterator(bits)
+    }.collect().foreach(all.or)
+    all.stream().toArray.toSet
+  }
+
   /** Bootstrap (or fully rewrite) a BUCKETED store: rows land in
     * `_bucket = pmod(xxhash64(key), n)` partition directories, and the
     * (key, n) spec is recorded at the root so every later [[merge]]
@@ -856,17 +886,7 @@ object SnapshotStore {
     writeBucketSpec(root, keyCol, nBuckets)
     staged(root) { staging =>
       val bucketed = df.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
-      // ONE file per bucket directory: without the repartition, partitionBy
-      // fans every upstream task across every bucket dir (tasks x buckets
-      // files — the r18 scale rehearsal measured 5120 files for a 160-
-      // bucket publish, and merge/readKeys costs tracking FILE COUNT
-      // instead of touched data). Hash-repartitioning on _bucket lands
-      // each bucket wholly in one task; bucket SIZE stays the caller's
-      // knob (nBuckets), exactly the bucketed-table contract.
-      bucketed
-        .repartition(nBuckets, col("_bucket"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-        .parquet(staging.toString)
+      writeBuckets(bucketed, staging, nBuckets)
       tag.foreach(t => Files.write(staging.resolve(TagFile),
         t.getBytes(StandardCharsets.UTF_8)))
       writeSpecSidecar(staging, keyCol, nBuckets)
@@ -1136,9 +1156,7 @@ object SnapshotStore {
     // nulls group together in groupBy exactly as the old
     // groupBy(keys).count() dup check grouped them.
     val touched: Set[Int] =
-      if (keysAreDistinct)
-        batchB.select(col("_bucket")).distinct()
-          .collect().map(_.getInt(0)).toSet
+      if (keysAreDistinct) touchedBuckets(batchB, nBuckets)
       else {
         val census = batchB.groupBy(keyColumns.map(col): _*)
           .agg(org.apache.spark.sql.functions.count(lit(1)).as("_c"),
@@ -1164,10 +1182,7 @@ object SnapshotStore {
       // the semantics every read serves for the untouched buckets
       val merged = survivors.unionByName(batchB,
         allowMissingColumns = allowNewColumns)
-      merged // one file per touched bucket (see publishBucketed)
-        .repartition(math.max(1, touched.size), col("_bucket"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-        .parquet(staging.toString)
+      writeBuckets(merged, staging, touched.size)
       tag.foreach(t => Files.write(staging.resolve(TagFile),
         t.getBytes(StandardCharsets.UTF_8)))
       // carry untouched buckets over as hardlinks ([[carryoverBuckets]])
@@ -1311,20 +1326,16 @@ object SnapshotStore {
     val baseDf = read(spark, root, base)
     requireKeyFrame(keys, keyColumns, baseDf)
     // the key frame is not broadcast here (a takedown list may be large):
-    // pin it once, census its touched buckets (≤ nBuckets rows collected)
+    // pin it once, census its touched buckets (≤ nBuckets bits collected)
     val keysB = bucketedKeys(keys, keyCol, nBuckets, keyColumns)
       .localCheckpoint(eager = false)
-    val touched = keysB.select(col("_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    val touched = touchedBuckets(keysB, nBuckets)
     if (touched.isEmpty) return base // empty key set: nothing minted
     val survivors = baseDf
       .filter(col("_bucket").isin(touched.toSeq.map(Int.box): _*))
       .join(keysB.select(keyColumns.map(col): _*), keyColumns, "left_anti")
     staged(root) { staging =>
-      survivors // one file per touched bucket (see publishBucketed)
-        .repartition(math.max(1, touched.size), col("_bucket"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-        .parquet(staging.toString)
+      writeBuckets(survivors, staging, touched.size)
       tag.foreach(t => Files.write(staging.resolve(TagFile),
         t.getBytes(StandardCharsets.UTF_8)))
       carryoverBuckets(root, base, staging, nBuckets, skip = touched)
@@ -1411,10 +1422,7 @@ object SnapshotStore {
       allowWidening = allowWidening, keyColumns = bucketKeyCols(keyCol))
     staged(root) { staging =>
       val batchB = batch.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
-      batchB // one file per touched bucket (see publishBucketed)
-        .repartition(nBuckets, col("_bucket"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-        .parquet(staging.toString)
+      writeBuckets(batchB, staging, nBuckets)
       // empty batch = no-op: nothing minted (see merge). Detected from the
       // staged write itself — a partitioned write of zero rows stages no
       // part-files — instead of a separate isEmpty probe job, which re-ran
@@ -1494,8 +1502,8 @@ object SnapshotStore {
     *    FileIndex holds) — no data job;
     *  - only fragmented buckets are READ (the `_bucket` partition filter
     *    prunes at the directory level) and rewritten, one output file per
-    *    bucket (`repartition(k, _bucket)` maps each bucket to exactly one
-    *    task partition — a shuffle of the fragmented subset only);
+    *    bucket over at most the shuffle width of tasks ([[writeBuckets]]
+    *    — a shuffle of the fragmented subset only);
     *  - everything else carries over as hardlinks, and the flip happens
     *    under the same lock + stale-base check as merge, so a concurrent
     *    publisher can't be silently overwritten (the compacted output is
@@ -1532,10 +1540,7 @@ object SnapshotStore {
       // files, so the "content identical" rewrite keeps every column
       val compacted = read(spark, root, base)
         .filter(col("_bucket").isin(fragmented.map(Int.box): _*))
-      compacted
-        .repartition(fragmented.size, col("_bucket"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-        .parquet(staging.toString)
+      writeBuckets(compacted, staging, fragmented.size)
       carryoverBuckets(root, base, staging, nBuckets,
         skip = fragmented.contains)
       writeSpecSidecar(staging, specKey, nBuckets)
@@ -1579,10 +1584,7 @@ object SnapshotStore {
       require(df.columns.contains(k), s"missing key column $k"))
     val bucketed = df.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
     staged(root) { staging =>
-      bucketed // one file per bucket (see publishBucketed)
-        .repartition(nBuckets, col("_bucket"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-        .parquet(staging.toString)
+      writeBuckets(bucketed, staging, nBuckets)
       tag.foreach(t => Files.write(staging.resolve(TagFile),
         t.getBytes(StandardCharsets.UTF_8)))
       writeSpecSidecar(staging, keyCol, nBuckets)
@@ -1634,10 +1636,7 @@ object SnapshotStore {
     val rebucketed = df
       .withColumn("_bucket", bucketExpr(keySpec, newBuckets))
     val v = staged(root) { staging =>
-      rebucketed
-        .repartition(newBuckets, col("_bucket"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
-        .parquet(staging.toString)
+      writeBuckets(rebucketed, staging, newBuckets)
       writeSpecSidecar(staging, keySpec, newBuckets)
       writeVersionManifest(staging, kind = "rewrite",
         schema = rebucketed.schema)

@@ -2,12 +2,12 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Main-source twin of the test-only TestBridge shim:
-  * `SparkContext.listenerBus` is `private[spark]`, and the ProfileQuery
-  * dev tool needs a real drain before reading listener-collected job
-  * metrics (a fixed sleep undercounts on a loaded host — ADVICE r21).
-  * Declared under `org.apache.spark` the standard way; only the
-  * public-shaped `waitUntilEmpty` is touched.
+/** The one listener-bus drain, for the ProfileQuery dev tool and the
+  * tests: `SparkContext.listenerBus` is `private[spark]`, and both read
+  * listener-collected metrics, which need a real drain first (a fixed
+  * sleep undercounts on a loaded host — ADVICE r21). Declared under
+  * `org.apache.spark` the standard way; only the public-shaped
+  * `waitUntilEmpty` is touched.
   */
 object ListenerBridge {
   def drainListenerBus(sc: SparkContext, timeoutMs: Long = 30000L): Unit =

@@ -2,7 +2,7 @@ package graft.engine
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.graft.TestBridge
+import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -70,7 +70,7 @@ class HotKeyStressSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       action
-      TestBridge.drainListenerBus(spark.sparkContext)
+      ListenerBridge.drainListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     max.get()
   }
@@ -89,7 +89,7 @@ class HotKeyStressSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       action
-      TestBridge.drainListenerBus(spark.sparkContext)
+      ListenerBridge.drainListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     total.get()
   }
@@ -107,7 +107,7 @@ class HotKeyStressSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       action
-      TestBridge.drainListenerBus(spark.sparkContext)
+      ListenerBridge.drainListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     max.get()
   }

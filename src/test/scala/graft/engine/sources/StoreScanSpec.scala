@@ -1,14 +1,12 @@
 package graft.engine.sources
 
 import java.nio.file.Paths
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession.spark
 import graft.tools.PlanAudit
+import graft.tools.SparkEvents.jobsDuring
 
 /** Store reads are planned from the version's own metadata: the
   * manifest names the files, the schema sidecar is the schema. So
@@ -25,23 +23,6 @@ class StoreScanSpec extends AnyFunSuite {
       s"${System.nanoTime()}/tbl"
     SnapshotStore.deleteRecursively(Paths.get(r).getParent)
     r
-  }
-
-  /** Spark jobs started while `f` runs (bus drained before counting). */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    ListenerBridge.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = f
-      ListenerBridge.drainListenerBus(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
   }
 
   private def docs(lo: Long, hi: Long) =

@@ -22,7 +22,7 @@ object PlanCaptureUtil {
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = synchronized { buf += funcName -> qe }
     def snapshot(spark: SparkSession): Seq[(String, QueryExecution)] = {
-      org.apache.spark.graft.TestBridge.drainListenerBus(spark.sparkContext)
+      org.apache.spark.graft.ListenerBridge.drainListenerBus(spark.sparkContext)
       synchronized(buf.toVector)
     }
   }
