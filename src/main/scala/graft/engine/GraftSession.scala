@@ -23,7 +23,8 @@ object GraftSession {
 
   /** The shared conf block — exists exactly once so the session
     * invariants cannot fork between the driver surfaces, the jobs and the
-    * test session (which adds only its own app name and warehouse dir).
+    * test session (which adds only its own app name and a throwaway
+    * warehouse dir for specs of Spark's own catalog tables).
     *
     * Two invariants size Spark's per-query fixed costs to this engine's
     * working set:
@@ -54,10 +55,27 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** Runs `body` with the session conf `settings` applied, then puts
+    * each key back as it was: a key that was unset is unset again, not
+    * pinned to its default. The restore runs also when `body` throws, so
+    * a failed query never leaves the shared session re-dialed for every
+    * later one. */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(
+      body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Driver-surface session: fixed local parallelism, caller-chosen. */
   def build(cpus: String): SparkSession = {
-    // reclaim dead sessions' published artifacts (warehouse tables, tmp
-    // stores) before this one starts adding its own
+    // reclaim dead sessions' published artifacts (tmp stores) before
+    // this one starts adding its own
     Artifacts.gcDeadSessions()
     configured(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()

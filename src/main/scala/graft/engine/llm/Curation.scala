@@ -291,8 +291,8 @@ object Curation {
       .mode(mode)
       .parquet(path)
 
-  /** [[writePackedSequences]] IF ABSENT (the [[ensureBenchmarkNgrams]] /
-    * `Tokenizer.ensureVocab` publish-if-absent pattern, keyed by the
+  /** [[writePackedSequences]] IF ABSENT (the `Tokenizer.ensureVocab`
+    * publish-if-absent pattern, keyed by the
     * parquet `_SUCCESS` marker): a packed-sequence export of a FROZEN
     * input is write-once per content key — later in-session runs (and
     * sibling queries) read the artifact instead of re-cutting it. */
@@ -372,49 +372,40 @@ object Curation {
     .withColumn("contamination",
       round(col("n_contaminated").cast("double") / col("n_ngrams"), 6))
 
-  /** Freeze a benchmark suite's decontamination n-grams as a catalog
-    * BUCKETED+SORTED table — the publish half of INCREMENTAL
-    * decontamination. [[contamination]] broadcasts the benchmark side,
-    * which is right for one suite's worth of n-grams; a production gate
-    * accumulates MANY suites × versions (10⁸+ n-grams — past broadcast),
-    * and re-deriving them per ingest batch repays the benchmark scan
-    * daily. Published once, the recurring batch join reads this table
-    * with ZERO exchanges and ZERO sorts on the frozen side
-    * ([[graft.engine.relational.Bucketed]]'s layout contract); a new
-    * benchmark suite is a republish, never an in-place mutation. */
+  /** Freeze a benchmark suite's decontamination n-grams as a store
+    * BUCKETED on `ng_key`, behind the session view `table`
+    * ([[graft.engine.Artifacts.publishView]]) — the publish half of
+    * INCREMENTAL decontamination. [[contamination]] broadcasts the
+    * benchmark side, which is right for one suite's worth of n-grams; a
+    * production gate accumulates MANY suites × versions (10⁸+ n-grams —
+    * past broadcast), and re-deriving them per ingest batch repays the
+    * benchmark scan daily. Published once, the recurring batch join reads
+    * this store with ZERO exchanges on the frozen side
+    * ([[graft.engine.relational.Bucketed]]'s layout contract). `table` is
+    * a content key ([[graft.engine.Artifacts.table]]): the frozen n-gram
+    * set is a deterministic function of the benchmark frame, so a later
+    * call under the same name gets the first publish back without
+    * writing — which lets q129, q133 and x64 share one benchmark store
+    * per session; a new benchmark suite is a new key, never an in-place
+    * mutation. Returns the view. */
   def publishBenchmarkNgrams(benchmark: DataFrame, textCol: String,
-      table: String, n: Int = 13, numBuckets: Int = 32): Unit =
-    benchmarkNgrams(benchmark, textCol, n)
+      table: String, n: Int = 13, numBuckets: Int = 32): DataFrame =
+    graft.engine.Artifacts.publishView(benchmarkNgrams(benchmark, textCol, n)
       // the store carries the 128-bit content key, not the ~13-word
       // string: the recurring batch join shuffles 16-byte keys (the
       // contentKey discipline every dedup operator here uses)
-      .select(md5(col("ng")).as("ng_key"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(numBuckets, "ng_key").sortBy("ng_key")
-      .saveAsTable(table)
-
-  /** [[publishBenchmarkNgrams]] IF ABSENT: when `table` already exists
-    * in the catalog (a session-scoped content-keyed name —
-    * [[graft.engine.Artifacts.table]]), the publish is skipped entirely;
-    * the frozen n-gram set is a deterministic function of the benchmark
-    * frame, so the existing table IS what this call would have written.
-    * This is what lets q129, q133 and x64 share one benchmark store per
-    * session instead of each paying the cold catalog write. */
-  def ensureBenchmarkNgrams(spark: org.apache.spark.sql.SparkSession,
-      benchmark: DataFrame, textCol: String, table: String, n: Int = 13,
-      numBuckets: Int = 32): Unit =
-    if (!spark.catalog.tableExists(table))
-      publishBenchmarkNgrams(benchmark, textCol, table, n, numBuckets)
+      .select(md5(col("ng")).as("ng_key")), table, "ng_key", numBuckets)
 
   /** The join stage of incremental decontamination: the ingest batch's
     * (doc_id, ng) pairs LEFT-joined against a PUBLISHED benchmark n-gram
-    * table ([[publishBenchmarkNgrams]]; pass `spark.table(name)`). The
-    * `merge` hint pins sort-merge so the layout contract is exercised —
-    * the published scan arrives hash-partitioned and sorted on the
-    * 128-bit `ng_key`, so the join's ONLY exchange is the (small) batch
-    * (`Bucketed.shuffleCount == 1`, q129's contract boolean and
-    * CurationSpec's plan gate). Exposed separately so callers can audit
-    * the plan before aggregating. */
+    * store ([[publishBenchmarkNgrams]]'s view). The `merge` hint pins
+    * sort-merge so the layout contract is exercised — the published scan
+    * arrives hash-partitioned on the 128-bit `ng_key`, so the join's
+    * ONLY exchange is the (small) batch (`Bucketed.shuffleCount == 1`,
+    * q129's contract boolean and CurationSpec's plan gate). Each task
+    * still sorts its frozen bucket: a bucketed scan reports no ordering.
+    * Exposed separately so callers can audit the plan before
+    * aggregating. */
   def contaminationJoin(batch: DataFrame, benchNg: DataFrame,
       textCol: String, idCol: String, n: Int = 13): DataFrame =
     docNgrams(batch, textCol, idCol, n)
@@ -426,7 +417,7 @@ object Curation {
 
   /** [[contamination]] of an ingest batch against a PUBLISHED benchmark
     * n-gram table: identical per-doc answer (q64's oracle replays it
-    * verbatim), but the benchmark side is the frozen catalog table, not a
+    * verbatim), but the benchmark side is the frozen store, not a
     * per-batch broadcast rebuild — the q91-banded / x63 incremental
     * posture applied to eval-leakage gating. */
   def contaminationBucketed(batch: DataFrame, benchNg: DataFrame,
@@ -605,8 +596,8 @@ object Curation {
     * Per-stage observability is NOT lost: [[groupNtile]] and
     * [[packAssignments]] remain independent operators (q65 / q62 pin each
     * against its own oracle), and callers that need the composed plan for
-    * stage-by-stage debugging can still write it — see q88's
-    * `spark.graft.curate.fusedTiersPack` flag. */
+    * stage-by-stage debugging can still write it (CurationSpec pins the
+    * two forms row-identical). */
   def tieredPack(docs: DataFrame, groupCol: String, scoreCol: String,
       orderCol: String, textCol: String, numTiles: Int,
       budgetTokens: Long, shardCols: Seq[String] = Nil): DataFrame =

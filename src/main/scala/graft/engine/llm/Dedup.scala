@@ -294,49 +294,36 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(F.md5WindowKeys(col("_t"), minLen)).as(Seq("pos", "wk")))
 
-  /** Freeze a reference corpus's BOILERPLATE MODEL as a catalog
-    * bucketed+sorted table: the md5 keys of every minLen-char window
-    * occurring >= 2 times in the reference (the q128/q131 duplicate-
-    * window definition). The [[graft.engine.llm.Curation.publishBenchmarkNgrams]]
-    * posture applied to spans: published once, every recurring ingest
-    * batch trims against it with ZERO exchanges and ZERO sorts on the
-    * frozen side (the store arrives hash-partitioned and sorted on the
-    * 16-byte `wk`); a refreshed reference is a republish, never an
-    * in-place mutation. The store carries only `wk` — 16 B/row, never
-    * window text. */
+  /** Freeze a reference corpus's BOILERPLATE MODEL as a store bucketed
+    * on `wk`, behind the session view `table`
+    * ([[graft.engine.Artifacts.publishView]]): the md5 keys of every
+    * minLen-char window occurring >= 2 times in the reference (the
+    * q128/q131 duplicate-window definition). The
+    * [[graft.engine.llm.Curation.publishBenchmarkNgrams]] posture applied
+    * to spans: every recurring ingest batch trims against it with ZERO
+    * exchanges on the frozen side (its scan arrives hash-partitioned on
+    * the 16-byte `wk`; each task still sorts its bucket for the merge
+    * join, since a bucketed scan reports no ordering). `table` is a
+    * content key ([[graft.engine.Artifacts.table]] over the reference
+    * definition and minLen): the model — a pure function of the frozen
+    * reference text — publishes once per session, and every later call
+    * (and every other query sharing the same reference) gets the same
+    * store back; a refreshed reference is a new key, never an in-place
+    * mutation. The store carries only `wk` — 16 B/row, never window
+    * text. Returns the view. */
   def publishBoilerplateWindows(reference: DataFrame, textCol: String,
       idCol: String, table: String, minLen: Int,
-      numBuckets: Int = 32): Unit =
-    windowKeys(reference, textCol, idCol, minLen)
-      .groupBy(col("wk"))
-      .agg(count(lit(1)).as("_c"))
-      .filter(col("_c") >= 2)
-      .select(col("wk"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(numBuckets, "wk").sortBy("wk")
-      .saveAsTable(table)
-
-  /** [[publishBoilerplateWindows]] IF ABSENT (the
-    * [[ensureBandedSignatures]] / [[Curation.ensureBenchmarkNgrams]]
-    * pattern): with a session-scoped content-keyed `table` name
-    * ([[graft.engine.Artifacts.table]] over sfDir + minLen + the
-    * reference-half definition) the deterministic model — distinct md5
-    * window keys with count >= 2, a pure function of the frozen
-    * reference text — publishes once per session, and every later run
-    * (and every other query sharing the same reference) skips the cold
-    * catalog write. This is the production posture too: the reference
-    * corpus is frozen by definition, so its model is publish-once; a
-    * refreshed reference is a new content key, never an in-place
-    * mutation. */
-  def ensureBoilerplateModel(spark: org.apache.spark.sql.SparkSession,
-      reference: => DataFrame, textCol: String, idCol: String,
-      table: String, minLen: Int, numBuckets: Int = 32): Unit =
-    if (!spark.catalog.tableExists(table))
-      publishBoilerplateWindows(reference, textCol, idCol, table, minLen,
-        numBuckets)
+      numBuckets: Int = 32): DataFrame =
+    graft.engine.Artifacts.publishView(
+      windowKeys(reference, textCol, idCol, minLen)
+        .groupBy(col("wk"))
+        .agg(count(lit(1)).as("_c"))
+        .filter(col("_c") >= 2)
+        .select(col("wk")),
+      table, "wk", numBuckets)
 
   /** Trim an ingest batch against a PUBLISHED boilerplate model
-    * ([[publishBoilerplateWindows]]; pass `spark.table(name)`): mark
+    * ([[publishBoilerplateWindows]]'s view): mark
     * every batch position whose window key is in the model, merge marked
     * positions into maximal spans (the same gaps-and-islands rule as
     * [[repeatedSpans]]), splice them out. Unlike [[trimRepeatedSpans]]
@@ -345,7 +332,7 @@ object Dedup {
     * and their union equals the one-shot batch answer (x65 pins both;
     * a doc's spans depend only on its own text and the frozen model).
     * The `merge` hint pins sort-merge so the frozen side's layout
-    * contract is exercised: its scan arrives bucketed+sorted on `wk`,
+    * contract is exercised: its scan arrives bucketed on `wk`,
     * contributing zero exchanges (x64's plan-gate pattern). */
   def trimAgainstPublished(batch: DataFrame, model: DataFrame,
       textCol: String, idCol: String, minLen: Int): DataFrame = {
@@ -563,34 +550,22 @@ object Dedup {
       .select(col("id_in"), col("id_ex"),
         round(col("est_jaccard"), 6).as("est_jaccard"))
 
-  /** Publish the history side's BANDED signatures as a bucketed table on
-    * the band key, so every later ingest's candidate join reads history
-    * with NO shuffle: the bucket aggregation and the band join both reuse
-    * the table's bucketing. The recurring cost of a daily ingest against
-    * a 100 TB history is that join — bucketing moves the history shuffle
-    * into the one-time write (shuffle-freedom plan-asserted in DedupSpec,
-    * the same contract SourcesSpec pins for bucketed fact joins). */
+  /** Publish the history side's BANDED signatures as a store bucketed on
+    * the band key, behind the session view `table`
+    * ([[graft.engine.Artifacts.publishView]]: once per content-keyed
+    * name), so every later ingest's candidate join reads history with NO
+    * shuffle: the bucket aggregation and the band join both reuse the
+    * scan's bucketing. The recurring cost of a daily ingest against a
+    * 100 TB history is that join — bucketing moves the history shuffle
+    * into the one-time write (shuffle-freedom plan-asserted in
+    * DedupSpec). Returns the view. */
   def publishBandedSignatures(sigs: DataFrame, table: String,
-      numHashes: Int = 32, bands: Int = 8, numBuckets: Int = 32): Unit =
-    bandedFromSigs(sigs, numHashes, bands)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(numBuckets, "band_id", "band_hash")
-      .sortBy("band_id", "band_hash")
-      .saveAsTable(table)
-
-  /** [[publishBandedSignatures]] IF ABSENT (the
-    * [[Curation.ensureBenchmarkNgrams]] pattern): with a session-scoped
-    * content-keyed `table` name ([[graft.engine.Artifacts.table]]) the
-    * deterministic banded-signature table publishes once per session and
-    * later runs skip the cold catalog write. */
-  def ensureBandedSignatures(spark: org.apache.spark.sql.SparkSession,
-      sigs: DataFrame, table: String, numHashes: Int = 32, bands: Int = 8,
-      numBuckets: Int = 32): Unit =
-    if (!spark.catalog.tableExists(table))
-      publishBandedSignatures(sigs, table, numHashes, bands, numBuckets)
+      numHashes: Int = 32, bands: Int = 8, numBuckets: Int = 32): DataFrame =
+    graft.engine.Artifacts.publishView(bandedFromSigs(sigs, numHashes, bands),
+      table, "band_id,band_hash", numBuckets)
 
   /** [[incrementalMinHashNearDups]] against a bucketed band table written
-    * by [[publishBandedSignatures]] (pass `spark.table(name)`): identical
+    * by [[publishBandedSignatures]] (pass its view): identical
     * answer, but the history side contributes ZERO exchanges to the
     * candidate join — only the (small) incoming batch shuffles.
     * `existingSigs` is still needed for the estimate stage, which touches

@@ -420,12 +420,12 @@ object LlmQueries {
       val corpus = docs.unionByName(
         docs.filter(col("doc_id") % 25 === 0)
           .select((col("doc_id") + nDocs).as("doc_id"), col("text")))
-      // session-shared artifacts (Artifacts scaladoc): the bench13 table
+      // session-shared artifacts (Artifacts scaladoc): the bench13 store
       // is q129/x64's, the frozen-half vocabulary is q115/q132/q134's —
       // whoever runs first publishes, everyone else skips the cold write
-      val table = graft.engine.Artifacts.table("bench13", sfDir)
-      Curation.ensureBenchmarkNgrams(spark,
-        docs.filter(col("doc_id") < 25), "text", table, n = 13)
+      val bench = Curation.publishBenchmarkNgrams(
+        docs.filter(col("doc_id") < 25), "text",
+        graft.engine.Artifacts.table("bench13", sfDir), n = 13)
       val vocab = Tokenizer.ensureVocab(spark,
         graft.engine.Artifacts.root("vocab16f", sfDir) + "/vocab")(
         Tokenizer.trainWordVocab(docs.filter(col("doc_id") < 250),
@@ -444,7 +444,7 @@ object LlmQueries {
           .localCheckpoint()
         // 3. eval-leakage gate vs the frozen benchmark store
         val flags = Curation.contaminationBucketed(
-          trimmed, spark.table(table), "text", "doc_id", n = 13)
+          trimmed, bench, "text", "doc_id", n = 13)
         val clean = trimmed.join(
             flags.filter(col("contamination") <= 0.5).select(col("doc_id")),
             Seq("doc_id"), "left_semi")
@@ -1518,9 +1518,9 @@ object LlmQueries {
       "DuckDB-replayed")
 
   /** q129 — INCREMENTAL decontamination (q64's production successor):
-    * the benchmark suite's 13-grams freeze ONCE into a catalog
-    * bucketed+sorted table, and the ingest batch joins it with zero
-    * exchanges and zero sorts on the frozen side — the q91-banded /
+    * the benchmark suite's 13-grams freeze ONCE into a store bucketed on
+    * `ng_key`, and the ingest batch joins it with zero exchanges on the
+    * frozen side — the q91-banded /
     * x63 published-artifact posture applied to eval-leakage gating
     * (real gates accumulate benchmark suites past broadcast size and
     * must not re-derive them per batch). Values must equal q64's
@@ -1533,10 +1533,9 @@ object LlmQueries {
       import graft.engine.relational.Bucketed
       val docs = Tables.documents(spark, sfDir)
       // session-shared with q133/x64 (Artifacts scaladoc)
-      val table = graft.engine.Artifacts.table("bench13", sfDir)
-      Curation.ensureBenchmarkNgrams(spark,
-        docs.filter(col("doc_id") < 25), "text", table, n = 13)
-      val bench = spark.table(table)
+      val bench = Curation.publishBenchmarkNgrams(
+        docs.filter(col("doc_id") < 25), "text",
+        graft.engine.Artifacts.table("bench13", sfDir), n = 13)
       val batch = docs.filter(col("doc_id") >= 25)
       locally {
         val joined = Curation.contaminationJoin(
@@ -3003,9 +3002,8 @@ object LlmQueries {
       // (x56's documented, result-neutral dial — every stage's answer is
       // partitioning-invariant) and restore after. Production sizes
       // partitions to data; the stage SHAPES are what carry to 100 TB.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      graft.engine.GraftSession.withConf(spark,
+          "spark.sql.shuffle.partitions" -> "8") {
       // 1. JSONL exchange with three planted corrupt lines. coalesce(8):
       // the union-of-filters corpus arrives in ~33 scan partitions; a 5k-doc
       // exchange in 33 shards is pure task overhead (narrow coalesce, no
@@ -3033,24 +3031,15 @@ object LlmQueries {
         .drop("vec_id", "embedding").localCheckpoint()
       // 4+5. per-language quality quartiles (3 dp-quantized key, q65
       // contract) + per-doc pack assignment (2048-token budget, sharded by
-      // source). Default path FUSES the two stages (Curation.tieredPack):
-      // one scan, no corpus-sized doc_id re-union join — the composed
-      // two-branch form stays available under the flag for stage-by-stage
-      // debugging; CuratePipelineSpec pins both paths row-identical.
+      // source), FUSED (Curation.tieredPack): one scan, no corpus-sized
+      // doc_id re-union join — CurationSpec pins the fusion row-identical
+      // to the composed two-branch form.
       val scored = TextAnalysis.qualityScore(semSurv, "text")
         .withColumn("q_bin", round(col("quality"), 3))
-      val fused = spark.conf.getOption("spark.graft.curate.fusedTiersPack")
-        .forall(_.toBoolean)
-      val curated = (if (fused) {
-        Curation.tieredPack(scored, "lang", "q_bin", "doc_id", "text",
-          numTiles = 4, budgetTokens = 2048L, shardCols = Seq("source"))
-      } else {
-        val tiers = Curation.groupNtile(scored, "lang", "q_bin", "doc_id", 4)
-          .select(col("doc_id"), col("tier"))
-        Curation.packAssignments(semSurv, "doc_id", "text",
-          budgetTokens = 2048L, shardCols = Seq("source"))
-          .join(tiers, Seq("doc_id"))
-      }).select(col("doc_id"), col("lang"), col("source"), col("tier"),
+      val curated = Curation.tieredPack(scored, "lang", "q_bin", "doc_id",
+          "text", numTiles = 4, budgetTokens = 2048L,
+          shardCols = Seq("source"))
+        .select(col("doc_id"), col("lang"), col("source"), col("tier"),
           col("pack_id"), col("n_tokens"),
           md5(col("text").cast("binary")).as("text_md5"))
       // 6. atomic snapshot publish; the OUTPUT is the read-back (pins that
@@ -3068,7 +3057,7 @@ object LlmQueries {
         // the final sort + union run after the restore, but the heavy
         // stages are all materialized by the publish above; collect-side
         // partitioning of a 5k-row sorted result is noise either way
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     },
     Some({
       val allMarkers = TextAnalysis.markers.values.flatten.toSeq.distinct

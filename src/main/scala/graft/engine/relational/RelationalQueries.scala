@@ -879,30 +879,31 @@ object RelationalQueries {
     doc = "snapshot MERGE: upsert batch, untouched buckets hardlink-reused, EXCEPT ALL twin")
 
   /** q98 — sort-merge-bucket join ([[graft.engine.relational.Bucketed]]):
-    * lineitem and orders published co-bucketed by order key, then joined
-    * with ZERO exchange on either side — the pay-the-shuffle-once layout a
-    * recurring 100 TB fact–fact join wants. `smb_shuffle_free` is computed
-    * honestly from the executed join plan (count of ShuffleExchange nodes
-    * == 0, AQE-expanded) and pinned TRUE by the oracle; the aggregate's
-    * values must simultaneously match the plain-join DuckDB twin, so the
-    * co-located plan is proven both shuffle-free AND correct. */
+    * lineitem and orders published as stores co-bucketed by order key,
+    * then joined with ZERO exchange on either side — the
+    * pay-the-shuffle-once layout a recurring 100 TB fact–fact join wants.
+    * `smb_shuffle_free` is computed honestly from the executed join plan
+    * (count of ShuffleExchange nodes == 0, AQE-expanded) and pinned TRUE
+    * by the oracle; the aggregate's values must simultaneously match the
+    * plain-join DuckDB twin, so the co-located plan is proven both
+    * shuffle-free AND correct. */
   val q98 = GraftQuery(
     "q98_smb_join",
     (spark, sfDir) => {
-      val pid = ProcessHandle.current().pid()
-      val lt = s"graft_q98_lineitem_$pid"
-      val ot = s"graft_q98_orders_$pid"
-      // the two sides are INDEPENDENT tables — publish them concurrently:
+      import graft.engine.sources.SnapshotStore
+      val base = Artifacts.scratch("q98_smb")
+      val (lt, ot) = (s"$base/lineitem", s"$base/orders")
+      // the two sides are INDEPENDENT stores — publish them concurrently:
       // the one-off co-bucketing write costs max, not sum
       Par.overlap(spark) { s =>
-        s.fork(Bucketed.publishTable(
+        s.fork(SnapshotStore.publishBucketed(
           Tables.lineitem(spark, sfDir).select(col("l_orderkey").as("okey"),
             col("l_extendedprice"), col("l_discount")),
-          lt, nBuckets = 16, keyCols = Seq("okey")))
-        Bucketed.publishTable(
+          lt, "okey", nBuckets = 16))
+        SnapshotStore.publishBucketed(
           Tables.orders(spark, sfDir).select(col("o_orderkey").as("okey"),
             col("o_orderpriority")),
-          ot, nBuckets = 16, keyCols = Seq("okey"))
+          ot, "okey", nBuckets = 16)
       }
       val joined = Bucketed.smbJoin(spark, lt, ot, Seq("okey"))
       val shuffleFree = Bucketed.shuffleCount(joined) == 0

@@ -59,7 +59,7 @@ object ClusteredStore {
       .drop("_z")
       .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
     val stats = SnapshotStore.scanFiles(df.sparkSession, staging.toString,
-        SnapshotStore.dataFilesUnder(staging), df.schema)
+        SnapshotStore.dataFilesUnder(staging), df.schema, None)
       .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1)
         .as("file"))
       .agg(ZOrder.statExprs(cols).head, ZOrder.statExprs(cols).tail: _*)

@@ -3,7 +3,7 @@ package graft.engine.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
 /** Versioned snapshot publishing over plain parquet — the minimal atomic
   * table pattern a 100 TB pipeline needs without a table format dependency:
@@ -482,26 +482,33 @@ object SnapshotStore {
     val v = if (version > 0) version else currentVersion(root)
     require(v > 0, s"no published version under $root")
     val (files, schema) = versionMeta(root, v)
-    scanFiles(spark, s"$root/v$v", files, schema)
+    scanFiles(spark, s"$root/v$v", files, schema, bucketSpecAt(root, v))
   }
 
   /** THE way a versioned store's files become a DataFrame: `files`
     * (relative to `v$version`, from its manifest or a subset of it) under
-    * the version's recorded schema ([[versionSchema]]), through a
-    * [[ManifestFileIndex]] — no footer job, no listing job, and a
-    * zero-file subset is simply the empty answer with that schema (a
-    * full-takedown [[deleteKeys]] produces one). */
+    * the version's recorded schema ([[versionSchema]]) and bucket spec
+    * ([[bucketSpecAt]]), through a [[ManifestFileIndex]] — no footer
+    * job, no listing job, and a zero-file subset is simply the empty
+    * answer with that schema (a full-takedown [[deleteKeys]] produces
+    * one). */
   private[sources] def scan(spark: SparkSession, root: String, version: Long,
       files: Seq[String]): DataFrame =
-    scanFiles(spark, s"$root/v$version", files, versionMeta(root, version)._2)
+    scanFiles(spark, s"$root/v$version", files, versionMeta(root, version)._2,
+      bucketSpecAt(root, version))
 
-  /** [[scan]] with the schema in hand — also the read-back of a staged
-    * write, whose schema is the written frame's. `_bucket` is a
+  /** [[scan]] with the schema and spec in hand — also the read-back of a
+    * staged write, whose schema is the written frame's. `_bucket` is a
     * partition column when every file sits under a `_bucket=k/` dir,
-    * so it comes last, as a directory read would place it. */
+    * so it comes last, as a directory read would place it. Such a
+    * layout under a `spec` scans BUCKETED: it reports Spark's
+    * `HashPartitioning` on the key columns, which [[bucketExpr]]
+    * assigned, so a join or aggregate on the key shuffles only its other
+    * side. Spark's `autoBucketedScan` keeps a scan that no operator
+    * benefits from at its file-split width. */
   private[sources] def scanFiles(spark: SparkSession, dir: String,
-      files: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      spec: Option[(String, Int)]): DataFrame = {
     import org.apache.spark.sql.types.StructType
     val bucketed = schema.fieldNames.contains("_bucket") &&
       files.forall(_.startsWith("_bucket="))
@@ -511,7 +518,10 @@ object SnapshotStore {
     val partSchema = StructType(part.map(_.copy(nullable = true)))
     org.apache.spark.sql.graft.Bridge.parquetScan(spark,
       new ManifestFileIndex(spark, dir, files, partSchema), partSchema,
-      StructType(data))
+      StructType(data), spec.filter(_ => bucketed).map { case (k, n) =>
+        org.apache.spark.sql.catalyst.catalog.BucketSpec(n, bucketKeyCols(k),
+          Nil)
+      })
   }
 
   /** The rows ADDED strictly after `fromVersion`, as of `toVersion`
@@ -555,7 +565,8 @@ object SnapshotStore {
     // the delta's own appends may straddle an evolution: the to-version's
     // recorded union schema serves them all (widened types too — see read)
     if (delta.isEmpty) None
-    else Some(scanFiles(spark, s"$root/v$to", delta, schema))
+    else Some(scanFiles(spark, s"$root/v$to", delta, schema,
+      bucketSpecAt(root, to)))
   }
 
   /** Persisted per-consumer cursor: the highest version `consumer` has
@@ -741,15 +752,18 @@ object SnapshotStore {
 
   /** The stable key→bucket assignment shared by [[publishBucketed]] and
     * [[merge]] — both sides MUST compute it identically or merge would
-    * rewrite the wrong partitions. A composite key hashes all its
-    * columns in ONE xxhash64 (order-sensitive, matching the spec's
-    * column order) — NOT a caller-side concat, which would defeat the
-    * per-column type checks. Null keys hash deterministically (to the
-    * hash seed's bucket); upserting by a null key is the caller's
+    * rewrite the wrong partitions. It is Spark's own: `hash` is murmur3
+    * with seed 42, so `pmod(hash(keys), n)` is the partition id
+    * `HashPartitioning(keys, n)` assigns. That is what lets [[scan]]
+    * report the layout as bucketed, and a join against another store or
+    * a shuffled frame meets its rows in the same task. A composite key
+    * hashes all its columns in ONE hash (order-sensitive, matching the
+    * spec's column order) — NOT a caller-side concat, which would defeat
+    * the per-column type checks. Null keys hash deterministically (to
+    * the seed's bucket); upserting by a null key is the caller's
     * modeling error, not a crash. */
   def bucketExpr(keySpec: String, nBuckets: Int): Column =
-    pmod(xxhash64(bucketKeyCols(keySpec).map(col): _*),
-      lit(nBuckets.toLong)).cast("int")
+    pmod(hash(bucketKeyCols(keySpec).map(col): _*), lit(nBuckets))
 
   private def specPath(root: String) = Paths.get(root, "BUCKETSPEC")
 
@@ -847,13 +861,26 @@ object SnapshotStore {
     * width of tasks (GraftSession: the core count; a cluster configures
     * it; `defaultParallelism` can read 2 while executors are still being
     * added): one task per bucket spent a 50-row, 16-bucket append on
-    * per-task overhead, 161–178 ms vs 107–113 ms at 4 tasks on 4 cores. */
+    * per-task overhead, 161–178 ms vs 107–113 ms at 4 tasks on 4 cores.
+    * Each written file is then renamed in staging to carry its bucket id
+    * (`part-…_0000k.c000…`, the suffix a bucketed [[scan]] groups files
+    * by), before any manifest names it; carried-over files keep theirs. */
   private def writeBuckets(df: DataFrame, staging: java.nio.file.Path,
       buckets: Int): Unit = {
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     df.repartition(math.min(buckets, width), col("_bucket"))
       .write.mode(SaveMode.ErrorIfExists).partitionBy("_bucket")
       .parquet(staging.toString)
+    if (Files.exists(staging)) dataFilesUnder(staging).foreach { rel =>
+      val f = staging.resolve(rel)
+      val k = rel.takeWhile(_ != '/').stripPrefix("_bucket=").toInt
+      val name = f.getFileName.toString
+      val dot = name.indexOf('.')
+      val named = f"${name.take(dot)}_$k%05d${name.drop(dot)}"
+      Files.move(f, f.resolveSibling(named))
+      val crc = f.resolveSibling(s".$name.crc")
+      if (Files.exists(crc)) Files.move(crc, f.resolveSibling(s".$named.crc"))
+    }
   }
 
   /** The buckets `bucketed` holds rows for, in ONE job and no shuffle
@@ -871,18 +898,19 @@ object SnapshotStore {
   }
 
   /** Bootstrap (or fully rewrite) a BUCKETED store: rows land in
-    * `_bucket = pmod(xxhash64(key), n)` partition directories, and the
-    * (key, n) spec is recorded at the root so every later [[merge]]
-    * computes the identical assignment. Same atomic publish contract as
-    * [[publish]]. */
+    * `_bucket = pmod(hash(key), n)` partition directories ([[bucketExpr]]),
+    * and the (key, n) spec is recorded at the root so every later
+    * [[merge]] computes the identical assignment. Same atomic publish
+    * contract as [[publish]]. A `tag` already on a version returns that
+    * version before `df` is even analyzed: publish-if-absent. */
   def publishBucketed(df: DataFrame, root: String, keyCol: String,
       nBuckets: Int, tag: Option[String] = None): Long = {
+    val alreadyApplied = taggedVersion(root, tag)
+    if (alreadyApplied.isDefined) return alreadyApplied.get
     require(nBuckets > 0, "nBuckets must be positive")
     bucketKeyCols(keyCol).foreach(k =>
       require(df.columns.contains(k), s"missing key column $k"))
     require(!df.columns.contains("_bucket"), "_bucket is reserved")
-    val alreadyApplied = taggedVersion(root, tag)
-    if (alreadyApplied.isDefined) return alreadyApplied.get
     writeBucketSpec(root, keyCol, nBuckets)
     staged(root) { staging =>
       val bucketed = df.withColumn("_bucket", bucketExpr(keyCol, nBuckets))
@@ -945,7 +973,7 @@ object SnapshotStore {
   /** Shared-column TYPE equality between a batch and the store — the
     * name-only checks let a retyped column through, and both failure
     * modes are silent: a mistyped KEY hashes to the wrong buckets
-    * (xxhash64 is type-sensitive), a mistyped value column straddles
+    * (the murmur3 `hash` is type-sensitive), a mistyped value column straddles
     * the version's files with two physical types. Evolution may ADD
     * columns ([[append]] `allowNewColumns`), never retype one.
     * Compared via the SQL type string, which deliberately IGNORES
@@ -974,12 +1002,12 @@ object SnapshotStore {
         if (f.dataType.sql != t.sql) {
           // widening (int→long, float→double …) is honest evolution the
           // caller can opt into — EXCEPT on a bucket-key column, where
-          // xxhash64(3: Int) != xxhash64(3L) would scatter one logical
+          // hash(3: Int) != hash(3L) would scatter one logical
           // key across two buckets and silently break merge/deleteKeys
           if (allowWidening && widensTo(t, f.dataType))
             require(!keyColumns.contains(f.name),
               s"$what widens bucket-key column ${f.name} " +
-                s"(${t.sql} → ${f.dataType.sql}): the xxhash64 bucket " +
+                s"(${t.sql} → ${f.dataType.sql}): the bucket " +
                 "assignment is type-sensitive, so a widened key would " +
                 "land the same logical key in a different bucket — " +
                 "rebucket() the store to the wider key type instead")
@@ -1195,8 +1223,8 @@ object SnapshotStore {
 
   /** Key-frame contract shared by [[readKeys]] and [[deleteKeys]]:
     * exactly the bucket-key columns in spec order, each with the store's
-    * exact type. TYPE check, not just name: xxhash64 bucketing is
-    * type-sensitive (xxhash64(3: Int) != xxhash64(3L)), so an Int keys
+    * exact type. TYPE check, not just name: murmur3 bucketing is
+    * type-sensitive (hash(3: Int) != hash(3L)), so an Int keys
     * frame against a Long-keyed store would census the WRONG buckets and
     * silently miss every row — an empty lookup, or worse, a takedown
     * that "deletes" nothing while returning success. */
@@ -1218,7 +1246,7 @@ object SnapshotStore {
   /** The bucketed key frame shared by [[readKeys]] and [[deleteKeys]],
     * so the two legs can never bucket differently. NULL-keyed rows are
     * dropped first: they can never equi-join a stored row (both legs'
-    * joins are standard equality), and xxhash64(null) would otherwise
+    * joins are standard equality), and hash(null) would otherwise
     * touch the seed bucket — wasted IO on the read path, a pointless
     * identical rewrite on the delete path. ([[merge]]'s batch census is
     * NOT this: a null-keyed batch row is a real row to store.) */

@@ -1,8 +1,10 @@
 package graft.engine.streaming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.engine.{Artifacts, GraftQuery, Par, Tables}
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.engine.{Artifacts, GraftQuery, GraftSession, Par, Tables}
 
 /** Driver queries that run the streaming plans end-to-end inside a query
   * call: events enter either through a MemoryStream replay (x52–x54) or a
@@ -51,6 +53,22 @@ object StreamQueries {
         "re-balance the ingest repartition")
   }
 
+  /** The memory-sink harness: run `result` into a memory sink under a
+    * fresh name in output `mode`, drive it — each tick adds data and is
+    * drained with `processAllAvailable`; no ticks is one drain of what
+    * the source already holds — and stop it, also when a tick throws.
+    * Returns the stopped query: `spark.table(q.name)` is its sink. */
+  private def drainToMemory(who: String, result: DataFrame, mode: String,
+      ticks: (() => Unit)*): StreamingQuery = {
+    val q = result.writeStream.format("memory")
+      .queryName(s"${who}_out_${System.nanoTime()}").outputMode(mode).start()
+    try {
+      if (ticks.isEmpty) q.processAllAvailable()
+      else ticks.foreach { tick => tick(); q.processAllAvailable() }
+    } finally q.stop()
+    q
+  }
+
   /** X5 — tumbling-window streaming aggregation through the real
     * micro-batch engine (complete mode; the 20k-event cap bounds the
     * driver-side replay buffer, not the operator). */
@@ -66,12 +84,9 @@ object StreamQueries {
         .as[Streaming.Event].collect()
       val stream = MemoryStream[Streaming.Event]
       stream.addData(events.toSeq)
-      val name = s"x52_out_${System.nanoTime()}"
-      val q = Streaming.tumblingCounts(stream.toDF())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try { q.processAllAvailable() } finally q.stop()
-      spark.table(name)
+      val q = drainToMemory("x52", Streaming.tumblingCounts(stream.toDF()),
+        "complete")
+      spark.table(q.name)
         .select(unix_timestamp(col("win_start")).as("win_start"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy(col("win_start"), col("event_type"))
@@ -100,15 +115,10 @@ object StreamQueries {
         .as[Streaming.Event].collect()
       val (batch1, batch2) = events.splitAt(events.length / 2)
       val stream = MemoryStream[Streaming.Event]
-      val name = s"x53_out_${System.nanoTime()}"
-      val q = Streaming.sessionizeWithState(stream.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        stream.addData(batch1.toSeq); q.processAllAvailable()
-        stream.addData(batch2.toSeq); q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name)
+      val q = drainToMemory("x53",
+        Streaming.sessionizeWithState(stream.toDS()).toDF(), "append",
+        () => stream.addData(batch1.toSeq), () => stream.addData(batch2.toSeq))
+      spark.table(q.name)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).cast("long").as("n_closed_sessions"),
           sum(col("n_events")).cast("long").as("n_events"))
@@ -156,12 +166,10 @@ object StreamQueries {
       val customers = Tables.customer(spark, sfDir)
       val stream = MemoryStream[Streaming.Event]
       stream.addData(events.toSeq)
-      val name = s"x54_out_${System.nanoTime()}"
-      val q = Streaming.enrichedTumblingByNation(stream.toDF(), customers)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try { q.processAllAvailable() } finally q.stop()
-      spark.table(name)
+      val q = drainToMemory("x54",
+        Streaming.enrichedTumblingByNation(stream.toDF(), customers),
+        "complete")
+      spark.table(q.name)
         .select(unix_timestamp(col("win_start")).as("win_start"),
           col("c_nationkey"), col("n_events"), col("sum_value"))
         // Spark sorts nulls first by default; the left join can emit a null
@@ -186,12 +194,10 @@ object StreamQueries {
   val x55 = GraftQuery(
     "x55_stream_file_tumbling",
     (spark, sfDir) => {
-      val name = s"x55_out_${System.nanoTime()}"
-      val q = Streaming.tumblingCounts(Tables.eventsStream(spark, sfDir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try { q.processAllAvailable() } finally q.stop()
-      spark.table(name)
+      val q = drainToMemory("x55",
+        Streaming.tumblingCounts(Tables.eventsStream(spark, sfDir)),
+        "complete")
+      spark.table(q.name)
         .select(unix_timestamp(col("win_start")).as("win_start"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy(col("win_start"), col("event_type"))
@@ -224,7 +230,6 @@ object StreamQueries {
       val (c1, c2) = halves(events.filter(_.event_type == "click"))
       val views = MemoryStream[Streaming.Event]
       val clicks = MemoryStream[Streaming.Event]
-      val name = s"x56_out_${System.nanoTime()}"
       // A stream-stream join runs FOUR state stores per shuffle partition
       // per micro-batch, and a watermark advance appends no-data batches
       // that re-commit every store; at the session's 32 partitions this
@@ -234,32 +239,16 @@ object StreamQueries {
       // so run the stream at 4 partitions with no-data batches off and
       // restore after. Production sizes partitions to throughput; the
       // state-per-partition SHAPE is what carries to 100 TB.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = spark.conf
-        .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      // everything from the first conf.set is guarded: a failed .start()
-      // must not leave the SHARED session at 4 partitions for every later
-      // query in the run
-      try {
-        val q = Streaming.intervalJoin(views.toDF(), clicks.toDF(), "6 hours")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try {
-          views.addData(v1.toSeq); clicks.addData(c1.toSeq); q.processAllAvailable()
-          views.addData(v2.toSeq); clicks.addData(c2.toSeq); q.processAllAvailable()
-        } finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prevNoData match {
-          case Some(v) => spark.conf
-            .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-          case None => spark.conf
-            .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-        }
+      val q = GraftSession.withConf(spark,
+          "spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+        drainToMemory("x56",
+          Streaming.intervalJoin(views.toDF(), clicks.toDF(), "6 hours"),
+          "append",
+          () => { views.addData(v1.toSeq); clicks.addData(c1.toSeq) },
+          () => { views.addData(v2.toSeq); clicks.addData(c2.toSeq) })
       }
-      spark.table(name)
+      spark.table(q.name)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).cast("long").as("n_pairs"),
           graft.engine.relational.Exact.dsum(col("click_value")).as("sum_click_value"))
@@ -309,27 +298,20 @@ object StreamQueries {
       val cFlush = Streaming.Event(-2L, flushTs, -2L, "click", 0.0)
       val views = MemoryStream[Streaming.Event]
       val clicks = MemoryStream[Streaming.Event]
-      val name = s"x57_out_${System.nanoTime()}"
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       // x56's state-store dial; unlike x56, no-data micro-batches stay
       // ENABLED (null emission rides the watermark-advance batch — the
       // very semantics under test). 2 partitions measured WORSE than 4
       // (the batch stages lose parallelism faster than store-commit I/O
       // shrinks), so 4 it is.
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = Streaming.intervalJoinLeftOuter(
-            views.toDF(), clicks.toDF(), "6 hours")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try {
-          views.addData(v1.toSeq); clicks.addData(c1.toSeq); q.processAllAvailable()
-          views.addData(v2.toSeq); clicks.addData(c2.toSeq); q.processAllAvailable()
-          views.addData(Seq(vFlush)); clicks.addData(Seq(cFlush))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.table(name)
+      val q = GraftSession.withConf(spark,
+          "spark.sql.shuffle.partitions" -> "4") {
+        drainToMemory("x57", Streaming.intervalJoinLeftOuter(
+            views.toDF(), clicks.toDF(), "6 hours"), "append",
+          () => { views.addData(v1.toSeq); clicks.addData(c1.toSeq) },
+          () => { views.addData(v2.toSeq); clicks.addData(c2.toSeq) },
+          () => { views.addData(Seq(vFlush)); clicks.addData(Seq(cFlush)) })
+      }
+      spark.table(q.name)
         .filter(col("user_id") >= 0)
         .groupBy(col("user_id"))
         .agg(count(col("click_id")).cast("long").as("n_pairs"),
@@ -375,11 +357,7 @@ object StreamQueries {
         java.nio.charset.StandardCharsets.UTF_8)
       val stream = graft.engine.sources.Jsonl.readJsonlStream(
         spark, s"$dir/docs", docs.schema)
-      val name = s"x58_out_${System.nanoTime()}"
-      val q = stream.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val all = spark.table(name)
+      val all = spark.table(drainToMemory("x58", stream, "append").name)
       val corrupt = col(graft.engine.sources.Jsonl.corruptCol)
       all.filter(corrupt.isNull)
         .select(col("doc_id"), col("lang"), col("source"),
@@ -436,10 +414,10 @@ object StreamQueries {
       val exSigs = Dedup.minHashSignatures(history, "text", "doc_id")
         .localCheckpoint(eager = false)
       // session-shared artifact (Artifacts scaladoc): the frozen-history
-      // band table is deterministic — the cold catalog write (3.7 s
-      // measured) is paid once per session
-      val bandTable = graft.engine.Artifacts.table("x59bands", sfDir)
-      Dedup.ensureBandedSignatures(spark, exSigs, bandTable, numBuckets = 8)
+      // band store is deterministic — its cold write is paid once per
+      // session
+      val bands = Dedup.publishBandedSignatures(exSigs,
+        graft.engine.Artifacts.table("x59bands", sfDir), numBuckets = 8)
       val exKeys = history.select(col("doc_id").as("id_ex"),
         Dedup.contentKey(col("text")).as("ck_ex"))
         .localCheckpoint(eager = false)
@@ -465,19 +443,15 @@ object StreamQueries {
       // x56 partition dial (result-neutral: emission is partition-invariant,
       // and dropDuplicates state emits rows immediately, so watermark-only
       // no-data batches add nothing but store re-commits)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = spark.conf
-        .get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
+      GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
         val q = Streaming.streamingCuration(spark, s"$base/in",
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("doc_id",
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("text",
               org.apache.spark.sql.types.StringType))),
-          spark.table(bandTable), exSigs, exKeys,
+          bands, exSigs, exKeys,
           s"$base/store/tbl", s"$base/quarantine",
           readOptions = Map("maxFilesPerTrigger" -> "3"))
         try q.processAllAvailable() finally q.stop()
@@ -492,10 +466,6 @@ object StreamQueries {
           .select(col("kind"), col("k"))
           .localCheckpoint() // small; total sort's sampling pass re-runs upstream
           .orderBy(col("kind"), col("k"))
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-          prevNoData)
       }
     },
     Some("""WITH hist AS (SELECT DISTINCT md5(lower(trim(text))) AS ck
@@ -712,18 +682,15 @@ object StreamQueries {
       val streamPoints = Tables.eventsStream(spark, sfDir)
         .select(col("event_id").as("p_id"),
           unix_micros(col("ts")).as("p_us"), col("value").as("p_value"))
-      val name = s"x61_out_${System.nanoTime()}"
-      val q = RangeJoin
+      val q = drainToMemory("x61", RangeJoin
         .pointInInterval(streamPoints, windows, "p_us", "s_us", "e_us",
           binWidth = 3600L * 1000000L)
         .groupBy(col("view_id"))
         .agg(graft.engine.relational.Exact.lcount().as("n_hits"),
-          graft.engine.relational.Exact.dsum(col("p_value")).as("sum_value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
+          graft.engine.relational.Exact.dsum(col("p_value")).as("sum_value")),
+        "complete")
       windows.select(col("view_id"))
-        .join(spark.table(name), Seq("view_id"), "left_outer")
+        .join(spark.table(q.name), Seq("view_id"), "left_outer")
         .select(col("view_id"),
           coalesce(col("n_hits"), lit(0L)).as("n_hits"), col("sum_value"))
         .orderBy(col("view_id"))
@@ -888,7 +855,7 @@ object StreamQueries {
 
   /** x64 — ALWAYS-ON decontamination: q129's published-benchmark posture
     * under the micro-batch engine. The benchmark 13-gram store freezes
-    * ONCE (catalog bucketed+sorted `ng_key` table); each streamed ingest
+    * ONCE (a store bucketed on `ng_key`); each streamed ingest
     * file gates against it — the frozen side contributes zero exchanges
     * per tick — and the per-doc flags land in a doc-bucketed SnapshotStore
     * through the insert-only tagged append (documents never straddle
@@ -907,11 +874,10 @@ object StreamQueries {
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"))
       // session-shared with q129/q133 (Artifacts scaladoc)
-      val table = graft.engine.Artifacts.table("bench13", sfDir)
-      Curation.ensureBenchmarkNgrams(spark,
-        docs.filter(col("doc_id") < 25), "text", table, n = 13)
+      val bench = Curation.publishBenchmarkNgrams(
+        docs.filter(col("doc_id") < 25), "text",
+        graft.engine.Artifacts.table("bench13", sfDir), n = 13)
       locally {
-        val bench = spark.table(table)
         // exactly three one-file ticks of the recurring ingest
         docs.filter(col("doc_id") >= 25).repartition(3)
           .write.mode("overwrite").parquet(s"$base/in")
@@ -974,8 +940,8 @@ object StreamQueries {
     * q128/q131 span machinery under the micro-batch engine, via the
     * x64/q129 published-artifact posture. The boilerplate MODEL — md5
     * keys of every 40-char window occurring >= 2 times in the frozen
-    * reference half — publishes ONCE as a catalog bucketed+sorted `wk`
-    * table ([[graft.engine.llm.Dedup.publishBoilerplateWindows]]); each
+    * reference half — publishes ONCE as a store bucketed on `wk`
+    * ([[graft.engine.llm.Dedup.publishBoilerplateWindows]]); each
     * streamed ingest file then trims itself against it
     * ([[graft.engine.llm.Dedup.trimAgainstPublished]] — the frozen side
     * contributes zero exchanges per tick, plan-gated in
@@ -1003,16 +969,14 @@ object StreamQueries {
       // Session-amortized model publish (VERDICT r14 item 1): the
       // reference half + planted boilerplate is a pure function of
       // (sfDir, minLen, the doc_id<250 split, the bp literal), so the
-      // frozen model publishes once per session via the
-      // Artifacts/ensure* pattern (x59/q127/q129/q133's posture) —
-      // the ~4.6 s cold bucketed-table write is first-run-only.
-      val table = graft.engine.Artifacts.table("x65model",
-        s"$sfDir|minLen=40|ref<250|bp=$bp")
-      Dedup.ensureBoilerplateModel(spark,
-        docs.filter(col("doc_id") < 250), "text", "doc_id", table,
-        minLen = 40)
+      // frozen model publishes once per session under that content key
+      // (x59/q127/q129/q133's posture) — the cold bucketed write is
+      // first-run-only.
+      val model = Dedup.publishBoilerplateWindows(
+        docs.filter(col("doc_id") < 250), "text", "doc_id",
+        graft.engine.Artifacts.table("x65model",
+          s"$sfDir|minLen=40|ref<250|bp=$bp"), minLen = 40)
       Par.overlap(spark) { s =>
-        val model = spark.table(table)
         val stream = docs.filter(col("doc_id") >= 250)
         stream.repartition(3).write.mode("overwrite").parquet(s"$base/in")
         // same premise assert as x64: the oracle's n_versions = 3 rides
@@ -1113,7 +1077,7 @@ object StreamQueries {
       FROM strm c LEFT JOIN tr USING (doc_id)
       ORDER BY c.doc_id"""),
     doc = "always-on boilerplate span-trim: frozen window-key model " +
-      "(catalog bucketed table) published once, each tick trims itself " +
+      "(bucketed store) published once, each tick trims itself " +
       "and appends into a doc-bucketed store; union of ticks == " +
       "one-shot batch trim, trimmed text value-replayed from raw text",
     costClass = GraftQuery.FixedLifecycle)
@@ -1296,24 +1260,19 @@ object StreamQueries {
           events.last.ts.getTime + 30L * 24 * 3600 * 1000),
         -1L, "sentinel", 0.0)
       val stream = MemoryStream[Streaming.Event]
-      val name = s"x67_out_${System.nanoTime()}"
-      val q = Streaming.tumblingCounts(stream.toDF(),
-          watermarkDelay = "10 minutes")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
+      val q = drainToMemory("x67", Streaming.tumblingCounts(stream.toDF(),
+          watermarkDelay = "10 minutes"), "append",
         // batch 1: the LATER half — the watermark advances
-        stream.addData(onTime.toSeq); q.processAllAvailable()
+        () => stream.addData(onTime.toSeq),
         // batch 2: the EARLIER half arrives late — closed windows drop
-        stream.addData(early.toSeq); q.processAllAvailable()
+        () => stream.addData(early.toSeq),
         // flush: close every real window (append-mode emission); the
         // sentinel's own window stays open and never reaches the sink
-        stream.addData(Seq(sentinel)); q.processAllAvailable()
-      } finally q.stop()
+        () => stream.addData(Seq(sentinel)))
       val engineDrops = q.recentProgress
         .flatMap(p => Option(p.stateOperators).map(_.toSeq).getOrElse(Nil))
         .map(_.numRowsDroppedByWatermark).sum
-      val out = spark.table(name)
+      val out = spark.table(q.name)
         .select(unix_timestamp(col("win_start")).as("win_start"),
           col("event_type"), col("n_events"), col("sum_value"))
       // coalesce: an empty sink (degenerate empty events table) must give

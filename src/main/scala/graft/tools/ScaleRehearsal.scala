@@ -91,15 +91,12 @@ object ScaleRehearsal {
         .select(col("doc_id"), concat(col("text"), lit(planted)).as("text"))
         .localCheckpoint()
       val refN = n / 10L
-      val table = s"rehearsal_trim_model_${m}_" +
-        ProcessHandle.current().pid()
       // model build is the frozen-reference publish (session-amortized
       // in production) — untimed here; the timed kernel is the per-batch
       // trim, x65's data path
-      Dedup.ensureBoilerplateModel(spark,
-        docs.filter(col("doc_id") < refN), "text", "doc_id", table,
-        minLen = 40)
-      val model = spark.table(table)
+      val model = Dedup.publishBoilerplateWindows(
+        docs.filter(col("doc_id") < refN), "text", "doc_id",
+        graft.engine.Artifacts.table("rehearsal_trim", s"$m"), minLen = 40)
       val stream = docs.filter(col("doc_id") >= refN)
       (n, () => {
         // force the SPLICE, not just the row count: count() alone lets

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation}
@@ -35,12 +36,16 @@ object Bridge {
   /** A parquet DataFrame over `index` with a GIVEN schema — the relation
     * `spark.read.schema(…).parquet(…)` builds, minus its path listing
     * and footer inference. Output columns are `dataSchema` (made
-    * nullable, as every file read is) then `partitionSchema`. */
+    * nullable, as every file read is) then `partitionSchema`. With a
+    * `bucketSpec` the scan reports Spark's hash partitioning on its
+    * bucket columns, so every file name must carry its bucket id (the
+    * `_0000k` suffix `BucketingUtils.getBucketId` parses). */
   def parquetScan(spark: SparkSession, index: FileIndex,
-      partitionSchema: StructType, dataSchema: StructType): DataFrame = {
+      partitionSchema: StructType, dataSchema: StructType,
+      bucketSpec: Option[BucketSpec]): DataFrame = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     session.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
-      dataSchema.asNullable, bucketSpec = None, new ParquetFileFormat,
+      dataSchema.asNullable, bucketSpec, new ParquetFileFormat,
       options = Map.empty)(session))
   }
 }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * process is deleted; live-pid entries, non-graft entries, and entries
   * with no anchored pid are kept. The session-scoped artifact names make
   * publish-if-absent safe but mean nothing ever reuses a dead session's
-  * warehouse tables/tmp roots — without the sweep, disk grows by one
+  * tmp roots — without the sweep, disk grows by one
   * artifact set per session forever (322 MB observed after 14 rounds). */
 class ArtifactsGcSpec extends AnyFunSuite {
 

@@ -53,21 +53,6 @@ class CuratePipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("fused (default) and composed tiers+pack paths are row-identical") {
-    // per-stage observability contract: flipping the flag back to the
-    // two-branch composed plan must not move a single value
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-      r.getAs[Long]("doc_id") -> (r.getAs[Long]("tier"),
-        r.getAs[Long]("pack_id"), r.getAs[Long]("n_tokens"),
-        r.getAs[String]("text_md5"))
-    }.toMap
-    val q = graft.engine.Registry.all.find(_.name == "q88_curate_e2e").get
-    spark.conf.set("spark.graft.curate.fusedTiersPack", "false")
-    val composed = try q.run(spark, sfDir).collect()
-      finally spark.conf.unset("spark.graft.curate.fusedTiersPack")
-    assert(keyed(composed) == keyed(out))
-  }
-
   test("tiers and packs: every curated row gets a valid tier and pack") {
     val curated = out.filter(_.getAs[Long]("doc_id") >= 0)
     assert(curated.nonEmpty)

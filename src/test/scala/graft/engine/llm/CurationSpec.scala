@@ -277,27 +277,25 @@ class CurationSpec extends AnyFunSuite {
     val docs = graft.engine.Tables.documents(spark, graft.SparkTestSession.sfDir)
     val bench = docs.filter(col("doc_id") < 25)
     val batch = docs.filter(col("doc_id") >= 25)
-    val table = s"graft_spec_benchng_${ProcessHandle.current().pid()}"
-    Curation.publishBenchmarkNgrams(bench, "text", table, n = 13)
-    try {
-      val published = spark.table(table)
-      val viaStore = Curation.contaminationBucketed(
-          batch, published, "text", "doc_id", n = 13)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      val viaBroadcast = Curation.contamination(
-          batch, bench, "text", "doc_id", n = 13)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      assert(viaStore == viaBroadcast,
-        "published-table variant must reproduce the broadcast answer")
-      // layout contract: the frozen side contributes no exchange — the
-      // join stage's only shuffle is the ingest batch
-      val joined = Curation.contaminationJoin(
+    val published = Curation.publishBenchmarkNgrams(bench, "text",
+      graft.engine.Artifacts.table("spec_benchng", s"${System.nanoTime()}"),
+      n = 13)
+    val viaStore = Curation.contaminationBucketed(
         batch, published, "text", "doc_id", n = 13)
-      assert(Bucketed.shuffleCount(joined) == 1,
-        "expected exactly the batch-side exchange")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    val viaBroadcast = Curation.contamination(
+        batch, bench, "text", "doc_id", n = 13)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    assert(viaStore == viaBroadcast,
+      "published-store variant must reproduce the broadcast answer")
+    // layout contract: the frozen side contributes no exchange — the
+    // join stage's only shuffle is the ingest batch
+    val joined = Curation.contaminationJoin(
+      batch, published, "text", "doc_id", n = 13)
+    assert(Bucketed.shuffleCount(joined) == 1,
+      "expected exactly the batch-side exchange")
   }
 
   test("shuffleShards: deterministic repartition-stable assignment; " +
@@ -333,21 +331,19 @@ class CurationSpec extends AnyFunSuite {
     }
   }
 
-  test("ensureBenchmarkNgrams: an existing table is NOT re-published " +
-      "(publish-if-absent), an absent one is created") {
-    val table = s"ensure_bench_${System.nanoTime()}"
+  test("publishBenchmarkNgrams publishes once per name") {
+    val table = graft.engine.Artifacts.table("spec_once", s"${System.nanoTime()}")
     val a = Seq((1L, "one two three four five six seven eight nine ten " +
       "eleven twelve thirteen")).toDF("doc_id", "text")
-    Curation.ensureBenchmarkNgrams(spark, a, "text", table, n = 13)
+    Curation.publishBenchmarkNgrams(a, "text", table, n = 13)
     val first = spark.table(table).collect().map(_.getString(0)).toSet
     assert(first.nonEmpty)
-    // a DIFFERENT benchmark frame must be ignored while the table exists
+    // a DIFFERENT benchmark frame must be ignored while the store exists
     val b = Seq((2L, "totally different words in this benchmark doc here " +
       "and more of them again ok")).toDF("doc_id", "text")
-    Curation.ensureBenchmarkNgrams(spark, b, "text", table, n = 13)
+    Curation.publishBenchmarkNgrams(b, "text", table, n = 13)
     assert(spark.table(table).collect().map(_.getString(0)).toSet == first,
-      "existing table must be left untouched (the skip IS the contract)")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+      "existing store must be left untouched (the skip IS the contract)")
   }
 
   test("packFixedSequences: single-shard pinned fixture — exact cuts, " +

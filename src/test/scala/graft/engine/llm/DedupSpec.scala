@@ -81,7 +81,8 @@ class DedupSpec extends AnyFunSuite {
     // disable broadcast so the plan-shape claim is about PARTITIONING, not
     // about the test fixture being broadcast-small
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val table = s"banded_sigs_${System.nanoTime()}"
+    val table = graft.engine.Artifacts.table("spec_banded",
+      s"${System.nanoTime()}")
     try {
       val existing = docs.filter(col("doc_id").isin(0L, 1L, 3L))
       val exSigs = Dedup.minHashSignatures(existing, "text", "doc_id")
@@ -119,10 +120,7 @@ class DedupSpec extends AnyFunSuite {
       // identical answers
       assert(bucketed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
         onTheFly.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
   }
 
   test("simHash: identical docs at hamming 0, near-dups within a few bits") {

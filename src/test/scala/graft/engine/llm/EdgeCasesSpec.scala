@@ -152,11 +152,11 @@ class EdgeCasesSpec extends AnyFunSuite {
   }
 
   test("contaminationBucketed with an empty ingest batch returns no rows") {
-    val table = s"graft_spec_edge_benchng_${ProcessHandle.current().pid()}"
-    Curation.publishBenchmarkNgrams(one, "text", table, n = 13)
-    try assert(Curation.contaminationBucketed(
-      empty, spark.table(table), "text", "doc_id").count() == 0)
-    finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    val bench = Curation.publishBenchmarkNgrams(one, "text",
+      graft.engine.Artifacts.table("spec_edge_benchng", s"${System.nanoTime()}"),
+      n = 13)
+    assert(Curation.contaminationBucketed(
+      empty, bench, "text", "doc_id").count() == 0)
   }
 
   test("bm25 with query terms absent from the corpus returns empty, not NaN") {

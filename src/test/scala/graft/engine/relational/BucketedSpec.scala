@@ -2,17 +2,17 @@ package graft.engine.relational
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 import graft.SparkTestSession.spark
+import graft.engine.sources.SnapshotStore
 
-/** Bucketed/SMB contracts: zero shuffle exchanges on a co-bucketed join,
-  * value equality with the plain join, and the refusals that keep a
+/** Bucketed/SMB contracts: zero shuffle exchanges on a co-bucketed store
+  * join, value equality with the plain join, and the refusals that keep a
   * silently-degraded (re-shuffling) join from masquerading as SMB. */
 class BucketedSpec extends AnyFunSuite {
   import spark.implicits._
 
-  private val pid = ProcessHandle.current().pid()
-  private def tbl(s: String) = s"bucketed_spec_${s}_$pid"
+  private lazy val base = graft.engine.Artifacts.scratch("bucketed_spec")
+  private def store(s: String) = s"$base/$s"
 
   private lazy val facts = (1L to 2000L)
     .map(i => (i % 97, i, (i % 13).toDouble)).toDF("k", "row_id", "v")
@@ -20,9 +20,10 @@ class BucketedSpec extends AnyFunSuite {
     .toDF("k", "grp")
 
   test("co-bucketed join: zero shuffles, same values as the plain join") {
-    Bucketed.publishTable(facts, tbl("facts"), nBuckets = 8, keyCols = Seq("k"))
-    Bucketed.publishTable(dims, tbl("dims"), nBuckets = 8, keyCols = Seq("k"))
-    val joined = Bucketed.smbJoin(spark, tbl("facts"), tbl("dims"), Seq("k"))
+    SnapshotStore.publishBucketed(facts, store("facts"), "k", nBuckets = 8)
+    SnapshotStore.publishBucketed(dims, store("dims"), "k", nBuckets = 8)
+    val joined = Bucketed.smbJoin(spark, store("facts"), store("dims"),
+      Seq("k"))
     assert(Bucketed.shuffleCount(joined) == 0,
       s"SMB join must add no exchange:\n${joined.queryExecution.executedPlan}")
     val smb = joined.groupBy("grp").agg(count(lit(1)).as("n"))
@@ -33,50 +34,43 @@ class BucketedSpec extends AnyFunSuite {
     assert(smb == plain && smb.values.sum == 2000L)
   }
 
-  test("publishTable writes exactly one file per non-empty bucket") {
-    // the pre-write repartition aligns rows to bucketBy's own
-    // pmod(murmur3(keys), n) — one write task per bucket, one file per
-    // bucket, instead of inputPartitions × nBuckets small files
-    Bucketed.publishTable(facts.repartition(7), tbl("layout"),
-      nBuckets = 8, keyCols = Seq("k"))
-    val loc = java.nio.file.Paths.get(new java.net.URI(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl("layout")))
-        .location.toString))
-    val bucketOfFile = "_(\\d{5})\\.".r
-    val bucketIds = {
-      val s = java.nio.file.Files.list(loc)
-      try s.iterator().asScala.map(_.getFileName.toString).toList
-      finally s.close()
-    }.filterNot(_.startsWith(".")) // skip the hidden .crc checksum twins
-      .flatMap(n => bucketOfFile.findFirstMatchIn(n).map(_.group(1)))
-    assert(bucketIds.nonEmpty && bucketIds.size <= 8 &&
-      bucketIds.distinct.size == bucketIds.size,
-      s"expected at most one file per bucket, got $bucketIds")
-    // and the aligned layout still reads back value-complete
-    assert(spark.table(tbl("layout")).count() == 2000L)
+  test("a store holds one file per bucket, named by its bucket") {
+    // the bucket id in each file name is what Spark's bucketed scan
+    // groups files by: it must equal the _bucket dir the file sits in
+    val root = store("layout")
+    SnapshotStore.publishBucketed(facts.repartition(7), root, "k",
+      nBuckets = 8)
+    val files = SnapshotStore.manifestFiles(root, 1L).get
+    val bucketOfFile = "^_bucket=(\\d+)/part-[^.]*_(\\d{5})\\.".r
+    val ids = files.map(f => bucketOfFile.findFirstMatchIn(f)
+      .map(m => (m.group(1).toInt, m.group(2).toInt)))
+    assert(ids.forall(_.exists { case (dir, name) => dir == name }),
+      s"every file must carry its dir's bucket id: $files")
+    assert(ids.flatten.map(_._1).distinct.size == files.size &&
+      files.size <= 8, s"expected at most one file per bucket, got $files")
+    // and the layout still reads back value-complete
+    assert(SnapshotStore.read(spark, root).count() == 2000L)
   }
 
   test("mismatched bucket counts are refused") {
-    Bucketed.publishTable(facts, tbl("f8"), nBuckets = 8, keyCols = Seq("k"))
-    Bucketed.publishTable(dims, tbl("d4"), nBuckets = 4, keyCols = Seq("k"))
+    SnapshotStore.publishBucketed(facts, store("f8"), "k", nBuckets = 8)
+    SnapshotStore.publishBucketed(dims, store("d4"), "k", nBuckets = 4)
     val ex = intercept[IllegalArgumentException] {
-      Bucketed.smbJoin(spark, tbl("f8"), tbl("d4"), Seq("k"))
+      Bucketed.smbJoin(spark, store("f8"), store("d4"), Seq("k"))
     }
     assert(ex.getMessage.contains("re-shuffle"))
   }
 
   test("joining on non-bucket keys or unbucketed tables is refused") {
-    Bucketed.publishTable(facts, tbl("fk"), nBuckets = 4, keyCols = Seq("k"))
-    Bucketed.publishTable(dims, tbl("dk"), nBuckets = 4, keyCols = Seq("k"))
+    SnapshotStore.publishBucketed(facts, store("fk"), "k", nBuckets = 4)
+    SnapshotStore.publishBucketed(dims, store("dk"), "k", nBuckets = 4)
     val keyMismatch = intercept[IllegalArgumentException] {
-      Bucketed.smbJoin(spark, tbl("fk"), tbl("dk"), Seq("row_id"))
+      Bucketed.smbJoin(spark, store("fk"), store("dk"), Seq("row_id"))
     }
     assert(keyMismatch.getMessage.contains("co-location"))
-    dims.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .saveAsTable(tbl("flat"))
+    SnapshotStore.publish(dims, store("flat"))
     val unbucketed = intercept[IllegalArgumentException] {
-      Bucketed.smbJoin(spark, tbl("fk"), tbl("flat"), Seq("k"))
+      Bucketed.smbJoin(spark, store("fk"), store("flat"), Seq("k"))
     }
     assert(unbucketed.getMessage.contains("not bucketed"))
   }

@@ -2,10 +2,17 @@ package graft.engine.sources
 
 import java.nio.file.Paths
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession.spark
-import graft.tools.PlanAudit
+import graft.engine.relational.Bucketed
+import graft.tools.{PlanAudit, PlanCaptureUtil}
 import graft.tools.SparkEvents.jobsDuring
 
 /** Store reads are planned from the version's own metadata: the
@@ -13,7 +20,9 @@ import graft.tools.SparkEvents.jobsDuring
   * building a read's DataFrame starts no Spark job (no listing job, no
   * footer job), evolved versions serve their recorded union schema,
   * an empty version is the empty answer, and a point lookup's scan
-  * lists only the buckets its keys hash to. */
+  * lists only the buckets its keys hash to. A bucketed version scans
+  * bucketed where a join on its key benefits, and at its file-split
+  * width everywhere else. */
 class StoreScanSpec extends AnyFunSuite {
   import spark.implicits._
 
@@ -27,6 +36,13 @@ class StoreScanSpec extends AnyFunSuite {
 
   private def docs(lo: Long, hi: Long) =
     (lo until hi).map(i => (i, s"t$i", i.toDouble)).toDF("k", "text", "score")
+
+  /** Every node of an AQE-expanded physical plan. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case _ => p +: p.children.flatMap(nodes)
+  }
 
   test("read, readSince and readBox start no job before their action " +
       "on versions holding more than 32 files") {
@@ -116,5 +132,66 @@ class StoreScanSpec extends AnyFunSuite {
     assert(want.nonEmpty && want.size < 16)
     assert(listed.map(_.split('/').takeRight(2).mkString("/")).sorted ==
       want.sorted)
+  }
+
+  test("a global aggregate over a read keeps the file-split scan width") {
+    // three files per bucket: a bucketed scan would run 16 tasks, the
+    // plain file-split scan packs the 48 small files into fewer
+    val r = root()
+    SnapshotStore.publishBucketed(docs(0, 400), r, "k", nBuckets = 16)
+    SnapshotStore.append(docs(400, 800), r)
+    SnapshotStore.append(docs(800, 1200), r)
+    val agg = SnapshotStore.read(spark, r).agg(count(lit(1)), sum("score"))
+    assert(agg.head().getLong(0) == 1200L)
+    val scans = PlanAudit.storeScans(agg.queryExecution.executedPlan, r)
+    assert(scans.size == 1 && !scans.head.bucketedScan,
+      "no operator benefits from the buckets: autoBucketedScan drops them")
+    val dir = s"$r/v${SnapshotStore.currentVersion(r)}"
+    val plain = spark.read.parquet(dir).agg(count(lit(1)))
+    plain.collect()
+    def width(p: SparkPlan) = nodes(p).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.inputRDDs().head.getNumPartitions
+    }
+    assert(width(agg.queryExecution.executedPlan) ==
+      width(plain.queryExecution.executedPlan))
+    assert(width(agg.queryExecution.executedPlan) != Seq(16))
+  }
+
+  test("a key join of two co-bucketed stores plans no exchange") {
+    val (a, b) = (root(), root())
+    SnapshotStore.publishBucketed(docs(0, 400), a, "k", nBuckets = 16)
+    SnapshotStore.publishBucketed(docs(200, 600), b, "k", nBuckets = 16)
+    val joined = SnapshotStore.read(spark, a).drop("_bucket").hint("merge")
+      .join(SnapshotStore.read(spark, b).drop("_bucket")
+        .select(col("k"), col("score").as("score_b")), Seq("k"))
+    assert(joined.count() == 200L)
+    val plan = joined.queryExecution.executedPlan
+    assert(nodes(plan).exists(_.isInstanceOf[SortMergeJoinExec]))
+    assert(Bucketed.shuffleCount(joined) == 0, s"exchange in:\n$plan")
+    assert(PlanAudit.storeScans(plan, a).forall(_.bucketedScan) &&
+      PlanAudit.storeScans(plan, b).forall(_.bucketedScan))
+  }
+
+  test("merge's anti-join reads the store side with no exchange") {
+    val r = root()
+    SnapshotStore.publishBucketed(docs(0, 400), r, "k", nBuckets = 16)
+    // no broadcast: a broadcast batch would hide the store side's layout
+    val (_, captured) = PlanCaptureUtil.capturing(spark) {
+      graft.engine.GraftSession.withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        SnapshotStore.merge(docs(390, 420), r)
+      }
+    }
+    val storeSides = captured.flatMap { case (_, qe) =>
+      nodes(qe.executedPlan).collect { case j: BaseJoinExec =>
+        Seq(j.left, j.right).filter(PlanAudit.storeScans(_, r).nonEmpty)
+      }.flatten
+    }
+    assert(storeSides.nonEmpty, "the merge's anti-join was not captured")
+    storeSides.foreach(side => assert(
+      !nodes(side).exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"the store side of merge's join is shuffled:\n$side"))
+    assert(SnapshotStore.read(spark, r).count() == 420L)
   }
 }

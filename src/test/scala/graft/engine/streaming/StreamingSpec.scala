@@ -417,7 +417,8 @@ class StreamingSpec extends AnyFunSuite {
       "neither is this {")
     val history = Seq((100L, "history doc text h1")).toDF("doc_id", "text")
     val exSigs = Dedup.minHashSignatures(history, "text", "doc_id")
-    val bandTable = s"curation_spec_bands_${System.nanoTime()}"
+    val bandTable = graft.engine.Artifacts.table("spec_bands",
+      s"${System.nanoTime()}")
     Dedup.publishBandedSignatures(exSigs, bandTable, numBuckets = 4)
     val exKeys = history.select(col("doc_id").as("id_ex"),
       Dedup.contentKey(col("text")).as("ck_ex"))
@@ -473,7 +474,8 @@ class StreamingSpec extends AnyFunSuite {
       s"""{"doc_id":$i,"text":"tick three doc $i"}"""): _*)
     val history = Seq((100L, "unrelated history doc")).toDF("doc_id", "text")
     val exSigs = Dedup.minHashSignatures(history, "text", "doc_id")
-    val bandTable = s"curation_compact_bands_${System.nanoTime()}"
+    val bandTable = graft.engine.Artifacts.table("spec_compact_bands",
+      s"${System.nanoTime()}")
     Dedup.publishBandedSignatures(exSigs, bandTable, numBuckets = 4)
     val exKeys = history.select(col("doc_id").as("id_ex"),
       Dedup.contentKey(col("text")).as("ck_ex"))
@@ -534,7 +536,8 @@ class StreamingSpec extends AnyFunSuite {
         java.nio.charset.StandardCharsets.UTF_8)
     val history = Seq((100L, "history doc text h1")).toDF("doc_id", "text")
     val exSigs = Dedup.minHashSignatures(history, "text", "doc_id")
-    val bandTable = s"curation_restart_bands_${System.nanoTime()}"
+    val bandTable = graft.engine.Artifacts.table("spec_restart_bands",
+      s"${System.nanoTime()}")
     Dedup.publishBandedSignatures(exSigs, bandTable, numBuckets = 4)
     val exKeys = history.select(col("doc_id").as("id_ex"),
       Dedup.contentKey(col("text")).as("ck_ex"))

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Artifacts` (whose dead-session GC parses that format back), and a
   * versioned store's files become a DataFrame only through
   * `SnapshotStore.scanFiles` (manifest-planned, recorded schema) — the
-  * store sources hold no DataFrameReader at all — and a bucketed store
-  * write's task width is set only in `SnapshotStore.writeBuckets`.
-  * File reads only, no Spark. */
+  * store sources hold no DataFrameReader at all — a bucketed store
+  * write's task width is set only in `SnapshotStore.writeBuckets`, and
+  * the store is the only bucketed layout: nothing writes a catalog
+  * table. File reads only, no Spark. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val mainSources: Seq[Path] = {
@@ -48,6 +49,12 @@ class SourceGuardSpec extends AnyFunSuite {
           line.contains("/graft_mlscored/")))
     assert(found.isEmpty, "build scratch dirs with graft.engine.Artifacts." +
       "scratch: " + found.mkString(", "))
+  }
+
+  test("no saveAsTable or bucketBy: bucketed data is a store") {
+    val found = hits(raw"\.\s*(saveAsTable|bucketBy)\s*\(", (_, _) => false)
+    assert(found.isEmpty, "publish bucketed data with SnapshotStore." +
+      "publishBucketed or Artifacts.publishView: " + found.mkString(", "))
   }
 
   test("the store sources hold no DataFrameReader") {

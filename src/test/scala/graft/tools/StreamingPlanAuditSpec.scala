@@ -130,7 +130,8 @@ class StreamingPlanAuditSpec extends AnyFunSuite {
       """{"doc_id":4,"text":"first tick doc one"}""") // published-dup: anti-join must drop
     val history = Seq((100L, "history doc text h1")).toDF("doc_id", "text")
     val exSigs = Dedup.minHashSignatures(history, "text", "doc_id")
-    val bandTable = s"audit_curation_bands_${System.nanoTime()}"
+    val bandTable = graft.engine.Artifacts.table("audit_curation_bands",
+      s"${System.nanoTime()}")
     Dedup.publishBandedSignatures(exSigs, bandTable, numBuckets = 4)
     val exKeys = history.select(col("doc_id").as("id_ex"),
       Dedup.contentKey(col("text")).as("ck_ex"))
@@ -185,7 +186,8 @@ class StreamingPlanAuditSpec extends AnyFunSuite {
       (3L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu"),
       (4L, "totally fresh words appear here nothing benchmark related at all today ok fine")
     ).toDF("doc_id", "text")
-    val table = s"audit_decon_bench_${System.nanoTime()}"
+    val table = graft.engine.Artifacts.table("audit_decon_bench",
+      s"${System.nanoTime()}")
     Curation.publishBenchmarkNgrams(docs.filter(col("doc_id") === 1L),
       "text", table, n = 13)
     // two one-file ticks of the "ingest"
@@ -246,7 +248,6 @@ class StreamingPlanAuditSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(flags(3L) == 1.0 && flags(2L) == 0.0 && flags(4L) == 0.0,
       s"per-tick contamination values drifted: $flags")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("x65-shaped streaming span-trim: every per-tick plan scans the " +
@@ -267,7 +268,8 @@ class StreamingPlanAuditSpec extends AnyFunSuite {
       (3L, bp + "C streamed doc first with its own suffix here"),
       (4L, "clean streamed doc with no boilerplate at all in it ok")
     ).toDF("doc_id", "text")
-    val table = s"audit_trim_model_${System.nanoTime()}"
+    val table = graft.engine.Artifacts.table("audit_trim_model",
+      s"${System.nanoTime()}")
     Dedup.publishBoilerplateWindows(docs.filter(col("doc_id") <= 2L),
       "text", "doc_id", table, minLen = 40)
     // two one-file ticks
@@ -331,6 +333,5 @@ class StreamingPlanAuditSpec extends AnyFunSuite {
     assert(trims(4L)._2 == 0L &&
       trims(4L)._1 == "clean streamed doc with no boilerplate at all in it ok",
       s"doc 4 must pass through untouched: ${trims(4L)}")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }
